@@ -64,9 +64,9 @@ def test_priority_window_is_exactly_50_and_short_keys_unique():
 )
 def test_priority_window_is_import_order_independent(first_import):
     """Operator modules OUTSIDE the queries package register queries too;
-    when one of them was a process's FIRST import, the old
-    queries.registry location made queries/__init__'s circular
-    ``from operators import <mod>`` return the partially-initialized
+    when one of them was a process's FIRST import, the registry's old
+    home inside the queries package (since removed) made queries/__init__'s
+    circular ``from operators import <mod>`` return the partially-initialized
     module, so the first-50 reorder ran BEFORE that module's
     registrations — silently dropping its entries from the driver
     window. Pin, in a fresh interpreter per adversarial first-import,

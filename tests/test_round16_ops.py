@@ -68,11 +68,13 @@ def test_pq_dtab_driver_matches_spark_job(spark):
 
     from tests.conftest import SF_MED
 
+    trained = 0
     for sf_dir in (SF_SMALL, SF_MED):
         reg.reset_train_caches()
         v, cbf, dtab = advanced_ops._pq_train(spark, sf_dir)
         if cbf is None:
             continue
+        trained += 1
         dt_rows = [
             (int(q), s, [float(x) for x in qe], int(j), cbf[(s, j)])
             for (q, s, j), _ in dtab.items()
@@ -108,6 +110,7 @@ def test_pq_dtab_driver_matches_spark_job(spark):
             ).collect()
         }
         assert spark_vals == dtab  # bit-exact, both SFs
+    assert trained, "no SF produced a PQ codebook: the pin compared nothing"
 
 
 def test_all_train_memos_registered():

@@ -18,6 +18,11 @@ Design mapping (SURVEY.md §2A):
 - Laziness: building the reader/partitions touches only coordinate arrays;
   data-variable bytes are first read inside executor ``read()`` calls
   (reference property: tests/test_reader.py:71-305).
+- Task payload: pyspark pickles the data source and reader into every
+  task. Both pickle without planning state or grid data, and an in-memory
+  registration's partition carries only its own block (a numpy view at
+  planning; the pickle copies just the block), so a task's payload is its
+  block plus O(1). ``zipguard`` removes the other fixed per-call cost.
 
 Observability: pass ``read_log_dir`` to record one JSON file per partition
 read with the block slices + materialized columns — the cross-process
@@ -49,14 +54,22 @@ from xarray_sql_spark import chunks as chunklib
 from xarray_sql_spark import pivot
 from xarray_sql_spark.bounds import block_may_match, dim_bounds
 from xarray_sql_spark.dataset import Dataset
+from xarray_sql_spark.sources import zipguard
+
+zipguard.install()
 
 FORMAT_NAME = "xgrid"
 
 
 class GridPartition(InputPartition):
-    def __init__(self, index: int, block: dict[str, tuple[int, int]]):
+    def __init__(
+        self, index: int, block: dict[str, tuple[int, int]], arrays: dict | None = None
+    ):
         self.index = index
         self.block = block  # dim -> (start, stop)
+        # In-memory registrations: var -> this block's data (a numpy view,
+        # or a lazy variable read inside the task). None: read the store.
+        self.arrays = arrays
 
 
 def _grid_coords(ds: Dataset, dims) -> dict[str, "np.ndarray"]:
@@ -124,6 +137,12 @@ class GridDataSource(DataSource):
             raise ValueError("xgrid requires .option('payload', <path to payload pickle>)")
         self._payload = None
 
+    def __getstate__(self):
+        # pyspark's read closure captures the data source as well as the
+        # reader: ship the payload path, never the loaded payload (an
+        # in-memory registration's whole grid).
+        return {**self.__dict__, "_payload": None}
+
     @classmethod
     def name(cls) -> str:
         return FORMAT_NAME
@@ -149,11 +168,9 @@ class GridReader(DataSourceReader):
     def __init__(self, payload: dict, schema: StructType):
         self.store_path: str | None = payload.get("store")
         self.dataset: Dataset | None = payload.get("dataset")
-        self.chunks: dict | None = payload.get("chunks")
         self.batch_size: int = payload.get("batch_size", pivot.DEFAULT_BATCH_SIZE)
         self.read_log_dir: str | None = payload.get("read_log_dir")
         self.dims: tuple[str, ...] = tuple(payload["dims"])
-        self.var_names: list[str] = list(payload["var_names"])
         self.arrow_schema: pa.Schema = payload["arrow_schema"]
         # Full dims+vars schema used for pivot synthesis even when the table
         # schema is projection-pruned (some dims may be absent from it).
@@ -162,39 +179,41 @@ class GridReader(DataSourceReader):
         # schema; intersecting with var_names yields the columns to
         # materialize (A3).
         self.read_columns = [f.name for f in schema.fields]
+        self.read_vars = [v for v in payload["var_names"] if v in self.read_columns]
         # String-dim pruning is sound only under binary collation; the
         # registration layer captures the session default (bounds.py doc)
         self.prune_strings: bool = bool(payload.get("binary_collation", True))
         self._filters: list[Filter] = []
         # Driver-side, coordinate-only work: block grid + bounds (A6/A7).
-        ds = self._open()
-        self.sizes = ds.sizes
+        ds = self.dataset if self.dataset is not None else Dataset.open_store(self.store_path)
+        sizes = ds.sizes
+        chunks = payload.get("chunks")
         self.coords = _grid_coords(ds, self.dims)
-        chunked_dims = {
-            d: c for d, c in (self.chunks or {}).items() if d in self.sizes and c < self.sizes[d]
-        }
-        self.static_bounds = dim_bounds(
-            self.coords,
-            {d: slice(0, self.sizes[d]) for d in self.dims if d not in chunked_dims},
+        chunked_dims = {d: c for d, c in (chunks or {}).items() if d in sizes and c < sizes[d]}
+        static_bounds = dim_bounds(
+            self.coords, {d: slice(0, sizes[d]) for d in self.dims if d not in chunked_dims}
         )
-        self._blocks = list(
-            chunklib.block_slices({d: self.sizes[d] for d in self.dims}, self.chunks)
-        )
+        self._blocks = list(chunklib.block_slices({d: sizes[d] for d in self.dims}, chunks))
         # Per-block bounds over CHUNKED dims only — the static (unchunked)
         # bounds are computed once above; recomputing them per block would
         # make reader construction O(#blocks x unchunked dim length).
         self._bounds = [
             {
-                **self.static_bounds,
+                **static_bounds,
                 **dim_bounds(self.coords, {d: sl for d, sl in b.items() if d in chunked_dims}),
             }
             for b in self._blocks
         ]
 
-    def _open(self) -> Dataset:
-        if self.dataset is not None:
-            return self.dataset
-        return Dataset.open_store(self.store_path)
+    def __getstate__(self):
+        # pyspark pickles the reader into the planner's answer and every
+        # task: leave out the planning state and the in-memory grid (each
+        # partition carries its own block), so the payload is O(1) in the
+        # grid's data size.
+        planner_only = ("_blocks", "_bounds", "_filters")
+        state = {k: v for k, v in self.__dict__.items() if k not in planner_only}
+        state["dataset"] = None
+        return state
 
     # -- pruning (A2) ------------------------------------------------------
     def pushFilters(self, filters: list[Filter]) -> Iterator[Filter]:
@@ -208,12 +227,26 @@ class GridReader(DataSourceReader):
         for i, (block, bounds) in enumerate(zip(self._blocks, self._bounds)):
             if block_may_match(bounds, self._filters, self.prune_strings):
                 parts.append(
-                    GridPartition(i, {d: (s.start, s.stop) for d, s in block.items()})
+                    GridPartition(
+                        i, {d: (s.start, s.stop) for d, s in block.items()}, self._inline(block)
+                    )
                 )
         if not parts:
             # Spark requires >=1 partition; emit an empty sentinel block.
             parts = [GridPartition(-1, {d: (0, 0) for d in self.dims})]
         return parts
+
+    def _inline(self, block: dict) -> dict | None:
+        """An in-memory registration's data over ``block``: numpy data as
+        views (pickling copies just the block), lazy variables as they are."""
+        if self.dataset is None:
+            return None
+        data_vars = self.dataset.data_vars
+        return {
+            n: _var_block(data_vars[n], block) if isinstance(data_vars[n].data, np.ndarray)
+            else data_vars[n]
+            for n in self.read_vars
+        }
 
     # -- execution (A1/A3/A5) ---------------------------------------------
     def read(self, partition: GridPartition) -> Iterator[pa.RecordBatch]:
@@ -223,18 +256,24 @@ class GridReader(DataSourceReader):
                 "partition": partition.index,
                 "block": {d: [s.start, s.stop] for d, s in block.items()},
                 "columns": list(self.read_columns),
-                "vars_read": [v for v in self.var_names if v in self.read_columns],
+                "vars_read": self.read_vars,
             }
             fname = f"read_{partition.index}_{uuid.uuid4().hex}.json"
             with open(os.path.join(self.read_log_dir, fname), "w") as f:
                 json.dump(rec, f)
         if partition.index < 0:
             return iter(())
+        source = partition.arrays
+        if source is None:
+            source = Dataset.open_store(self.store_path).data_vars
+        arrays = {
+            n: source[n] if isinstance(source[n], np.ndarray) else _var_block(source[n], block)
+            for n in self.read_vars
+        }
         return _block_batches(
-            self._open(),
+            arrays,
             self.coords,
             self.dims,
-            self.var_names,
             self.read_columns,
             self.arrow_schema,
             self.pivot_schema,
@@ -243,35 +282,34 @@ class GridReader(DataSourceReader):
         )
 
 
+def _var_block(var, block: dict) -> np.ndarray:
+    """``var``'s data over ``block`` (dim -> slice)."""
+    return var.read_block(tuple(block[d] for d in var.dims))
+
+
 def _block_batches(
-    ds: Dataset,
+    block_arrays: dict,
     coords: dict,
     dims: tuple,
-    var_names: list,
     read_columns: list,
     arrow_schema: pa.Schema,
     pivot_schema: pa.Schema,
     block: dict,
     batch_size: int,
 ) -> Iterator[pa.RecordBatch]:
-    """One partition block -> Arrow batches, shared by the batch and
-    streaming readers so projection/reorder compensation stays in sync.
+    """One partition block's arrays (var -> ndarray, in output order) ->
+    Arrow batches, shared by the batch and streaming readers so
+    projection/reorder compensation stays in sync.
 
     Pivot synthesis needs every dim; when Spark's read schema prunes or
     reorders columns, pivot over the full dims+vars schema and project
     each batch down to the requested column order.
     """
-    wanted_vars = [v for v in var_names if v in read_columns]
+    wanted_vars = list(block_arrays)
     out_schema = pa.schema(
         [arrow_schema.field(n) for n in read_columns if n in arrow_schema.names]
     )
     block_coords = {d: coords[d][block[d]] for d in dims}
-    block_arrays = {
-        name: ds.data_vars[name].read_block(
-            tuple(block[d] for d in ds.data_vars[name].dims)
-        )
-        for name in wanted_vars
-    }
     out_dims = tuple(d for d in dims if d in read_columns)
     if set(out_dims) != set(dims) or list(out_schema.names) != list(dims) + wanted_vars:
         full_schema = pa.schema(
@@ -376,10 +414,10 @@ class GridStreamReader(DataSourceStreamReader):
         self.chunks: dict | None = payload.get("chunks")
         self.batch_size: int = payload.get("batch_size", pivot.DEFAULT_BATCH_SIZE)
         self.dims: tuple[str, ...] = tuple(payload["dims"])
-        self.var_names: list[str] = list(payload["var_names"])
         self.arrow_schema: pa.Schema = payload["arrow_schema"]
         self.pivot_schema: pa.Schema = payload.get("pivot_schema", payload["arrow_schema"])
         self.read_columns = [f.name for f in schema.fields]
+        self.read_vars = [v for v in payload["var_names"] if v in self.read_columns]
         self.append_dim: str = payload.get("append_dim") or (
             "time" if "time" in self.dims else self.dims[0]
         )
@@ -451,12 +489,10 @@ class GridStreamReader(DataSourceStreamReader):
             return
         block = {d: slice(a, b) for d, (a, b) in partition.block.items()}
         ds = Dataset.open_store(self.store_path)
-        coords = _grid_coords(ds, self.dims)
         yield from _block_batches(
-            ds,
-            coords,
+            {n: _var_block(ds.data_vars[n], block) for n in self.read_vars},
+            _grid_coords(ds, self.dims),
             self.dims,
-            self.var_names,
             self.read_columns,
             self.arrow_schema,
             self.pivot_schema,
