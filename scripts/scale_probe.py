@@ -105,6 +105,8 @@ DST = "/tmp/xss_sf1_synth"
 COPIES = 10
 # every table the probe queries touch
 TABLES = ("lineitem", "embeddings", "documents", "orders", "events")
+# joined, never scanned at data scale: copied verbatim (see build_replica)
+DIM_TABLES = ("region", "nation", "customer", "supplier", "part")
 ID_COLS = {"lineitem": ["l_orderkey"], "embeddings": ["vec_id"],
            "documents": ["doc_id"], "orders": ["o_orderkey"],
            "events": ["event_id", "user_id"]}
@@ -138,7 +140,9 @@ def build_replica(
     if cached != params:
         import shutil
 
-        for name in tables:
+        # dims too: they are copied only when absent, so a replica rebuilt
+        # from another src would otherwise join against the old src's dims
+        for name in tables + DIM_TABLES:
             stale = os.path.join(dst_dir, f"{name}.parquet")
             if os.path.isdir(stale):
                 shutil.rmtree(stale)
@@ -202,7 +206,7 @@ def build_replica(
     # far slower than facts in any real warehouse.
     import shutil
 
-    for name in ("region", "nation", "customer", "supplier", "part"):
+    for name in DIM_TABLES:
         src_p = os.path.join(src, f"{name}.parquet")
         dst_p = os.path.join(dst_dir, f"{name}.parquet")
         if os.path.exists(src_p) and not os.path.exists(dst_p):

@@ -1,4 +1,4 @@
-"""Distributed Zarr v2 sink: executors write chunk files in parallel.
+"""Distributed Zarr sink: executors write chunk (or shard) files in parallel.
 
 ``XarrayDataFrame.to_zarr`` materializes the result on the driver first —
 right for small grids (and what the reference's eager reverse pivot does),
@@ -6,27 +6,33 @@ wrong at scale. This sink keeps the data on executors end to end:
 
 1. coordinates are the only thing collected (one ``distinct`` per dim —
    axes are small by construction);
-2. every row gets its chunk index via a broadcast position join, rows
-   shuffle ONCE on the chunk key;
-3. each chunk-key group scatter-fills its dense block and writes the chunk
-   file directly from the executor (``applyInPandas``);
-4. the driver writes only metadata (``.zarray``/``.zattrs``/``.zmetadata``)
-   and the coordinate arrays.
+2. the driver builds every array's metadata up front (a codec with no
+   spelling in the chosen format fails before any job runs);
+3. every row gets its chunk — or, with ``shards``, its shard — index via a
+   broadcast position join, and rows shuffle ONCE on that key;
+4. each key group scatter-fills its dense block and writes the file
+   directly from the executor (``applyInPandas``);
+5. the driver writes the coordinate arrays, then the metadata LAST
+   (``.zarray``/``.zattrs``/``.zmetadata`` for v2, ``zarr.json`` with
+   inline consolidated metadata for v3): a reader that can open the group
+   finds every chunk it names.
 
-The output is a plain public-spec Zarr v2 group readable by
-``zarr_store.open_zarr`` (and any Zarr client). ``path`` must be storage
-every executor can reach (shared FS / object store on a cluster; the local
-FS here). Chunk writes are idempotent (a retry rewrites the same bytes)
-AND atomic (attempt-unique temp file + rename), so task retries and
-speculative twin attempts are both safe — two concurrent truncate-in-place
-writers of even identical bytes could race a kill into a short file. Cells absent from the result stay
-at ``fill_value`` (sparse chunks: all-missing chunks are never written);
-duplicate (dims) rows are last-writer-wins, same as the eager scatter.
+The output is a plain public-spec Zarr v2 or v3 group (v3 optionally
+``sharding_indexed``: few big files, sub-shard range reads) readable by
+``zarr_store.open_zarr`` and any Zarr client. The on-disk format is owned
+by :mod:`xarray_sql_spark.zarr_store`: this module builds metadata with
+``array_meta``, encodes through ``ZarrArray.write_chunk`` and commits with
+``write_group``. ``path`` must be storage every executor can reach (shared
+FS / object store on a cluster; the local FS here). Chunk writes are
+idempotent (a retry rewrites the same bytes) AND atomic (attempt-unique
+temp file + rename), so task retries and speculative twin attempts are
+both safe. Cells absent from the result stay at ``fill_value`` (sparse
+chunks: all-missing chunks are never written); duplicate (dims) rows are
+last-writer-wins, same as the eager scatter.
 """
 
 from __future__ import annotations
 
-import json
 import os
 from collections.abc import Mapping, Sequence
 
@@ -36,14 +42,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from xarray_sql_spark.zarr_store import (
-    _ARRAY_DIMENSIONS,
-    _compress,
-    _vlen_encode,
-    v2_array_meta,
-    v3_array_meta,
-    v3_codec_chain,
-)
+from xarray_sql_spark.zarr_store import ZarrArray, array_meta, chunk_grid, write_group
 
 _SPARK_TO_NP = {
     "double": "<f8",
@@ -96,6 +95,78 @@ def _collect_axes(
             tbl.column(0).to_pandas().to_numpy().astype(dim_dtypes[d])
         )
     return coords
+
+
+def _with_key_index(
+    df: DataFrame, axes: Mapping[str, tuple[np.ndarray, int]], key_chunks: tuple[int, ...]
+) -> DataFrame:
+    """``df`` plus, per dim ``d``, the row's position on the axis
+    (``__pos_d``) and its key index on the ``key_chunks`` grid
+    (``__ck_d``), by a broadcast join against the axis values (small);
+    ``axes`` maps dim -> (values, position of the first value). Rows whose
+    dim value is not on the axis drop out."""
+    spark = df.sparkSession
+    for (d, (values, start)), k in zip(axes.items(), key_chunks):
+        pos = pd.DataFrame({d: values, f"__pos_{d}": np.arange(start, start + len(values), dtype=np.int64)})
+        df = df.join(F.broadcast(spark.createDataFrame(pos)), d)
+        df = df.withColumn(f"__ck_{d}", F.expr(f"__pos_{d} div {k}").cast("int"))
+    return df
+
+
+def _scatter_write(
+    work: DataFrame, dims: Sequence[str], arrays: Mapping[str, ZarrArray], key_of, writer: str
+) -> dict[str, int]:
+    """Shuffle ``work`` (from :func:`_with_key_index`) once on its key
+    index; the executor holding a key's rows scatter-fills that key's
+    dense block of every array in ``arrays`` (column name -> target) and
+    writes it through ``ZarrArray.write_chunk``. Cells without a row — and
+    float/string NULLs — hold the array's fill_value, so a cell missing
+    inside a written chunk reads back like one in a never-written chunk.
+    Returns {key_of(index): rows}."""
+    dlist = list(dims)
+    key_chunks = next(iter(arrays.values())).key_chunks
+
+    def _write_chunk(pdf: pd.DataFrame) -> pd.DataFrame:
+        idx = tuple(int(pdf[f"__ck_{d}"].iloc[0]) for d in dlist)
+        locs = tuple(
+            pdf[f"__pos_{d}"].to_numpy(dtype=np.int64) - i * k
+            for d, i, k in zip(dlist, idx, key_chunks)
+        )
+        for v, za in arrays.items():
+            dt, fill = za.dtype, za.fill_value
+            # an int/bool dtype has no missing sentinel — fail with the
+            # column name instead of an opaque astype cast error
+            if dt.kind in "iub" and pdf[v].isna().any():
+                raise ValueError(
+                    f"{writer}: column {v!r} maps to non-nullable dtype {dt} "
+                    f"but contains NULLs; fill or cast it to a float/timestamp "
+                    f"type before writing"
+                )
+            vals = pdf[v].to_numpy()
+            if dt.kind == "O":
+                vals = np.array([fill if x is None else str(x) for x in vals], dtype=object)
+            elif dt.kind == "f":
+                # coercion yields NaN for NULL; map those cells to the
+                # fill_value so a non-NaN fill (0, -9999) reads back as
+                # "absent", not as a spurious NaN
+                vals = pd.to_numeric(pdf[v], errors="coerce").to_numpy()
+                if not np.isnan(fill):
+                    vals = np.where(np.isnan(vals), fill, vals)
+            block = np.full(key_chunks, fill, dtype=dt)
+            block[locs] = vals.astype(dt)
+            za.write_chunk(idx, block)
+        return pd.DataFrame({"chunk": [key_of(idx)], "n": [len(pdf)]})
+
+    stats = (
+        work.groupBy(*[f"__ck_{d}" for d in dlist])
+        .applyInPandas(_write_chunk, "chunk string, n long")
+        .collect()
+    )
+    return {r["chunk"]: r["n"] for r in stats}
+
+
+def _dotted_key(idx: tuple[int, ...]) -> str:
+    return ".".join(str(i) for i in idx)
 
 
 def rechunk_zarr(
@@ -276,7 +347,6 @@ def write_zarr_region(
             )
         bounds[d] = (start, stop)
 
-    spark = df.sparkSession
     total = None
     if validate:
         # eager materialization FIRST: if df reads the same store it is
@@ -286,80 +356,15 @@ def write_zarr_region(
         total = df.count()
 
     # position join against the store's own coordinate slice (raw domain)
-    work = df
-    for ax, d in enumerate(dims):
-        start, stop = bounds[d]
-        pos_pdf = pd.DataFrame({
-            d: np.asarray(ds.coords[d][start:stop]),
-            f"__pos_{d}": np.arange(start, stop, dtype=np.int64),
-        })
-        work = work.join(F.broadcast(spark.createDataFrame(pos_pdf)), d)
-        work = work.withColumn(
-            f"__ck_{d}", F.expr(f"__pos_{d} div {ref.chunks[ax]}").cast("int")
-        )
-
-    dlist, vlist = list(dims), list(var_cols)
-    metas = {v: arrays[v] for v in vlist}
-
-    def _write_chunk(pdf: pd.DataFrame) -> pd.DataFrame:
-        idx = tuple(int(pdf[f"__ck_{d}"].iloc[0]) for d in dlist)
-        for v in vlist:
-            za = metas[v]
-            locs = tuple(
-                pdf[f"__pos_{d}"].to_numpy(dtype=np.int64) - i * c
-                for d, i, c in zip(dlist, idx, za.chunks)
-            )
-            dt = za._storage_dtype
-            block = np.full(za.chunks, za.fill_value, dtype=dt)
-            if dt.kind in "iub" and pdf[v].isna().any():
-                raise ValueError(
-                    f"write_zarr_region: column {v!r} maps to non-nullable "
-                    f"dtype {dt} but contains NULLs"
-                )
-            vals = pdf[v].to_numpy()
-            if dt.kind == "O":
-                vals = np.array(
-                    [za.fill_value if x is None else str(x) for x in vals],
-                    dtype=object,
-                )
-                block[locs] = vals
-                raw = _vlen_encode(block)
-                ts = 1
-            else:
-                if dt.kind == "f":  # NULL -> fill (matches absent cells)
-                    vals = pd.to_numeric(pdf[v], errors="coerce").to_numpy()
-                    # coercion yields NaN for NULL; map those cells to the
-                    # store's fill_value so a non-NaN fill (0, -9999) reads
-                    # back as "absent", not as a spurious NaN (r7 ADVICE)
-                    fv = za.fill_value
-                    if fv is not None and not (
-                        isinstance(fv, float) and np.isnan(fv)
-                    ):
-                        vals = np.where(np.isnan(vals), fv, vals)
-                block[locs] = vals.astype(dt)
-                raw = np.ascontiguousarray(block).tobytes()
-                ts = dt.itemsize
-            fname = za._chunk_file(idx)
-            os.makedirs(os.path.dirname(fname), exist_ok=True)
-            # atomic-by-replacement: never truncate the live chunk — a
-            # concurrent reader (or a crash mid-write, or a speculative
-            # twin attempt) must see either the complete old bytes or the
-            # complete new bytes
-            import uuid as _uuid
-
-            tmp = f"{fname}.__tmp_{_uuid.uuid4().hex}"
-            with open(tmp, "wb") as f:
-                f.write(_compress(raw, za.compressor, ts))
-            os.replace(tmp, fname)
-        key = ".".join(str(i) for i in idx)
-        return pd.DataFrame({"chunk": [key], "n": [len(pdf)]})
-
-    stats = (
-        work.groupBy(*[f"__ck_{d}" for d in dims])
-        .applyInPandas(_write_chunk, "chunk string, n long")
-        .collect()
+    work = _with_key_index(
+        df,
+        {d: (np.asarray(ds.coords[d][lo:hi]), lo) for d, (lo, hi) in bounds.items()},
+        ref.chunks,
     )
-    written = {r["chunk"]: r["n"] for r in stats}
+    # fill-padded blocks, the store's own format; stats keys are dotted
+    written = _scatter_write(
+        work, dims, {v: arrays[v] for v in var_cols}, _dotted_key, "write_zarr_region"
+    )
     if validate:
         inside = sum(written.values())
         if inside != total:
@@ -457,247 +462,29 @@ def _write_persisted(
         raise ValueError("empty result: nothing to write")
     if chunks is None:
         chunks = {dims[0]: max(1, -(-sizes[dims[0]] // 32))}
-    chunk_shape = tuple(min(chunks.get(d, sizes[d]), sizes[d]) for d in dims)
-    if shards:
-        shard_shape = tuple(
-            min(shards.get(d, sizes[d]), sizes[d]) for d in dims
-        )
-        # spec: shard shape is a whole multiple of the inner chunk shape
-        shard_shape = tuple(
-            (s // c) * c if s >= c else c for s, c in zip(shard_shape, chunk_shape)
-        )
-        key_shape = shard_shape
-    else:
-        key_shape = chunk_shape
+    shape = tuple(sizes[d] for d in dims)
+    chunk_shape, shard_shape = chunk_grid(tuple(dims), shape, chunks, shards)
 
-    # 2) chunk/shard index per row via broadcast position joins (tiny axes)
-    spark = df.sparkSession
-    work = df
-    for d, c in zip(dims, key_shape):
-        pos_pdf = pd.DataFrame({d: coords[d], f"__pos_{d}": np.arange(sizes[d], dtype=np.int64)})
-        work = work.join(F.broadcast(spark.createDataFrame(pos_pdf)), d)
-        work = work.withColumn(f"__ck_{d}", F.expr(f"__pos_{d} div {c}").cast("int"))
+    # 2) metadata on the driver BEFORE the write job: a codec with no
+    #    spelling in the chosen format fails here, not after the cluster
+    #    wrote chunks the metadata step would then reject
+    metas = {
+        v: array_meta(zarr_format, shape, chunk_shape, dtypes[v], tuple(dims),
+                      compressor=compressor, shards=shard_shape)
+        for v in var_cols
+    }
+    targets = {v: ZarrArray(os.path.join(path, v), metas[v][0]) for v in var_cols}
+    first = targets[var_cols[0]]
 
-    # 3) executor-side chunk writes
-    for v in var_cols:
-        os.makedirs(os.path.join(path, v), exist_ok=True)
-    dlist, vlist = list(dims), list(var_cols)
-    cs = key_shape
-    inner_cs = chunk_shape
-    dt_strs = {v: dtypes[v].str for v in vlist}
-    v3 = zarr_format == 3
-    do_shard = bool(shards)
-    # v3's core spec registers gzip but not raw zlib (v2 keeps zlib);
-    # zstd/blosc pass through — they have v3 codec spellings
-    comp = (
-        {"id": "gzip", "level": compressor.get("level", 1)}
-        if (v3 and compressor is not None and compressor.get("id") == "zlib")
-        else compressor
-    )
-    if v3:
-        # Validate the codec has a v3 spelling BEFORE the cluster spends a
-        # full applyInPandas job writing chunks the metadata step would
-        # then reject (leaving a metadata-less partial store).
-        v3_codec_chain(comp, 1)
-    root = path
+    # 3) chunk/shard index per row, one shuffle, executor-side writes
+    work = _with_key_index(df, {d: (coords[d], 0) for d in dims}, first.key_chunks)
+    written = _scatter_write(work, dims, targets, first.chunk_key, "write_zarr_distributed")
 
-    def _write_chunk(pdf: pd.DataFrame) -> pd.DataFrame:
-        idx = tuple(int(pdf[f"__ck_{d}"].iloc[0]) for d in dlist)
-        locs = tuple(
-            pdf[f"__pos_{d}"].to_numpy(dtype=np.int64) - i * c
-            for d, i, c in zip(dlist, idx, cs)
-        )
-        key = (
-            os.path.join("c", *(str(i) for i in idx))
-            if v3
-            else ".".join(str(i) for i in idx)
-        )
-        for v in vlist:
-            dt = np.dtype(dt_strs[v])
-            # must equal the .zarray/zarr.json fill_value: a cell missing
-            # inside a written chunk and one in a never-written chunk have
-            # to read back identically (NaN floats, NaT datetimes, 0 ints)
-            fill = (
-                np.nan if dt.kind == "f"
-                else np.datetime64("NaT") if dt.kind == "M"
-                else "" if dt.kind == "O"
-                else 0
-            )
-            block = np.full(cs, fill, dtype=dt)
-            # float/datetime NULLs degrade to the NaN/NaT fill, but an
-            # int/bool dtype has no missing sentinel — fail with the column
-            # name instead of an opaque astype cast error
-            if dt.kind in "iub" and pdf[v].isna().any():
-                raise ValueError(
-                    f"write_zarr_distributed: column {v!r} maps to "
-                    f"non-nullable dtype {dt} but contains NULLs; fill or "
-                    f"cast it to a float/timestamp type before writing"
-                )
-            vals = pdf[v].to_numpy()
-            if dt.kind == "O":  # string NULLs degrade to the "" fill
-                vals = np.array(
-                    ["" if x is None else str(x) for x in vals], dtype=object
-                )
-            block[locs] = vals.astype(dt)
-            fname = os.path.join(root, v, key)
-            if v3:
-                os.makedirs(os.path.dirname(fname), exist_ok=True)
-            # attempt-unique temp + atomic rename: with speculative
-            # execution two attempts may write the same chunk CONCURRENTLY
-            # — same bytes, but a plain open('wb') truncate from the late
-            # attempt can race the completed one and leave a short file
-            import uuid as _uuid
-
-            tmp = f"{fname}.__tmp_{_uuid.uuid4().hex}"
-            if not do_shard:
-                raw = (
-                    _vlen_encode(block)
-                    if dt.kind == "O"
-                    else np.ascontiguousarray(block).tobytes()
-                )
-                with open(tmp, "wb") as f:
-                    f.write(_compress(raw, comp, 1 if dt.kind == "O" else dt.itemsize))
-                os.replace(tmp, fname)
-                continue
-            # one sharding_indexed file: inner chunk payloads in C order +
-            # (offset, nbytes) uint64-LE index + crc32c (zarr_store dialect)
-            import itertools as _it
-
-            from xarray_sql_spark.zarr_store import _crc32c
-
-            per = tuple(sh // c for sh, c in zip(cs, inner_cs))
-            index = np.empty((int(np.prod(per)), 2), dtype="<u8")
-            payload = bytearray()
-            for pos, iidx in enumerate(_it.product(*(range(p) for p in per))):
-                sel = tuple(
-                    slice(i * c, (i + 1) * c) for i, c in zip(iidx, inner_cs)
-                )
-                inner_raw = (
-                    _vlen_encode(block[sel])
-                    if dt.kind == "O"
-                    else np.ascontiguousarray(block[sel]).tobytes()
-                )
-                enc = _compress(inner_raw, comp, 1 if dt.kind == "O" else dt.itemsize)
-                index[pos] = (len(payload), len(enc))
-                payload.extend(enc)
-            idx_bytes = index.tobytes()
-            with open(tmp, "wb") as f:
-                f.write(bytes(payload))
-                f.write(idx_bytes)
-                f.write(_crc32c(idx_bytes).to_bytes(4, "little"))
-            os.replace(tmp, fname)
-        return pd.DataFrame({"chunk": [key], "n": [len(pdf)]})
-
-    stats = (
-        work.groupBy(*[f"__ck_{d}" for d in dims])
-        .applyInPandas(_write_chunk, "chunk string, n long")
-        .collect()
-    )
-
-    # 4) driver-side metadata + coordinate arrays
-    full_shape = tuple(sizes[d] for d in dims)
-    if v3:
-        consolidated_v3: dict = {}
-
-        def _meta3(name: str, ndims: tuple[str, ...], shape: tuple[int, ...],
-                   cshape: tuple[int, ...], dtype: np.dtype,
-                   inner: tuple[int, ...] | None = None) -> None:
-            inner_chain = (
-                # v3 string arrays: vlen-utf8 replaces the bytes codec
-                [{"name": "vlen-utf8"}] + v3_codec_chain(comp, 1)[1:]
-                if dtype.kind == "O"
-                else v3_codec_chain(comp, dtype.itemsize)
-            )
-            if inner is not None:
-                codecs = [
-                    {
-                        "name": "sharding_indexed",
-                        "configuration": {
-                            "chunk_shape": list(inner),
-                            "codecs": inner_chain,
-                            "index_codecs": [
-                                {"name": "bytes", "configuration": {"endian": "little"}},
-                                {"name": "crc32c"},
-                            ],
-                            "index_location": "end",
-                        },
-                    }
-                ]
-            else:
-                codecs = inner_chain
-            meta = v3_array_meta(shape, cshape, dtype, codecs, ndims)
-            with open(os.path.join(path, name, "zarr.json"), "w") as f:
-                json.dump(meta, f)
-            consolidated_v3[name] = meta
-
-        for v in var_cols:
-            _meta3(
-                v, tuple(dims), full_shape, cs, dtypes[v],
-                inner=inner_cs if do_shard else None,
-            )
-        for d in dims:
-            os.makedirs(os.path.join(path, d), exist_ok=True)
-            arr = coords[d]
-            if arr.dtype.kind == "O":
-                _meta3(d, (d,), (len(arr),), (len(arr),), arr.dtype)
-                raw, ts = _vlen_encode(arr), 1
-            else:
-                # write as little-endian to match the declared bytes codec
-                arr = arr.astype(arr.dtype.newbyteorder("<"), copy=False)
-                _meta3(d, (d,), (len(arr),), (len(arr),), arr.dtype)
-                raw, ts = np.ascontiguousarray(arr).tobytes(), arr.dtype.itemsize
-            os.makedirs(os.path.join(path, d, "c"), exist_ok=True)
-            with open(os.path.join(path, d, "c", "0"), "wb") as f:
-                f.write(_compress(raw, comp, ts))
-        root_doc = {
-            "zarr_format": 3,
-            "node_type": "group",
-            "attributes": {},
-            "consolidated_metadata": {
-                "kind": "inline",
-                "must_understand": False,
-                "metadata": consolidated_v3,
-            },
-        }
-        with open(os.path.join(path, "zarr.json"), "w") as f:
-            json.dump(root_doc, f)
-        return {r["chunk"]: r["n"] for r in stats}
-
-    consolidated: dict = {".zgroup": {"zarr_format": 2}}
-    with open(os.path.join(path, ".zgroup"), "w") as f:
-        json.dump({"zarr_format": 2}, f)
-
-    def _meta(name: str, ndims: tuple[str, ...], shape: tuple[int, ...],
-              cshape: tuple[int, ...], dtype: np.dtype) -> None:
-        meta = v2_array_meta(shape, cshape, dtype, compressor)
-        if dtype.kind == "O":
-            meta["filters"] = [{"id": "vlen-utf8"}]
-        zattrs = {_ARRAY_DIMENSIONS: list(ndims)}
-        with open(os.path.join(path, name, ".zarray"), "w") as f:
-            json.dump(meta, f)
-        with open(os.path.join(path, name, ".zattrs"), "w") as f:
-            json.dump(zattrs, f)
-        consolidated[f"{name}/.zarray"] = meta
-        consolidated[f"{name}/.zattrs"] = zattrs
-
-    for v in var_cols:
-        _meta(v, tuple(dims), full_shape, cs, dtypes[v])
+    # 4) driver: coordinate arrays (one chunk each), then the metadata —
+    #    the commit point
     for d in dims:
-        os.makedirs(os.path.join(path, d), exist_ok=True)
-        arr = coords[d]
-        _meta(d, (d,), (len(arr),), (len(arr),), arr.dtype)
-        raw = (
-            _vlen_encode(arr)
-            if arr.dtype.kind == "O"
-            else np.ascontiguousarray(arr).tobytes()
-        )
-        with open(os.path.join(path, d, "0"), "wb") as f:
-            f.write(
-                _compress(
-                    raw, compressor,
-                    1 if arr.dtype.kind == "O" else arr.dtype.itemsize,
-                )
-            )
-    with open(os.path.join(path, ".zmetadata"), "w") as f:
-        json.dump({"zarr_consolidated_format": 1, "metadata": consolidated}, f)
-    return {r["chunk"]: r["n"] for r in stats}
+        n = (sizes[d],)
+        metas[d] = array_meta(zarr_format, n, n, coords[d].dtype, (d,), compressor=compressor)
+        ZarrArray(os.path.join(path, d), metas[d][0]).write_chunk((0,), coords[d])
+    write_group(path, zarr_format, metas)
+    return written

@@ -1792,7 +1792,15 @@ def _sq_fold(qe, ce) -> float:
 
 
 def _spark_round6(v: float) -> float:
-    """Spark's round(double, 6): decimal-string BigDecimal, HALF_UP."""
+    """Spark's round(double, 6): decimal-string BigDecimal, HALF_UP.
+
+    Spark parses the double's ``Double.toString`` digits; this parses
+    Python's ``repr(double)``, so it relies on the two printing the same
+    digit string. Both print the shortest round-trip string from JDK 19 on;
+    older JDKs sometimes print a longer one, and a HALF_UP tie at the 6th
+    decimal could then round differently. Re-run the pin test
+    ``tests/test_round16_ops.py::test_pq_dtab_driver_matches_spark_job``
+    on any JVM upgrade."""
     from decimal import ROUND_HALF_UP, Decimal
 
     return float(Decimal(repr(v)).quantize(Decimal("0.000001"), ROUND_HALF_UP))

@@ -1,4 +1,5 @@
-"""Minimal public-spec Zarr v2 + v3 directory store: reader + test writer.
+"""Minimal public-spec Zarr v2 + v3 directory store: the reader, and the
+one encoder every writer uses.
 
 Implements the subsets of the Zarr v2 storage spec
 (https://zarr-specs.readthedocs.io/en/latest/v2/v2.0.html) and the Zarr v3
@@ -54,6 +55,16 @@ Supported, v3 (the reference's benchmark stack pins ``zarr>=3``):
   cloud-store layout (few big files, range reads).
 - inline ``consolidated_metadata`` in the root ``zarr.json`` (zarr-python
   3 convention): one metadata read for the whole group.
+
+Writing: this module owns the on-disk format for every writer —
+:func:`write_zarr`, :func:`append_zarr` and the executor-parallel sink,
+region writer and rechunker in :mod:`xarray_sql_spark.operators.zarr_sink`.
+:func:`array_meta` builds an array's metadata (v2 ``.zarray``/``.zattrs``
+with the vlen-utf8 filter; v3 ``zarr.json`` with the vlen-utf8 or
+``sharding_indexed`` chain), ``ZarrArray(dir, meta)`` encodes one chunk or
+one whole shard and commits it atomically (:meth:`ZarrArray.write_chunk`,
+the inverse of the chunk read), and :func:`write_group` commits a group's
+metadata and consolidated metadata after the chunks.
 """
 
 from __future__ import annotations
@@ -165,7 +176,9 @@ def _compress(raw: bytes, compressor: dict | None, typesize: int = 1) -> bytes:
     if cid == "zlib":
         return zlib.compress(raw, compressor.get("level", 6))
     if cid == "gzip":
-        return gzip.compress(raw, compresslevel=compressor.get("level", 6))
+        # a fixed header mtime keeps writes reproducible: a retried chunk
+        # write rewrites the same bytes, and two writers of one grid agree
+        return gzip.compress(raw, compresslevel=compressor.get("level", 6), mtime=0)
     from xarray_sql_spark import zarr_codecs
 
     if cid == "blosc":
@@ -283,6 +296,7 @@ class ZarrArray:
     def _init_v2(self, meta: dict) -> None:
         self.shape = tuple(int(n) for n in meta["shape"])
         self.chunks = tuple(int(c) for c in meta["chunks"])
+        self.key_chunks = self.chunks
         self.dtype = _parse_dtype(meta["dtype"])
         self.order = meta.get("order", "C")
         self.fill_value = _parse_fill(meta.get("fill_value"), self.dtype)
@@ -439,6 +453,7 @@ class ZarrArray:
         else:
             self.chunks = outer
             self.order, self.compressor = self._parse_v3_codecs(codecs)
+        self.key_chunks = outer  # the storage-key grid: shards when sharded
         self.fill_value = _parse_fill(meta.get("fill_value"), self.dtype)
         self.filters = []  # v2-only concept; v3 expresses these as codecs
         self._storage_dtype = self.dtype
@@ -514,13 +529,16 @@ class ZarrArray:
             return np.transpose(enc, np.argsort(perm))
         return flat.reshape(self.chunks, order=self.order)
 
-    def _chunk_file(self, idx: tuple[int, ...]) -> str:
+    def chunk_key(self, idx: tuple[int, ...]) -> str:
+        """Storage key of index ``idx`` on the ``key_chunks`` grid,
+        relative to the array directory."""
         kind, sep = self._key_encoding
         if kind == "default":  # v3 default: c/0/1 (or c.0.1)
-            key = sep.join(["c", *(str(i) for i in idx)])
-        else:  # v2-style: 0.1 / "0" for scalars
-            key = sep.join(str(i) for i in idx) if idx else "0"
-        return os.path.join(self.path, key)
+            return sep.join(["c", *(str(i) for i in idx)])
+        return sep.join(str(i) for i in idx) if idx else "0"  # v2: 0.1 / "0"
+
+    def _chunk_file(self, idx: tuple[int, ...]) -> str:
+        return os.path.join(self.path, self.chunk_key(idx))
 
     def _shard_index(self, fname: str) -> np.ndarray | None:
         """(n_inner, 2) uint64 array of (offset, nbytes) per inner chunk in
@@ -630,6 +648,73 @@ class ZarrArray:
 
     def values(self) -> np.ndarray:
         return self.read_block(tuple(slice(0, n) for n in self.shape))
+
+    # -- write side: the inverse of _load_chunk ---------------------------
+
+    def write(self, data: np.ndarray, start: tuple[int, ...] | None = None) -> None:
+        """Write ``data`` key by key with its origin at ``start`` (default:
+        the array's origin), a position aligned to ``key_chunks`` — a whole
+        new array, or the new chunks of an append."""
+        base = [s // k for s, k in zip(start or (0,) * data.ndim, self.key_chunks)]
+        grid = [range(-(-n // k)) for n, k in zip(data.shape, self.key_chunks)]
+        for idx in itertools.product(*grid):
+            sel = tuple(slice(i * k, (i + 1) * k) for i, k in zip(idx, self.key_chunks))
+            self.write_chunk(tuple(b + i for b, i in zip(base, idx)), data[sel])
+
+    def write_chunk(self, idx: tuple[int, ...], block: np.ndarray) -> None:
+        """Encode ``block``, the data of key ``idx`` on the ``key_chunks``
+        grid (one chunk, or one whole shard of a sharded array), in this
+        array's declared order, key encoding and codec, and commit it as
+        one file atomically. A block smaller than the key's shape (an edge
+        chunk) is padded with zeros ("" for strings); writers that pad with
+        the fill value pass a full block."""
+        if (self.filters and self._vlen is None) or self._transpose_order is not None:
+            raise NotImplementedError(
+                f"{self.path}: writing through filter chains or a general "
+                f"transpose codec is not supported"
+            )
+        data = self._encode_chunk(block) if self._shard is None else self._encode_shard(idx, block)
+        _write_file(self._chunk_file(idx), data)
+
+    def _encode_chunk(self, block: np.ndarray) -> bytes:
+        """One chunk's bytes: the inverse of ``_decode_chunk`` followed by
+        ``_decompress``."""
+        block = np.asarray(block)
+        vlen = self._vlen is not None
+        if block.shape != self.chunks:  # pad an edge chunk to full size
+            full = np.full(self.chunks, "", dtype=object) if vlen else np.zeros(self.chunks, self.dtype)
+            full[tuple(slice(0, n) for n in block.shape)] = block
+            block = full
+        if vlen:
+            raw = _vlen_encode(block.reshape(-1, order=self.order))
+        else:
+            raw = block.astype(self.dtype, copy=False).tobytes(order=self.order)
+        return _compress(raw, self.compressor, 1 if vlen else self.dtype.itemsize)
+
+    def _encode_shard(self, idx: tuple[int, ...], block: np.ndarray) -> bytes:
+        """One shard file: the inner chunks' payloads in C order, then the
+        (offset, nbytes) uint64-LE index, then its crc32c. Inner chunks
+        lying wholly past the array's end are recorded as absent."""
+        if (self._shard["index_location"], self._shard["index_checksum"]) != ("end", 4):
+            raise NotImplementedError(
+                f"{self.path}: only end-located, crc32c-checked shard indexes are written"
+            )
+        per = self._shard["per_shard"]
+        index = np.full((int(np.prod(per)), 2), 0xFFFFFFFFFFFFFFFF, dtype="<u8")
+        payload = bytearray()
+        for pos, inner in enumerate(itertools.product(*(range(p) for p in per))):
+            if any(
+                o * k + i * c >= n
+                for o, k, i, c, n in zip(idx, self.key_chunks, inner, self.chunks, self.shape)
+            ):
+                continue
+            enc = self._encode_chunk(
+                block[tuple(slice(i * c, (i + 1) * c) for i, c in zip(inner, self.chunks))]
+            )
+            index[pos] = (len(payload), len(enc))
+            payload += enc
+        table = index.tobytes()
+        return bytes(payload) + table + _crc32c(table).to_bytes(4, "little")
 
 
 def _array_dirs(path: str) -> list[str]:
@@ -908,21 +993,72 @@ def _v3_data_type(dtype: np.dtype):
     return dtype.name  # float64 / int64 / bool / ...
 
 
-# -- shared array-metadata builders (single source of truth for every writer:
-# the in-file test writers AND operators/zarr_sink's distributed sink) -------
+# -- the write side: one metadata builder, one chunk encoder, one group
+# commit — shared by write_zarr, append_zarr and operators/zarr_sink --------
 
 
-def v3_codec_chain(compressor: dict | None, typesize: int = 1) -> list[dict]:
-    """``bytes`` + compression codec chain matching what ``_compress``
-    produces for the internal ``{"id": ...}`` compressor dicts. gzip/zlib,
-    zstd and blosc all have v3 codec spellings; numcodecs-framed lz4 has
-    no v3 codec name (use blosc+lz4 instead)."""
-    codecs: list[dict] = [{"name": "bytes", "configuration": {"endian": "little"}}]
+def _jsonable(obj: Any) -> Any:
+    return json.loads(json.dumps(obj, default=str))
+
+
+def _write_file(fname: str, data: bytes) -> None:
+    """Commit ``data`` as ``fname`` atomically: an attempt-unique temp file,
+    then ``os.replace``. A concurrent reader, a crash mid-write or a
+    speculative twin task attempt sees the complete old or the complete
+    new bytes, never a short file; a retry rewrites the same bytes."""
+    import uuid
+
+    os.makedirs(os.path.dirname(fname), exist_ok=True)
+    tmp = f"{fname}.__tmp_{uuid.uuid4().hex}"
+    with open(tmp, "wb") as f:
+        f.write(data)
+    os.replace(tmp, fname)
+
+
+def _write_json(fname: str, doc: dict) -> None:
+    _write_file(fname, json.dumps(doc).encode())
+
+
+def chunk_grid(
+    dims: tuple[str, ...],
+    shape: tuple[int, ...],
+    chunks: Mapping[str, int] | None,
+    shards: Mapping[str, int] | None = None,
+) -> tuple[tuple[int, ...], tuple[int, ...] | None]:
+    """(chunk shape, shard shape or None) from per-dim requests: a dim
+    missing from a request spans the array, requests clip to the array,
+    and a shard shape rounds down to a whole multiple of the chunk shape
+    (at least one chunk) as the sharding spec requires."""
+
+    def clip(req: Mapping[str, int]) -> tuple[int, ...]:
+        return tuple(min(req.get(d, n), n) if n else 1 for d, n in zip(dims, shape))
+
+    chunk_shape = clip(chunks or {})
+    if not shards:
+        return chunk_shape, None
+    return chunk_shape, tuple(
+        (s // c) * c if s >= c else c for s, c in zip(clip(shards), chunk_shape)
+    )
+
+
+def _v3_codecs(dtype: np.dtype, compressor: dict | None) -> list[dict]:
+    """The v3 array->bytes codec plus the v3 spelling of the internal
+    ``{"id": ...}`` compressor dict (what ``_compress`` produces). String
+    arrays take ``vlen-utf8`` in place of ``bytes``; v3's core spec
+    registers gzip but not raw zlib, so zlib is spelled gzip; numcodecs-
+    framed lz4 has no v3 codec name (use blosc+lz4 instead)."""
+    vlen = dtype.kind in ("U", "O")
+    typesize = 1 if vlen else dtype.itemsize
+    codecs: list[dict] = [
+        {"name": "vlen-utf8"}
+        if vlen
+        else {"name": "bytes", "configuration": {"endian": "little"}}
+    ]
     if compressor is None:
         return codecs
     cid = compressor.get("id")
     if cid in ("gzip", "zlib"):
-        codecs.append({"name": cid, "configuration": {"level": compressor.get("level", 1)}})
+        codecs.append({"name": "gzip", "configuration": {"level": compressor.get("level", 1)}})
     elif cid == "zstd":
         codecs.append(
             {"name": "zstd", "configuration": {"level": compressor.get("level", 0), "checksum": False}}
@@ -948,38 +1084,63 @@ def v3_codec_chain(compressor: dict | None, typesize: int = 1) -> list[dict]:
     return codecs
 
 
-def v2_array_meta(
-    shape: tuple, chunk_shape: tuple, dtype: np.dtype, compressor: dict | None
-) -> dict:
-    fill = "NaN" if dtype.kind == "f" else None if dtype.kind == "M" else 0
-    return {
-        "zarr_format": 2,
-        "shape": list(shape),
-        "chunks": list(chunk_shape) or [1],
-        "dtype": dtype.str,
-        "compressor": compressor,
-        "fill_value": fill,
-        "order": "C",
-        "filters": None,
-    }
-
-
-def v3_array_meta(
-    shape: tuple,
-    chunk_shape: tuple,
+def array_meta(
+    zarr_format: int,
+    shape: tuple[int, ...],
+    chunks: tuple[int, ...],
     dtype: np.dtype,
-    codecs: list[dict],
-    dims: tuple,
-    attrs: dict | None = None,
-) -> dict:
-    return {
+    dims: tuple[str, ...],
+    attrs: Mapping | None = None,
+    compressor: dict | None = None,
+    shards: tuple[int, ...] | None = None,
+) -> tuple[dict, dict | None]:
+    """Metadata of one array as :func:`write_group` commits it:
+    ``(.zarray, .zattrs)`` for v2, ``(zarr.json, None)`` for v3.
+    ``ZarrArray(array_dir, meta)`` then encodes chunks for it without
+    touching disk. String (``U``/``O``) arrays take the vlen-utf8 layout
+    (v2 filter, v3 ``string`` data type); ``shards`` (v3 only), a shard
+    shape from :func:`chunk_grid`, wraps the codec chain in
+    ``sharding_indexed`` with a crc32c-checked index at the shard's end.
+    Fill values read back absent cells as NaN (floats), NaT (datetimes),
+    "" (strings) or 0."""
+    dtype = np.dtype(dtype)
+    vlen = dtype.kind in ("U", "O")
+    if zarr_format == 2:
+        meta = {
+            "zarr_format": 2,
+            "shape": list(shape),
+            "chunks": list(chunks),
+            "dtype": "|O" if vlen else dtype.str,
+            "compressor": compressor,
+            "fill_value": "NaN" if dtype.kind == "f" else None if dtype.kind == "M" else 0,
+            "order": "C",
+            "filters": [{"id": "vlen-utf8"}] if vlen else None,
+        }
+        return meta, _jsonable({_ARRAY_DIMENSIONS: list(dims), **(attrs or {})})
+    codecs = _v3_codecs(dtype, compressor)
+    if shards:
+        codecs = [
+            {
+                "name": "sharding_indexed",
+                "configuration": {
+                    "chunk_shape": list(chunks),
+                    "codecs": codecs,
+                    "index_codecs": [
+                        {"name": "bytes", "configuration": {"endian": "little"}},
+                        {"name": "crc32c"},
+                    ],
+                    "index_location": "end",
+                },
+            }
+        ]
+    meta = {
         "zarr_format": 3,
         "node_type": "array",
         "shape": list(shape),
         "data_type": _v3_data_type(dtype),
         "chunk_grid": {
             "name": "regular",
-            "configuration": {"chunk_shape": list(chunk_shape) or [1]},
+            "configuration": {"chunk_shape": list(shards or chunks)},
         },
         "chunk_key_encoding": {
             "name": "default",
@@ -993,153 +1154,60 @@ def v3_array_meta(
             else -(2**63)
             if dtype.kind == "M"
             else ""
-            if dtype.kind in ("U", "O")
+            if vlen
             else 0
         ),
         "codecs": codecs,
         "dimension_names": list(dims),
-        "attributes": attrs or {},
+        "attributes": _jsonable(dict(attrs or {})),
     }
+    return meta, None
 
 
-def _write_zarr_v3(
-    ds,
+def write_group(
     path: str,
-    chunks: Mapping[str, int] | None,
-    compressor: dict | None,
-    shards: Mapping[str, int] | None = None,
-) -> str:
-    """Zarr v3 layout: per-node ``zarr.json``, ``c/``-prefixed chunk keys,
-    ``bytes``(+``gzip``) codec chain, inline consolidated metadata. With
-    ``shards``, data variables write through the ``sharding_indexed`` codec:
-    one file per shard packing the inner chunk grid + an end-located binary
-    index of (offset, nbytes) uint64-LE pairs."""
-    if compressor and compressor.get("id") == "zlib":
-        # v3's core spec registers gzip but not raw zlib
-        compressor = {"id": "gzip", "level": compressor.get("level", 1)}
-    os.makedirs(path, exist_ok=True)
-    consolidated: dict[str, Any] = {}
-
-    def write_array(name: str, dims: tuple[str, ...], data: np.ndarray, attrs: dict):
-        data = np.ascontiguousarray(data)
-        adir = os.path.join(path, name)
-        os.makedirs(adir, exist_ok=True)
-        chunk_shape = tuple(
-            min((chunks or {}).get(d, n), n) if n else 1 for d, n in zip(dims, data.shape)
-        )
-        sharded = bool(shards) and bool(data.shape) and any(d in shards for d in dims)
-        vlen = data.dtype.kind in ("U", "O")
-        inner_codecs = (
-            # v3 string arrays: vlen-utf8 replaces the mandatory bytes codec
-            [{"name": "vlen-utf8"}] + v3_codec_chain(compressor, 1)[1:]
-            if vlen
-            else v3_codec_chain(compressor, data.dtype.itemsize)
-        )
-        if sharded:
-            shard_shape = tuple(
-                min(shards.get(d, n), n) if n else 1 for d, n in zip(dims, data.shape)
-            )
-            # spec: shard shape must be a multiple of the inner chunk shape
-            shard_shape = tuple(
-                (s // c) * c if s >= c else c for s, c in zip(shard_shape, chunk_shape)
-            )
-            key_shape = shard_shape
-            codecs = [
-                {
-                    "name": "sharding_indexed",
-                    "configuration": {
-                        "chunk_shape": list(chunk_shape),
-                        "codecs": inner_codecs,
-                        "index_codecs": [
-                            {"name": "bytes", "configuration": {"endian": "little"}},
-                            {"name": "crc32c"},
-                        ],
-                        "index_location": "end",
-                    },
-                }
-            ]
-        else:
-            key_shape = chunk_shape
-            codecs = inner_codecs
-        meta = v3_array_meta(
-            data.shape, key_shape, data.dtype, codecs, dims,
-            json.loads(json.dumps(attrs, default=str)),
-        )
-        with open(os.path.join(adir, "zarr.json"), "w") as f:
-            json.dump(meta, f)
-        consolidated[name] = meta
-        little = data if vlen else data.astype(data.dtype.newbyteorder("<"), copy=False)
-
-        def encoded_block(sel: tuple, shape: tuple) -> bytes:
-            block = little[sel]
-            if block.shape != shape:  # pad edge chunk to full size
-                padded = (
-                    np.full(shape, "", dtype=object)
-                    if vlen
-                    else np.zeros(shape, dtype=little.dtype)
-                )
-                padded[tuple(slice(0, s) for s in block.shape)] = block
-                block = padded
-            payload = (
-                _vlen_encode(block)
-                if vlen
-                else np.ascontiguousarray(block).tobytes()
-            )
-            return _compress(payload, compressor, 1 if vlen else little.dtype.itemsize)
-
-        grid = [range((n + c - 1) // c) for n, c in zip(data.shape, key_shape)]
-        for idx in itertools.product(*grid) if data.shape else [()]:
-            key = os.path.join("c", *(str(i) for i in idx)) if idx else "c"
-            fname = os.path.join(adir, key)
-            os.makedirs(os.path.dirname(fname), exist_ok=True)
-            if not sharded:
-                sel = tuple(
-                    slice(i * c, min((i + 1) * c, n))
-                    for i, c, n in zip(idx, key_shape, data.shape)
-                )
-                with open(fname, "wb") as f:
-                    f.write(encoded_block(sel, key_shape))
-                continue
-            # shard file: inner chunks in C order + (offset, nbytes) index
-            per = tuple(s // c for s, c in zip(shard_shape, chunk_shape))
-            index = np.empty((int(np.prod(per)), 2), dtype="<u8")
-            payload = bytearray()
-            for pos, inner_idx in enumerate(itertools.product(*(range(p) for p in per))):
-                sel = tuple(
-                    slice(o * s + i * c, min(o * s + (i + 1) * c, n))
-                    for o, s, i, c, n in zip(
-                        idx, shard_shape, inner_idx, chunk_shape, data.shape
-                    )
-                )
-                if any(sl.start >= sl.stop for sl in sel):
-                    index[pos] = (0xFFFFFFFFFFFFFFFF, 0xFFFFFFFFFFFFFFFF)
-                    continue
-                enc = encoded_block(sel, chunk_shape)
-                index[pos] = (len(payload), len(enc))
-                payload.extend(enc)
-            idx_bytes = index.tobytes()
-            with open(fname, "wb") as f:
-                f.write(bytes(payload))
-                f.write(idx_bytes)
-                f.write(_crc32c(idx_bytes).to_bytes(4, "little"))
-
-    for d, c in ds.coords.items():
-        write_array(d, (d,), np.asarray(c), dict(ds.coord_attrs.get(d, {})))
-    for name, var in ds.data_vars.items():
-        write_array(name, var.dims, var.values(), dict(var.attrs))
-    root = {
-        "zarr_format": 3,
-        "node_type": "group",
-        "attributes": json.loads(json.dumps(ds.attrs, default=str)) if ds.attrs else {},
-        "consolidated_metadata": {
-            "kind": "inline",
-            "must_understand": False,
-            "metadata": consolidated,
-        },
-    }
-    with open(os.path.join(path, "zarr.json"), "w") as f:
-        json.dump(root, f)
-    return path
+    zarr_format: int,
+    arrays: Mapping[str, tuple[dict, dict | None]],
+    attrs: Mapping | None = None,
+) -> None:
+    """Commit a group's metadata, in the order of ``arrays`` (name ->
+    :func:`array_meta` pair): every array's documents, then the group's
+    own, then its consolidated metadata (v2 ``.zmetadata``; v3 inline in
+    the root ``zarr.json``). Writers put every chunk on disk BEFORE this,
+    so a reader that can open the group finds every chunk it names."""
+    attrs = _jsonable(dict(attrs or {}))
+    if zarr_format == 3:
+        for name, (meta, _) in arrays.items():
+            _write_json(os.path.join(path, name, "zarr.json"), meta)
+        root = {
+            "zarr_format": 3,
+            "node_type": "group",
+            "attributes": attrs,
+            "consolidated_metadata": {
+                "kind": "inline",
+                "must_understand": False,
+                "metadata": {name: meta for name, (meta, _) in arrays.items()},
+            },
+        }
+        _write_json(os.path.join(path, "zarr.json"), root)
+        return
+    consolidated: dict[str, Any] = {".zgroup": {"zarr_format": 2}}
+    if attrs:
+        consolidated[".zattrs"] = attrs
+    for name, (meta, zattrs) in arrays.items():
+        _write_json(os.path.join(path, name, ".zarray"), meta)
+        _write_json(os.path.join(path, name, ".zattrs"), zattrs)
+        consolidated[f"{name}/.zarray"] = meta
+        consolidated[f"{name}/.zattrs"] = zattrs
+    for key in (".zgroup", ".zattrs"):
+        if key in consolidated:
+            _write_json(os.path.join(path, key), consolidated[key])
+    # consolidated metadata (xarray's consolidated=True default): readers
+    # get the whole group's metadata in one file read
+    _write_json(
+        os.path.join(path, ".zmetadata"),
+        {"zarr_consolidated_format": 1, "metadata": consolidated},
+    )
 
 
 def write_zarr(
@@ -1151,87 +1219,34 @@ def write_zarr(
     shards: Mapping[str, int] | None = None,
 ) -> str:
     """Write a :class:`Dataset` as a Zarr v2 (default) or v3 directory tree
-    (test twin of xarray's ``to_zarr``; real stores read back through the
-    same :func:`open_zarr`). Edge chunks are padded to full chunk shape as
-    the spec requires; all-fill chunks are still written (simplicity over
-    sparseness — the reader handles both). ``shards`` (v3 only) writes data
-    variables through the ``sharding_indexed`` codec."""
-    if zarr_format == 3:
-        return _write_zarr_v3(ds, path, chunks, compressor, shards)
-    if shards:
+    with consolidated metadata (the twin of xarray's ``to_zarr``; real
+    stores read back through the same :func:`open_zarr`). Edge chunks are
+    padded to full chunk shape with zeros ("" for strings); all-fill
+    chunks are still written (simplicity over sparseness — the reader
+    handles both). ``shards`` (v3 only) writes every array with a dim in
+    ``shards`` through the ``sharding_indexed`` codec. Chunks land first
+    and metadata last (:func:`write_group`)."""
+    if shards and zarr_format != 3:
         raise ValueError("shards requires zarr_format=3")
-    os.makedirs(path, exist_ok=True)
-    consolidated: dict[str, Any] = {".zgroup": {"zarr_format": 2}}
-    with open(os.path.join(path, ".zgroup"), "w") as f:
-        json.dump({"zarr_format": 2}, f)
-    if ds.attrs:
-        group_attrs = json.loads(json.dumps(ds.attrs, default=str))
-        consolidated[".zattrs"] = group_attrs
-        with open(os.path.join(path, ".zattrs"), "w") as f:
-            json.dump(group_attrs, f)
+    arrays: dict[str, tuple[dict, dict | None]] = {}
 
     def write_array(name: str, dims: tuple[str, ...], data: np.ndarray, attrs: dict):
-        data = np.ascontiguousarray(data)
-        adir = os.path.join(path, name)
-        os.makedirs(adir, exist_ok=True)
-        chunk_shape = tuple(
-            min((chunks or {}).get(d, n), n) if n else 1 for d, n in zip(dims, data.shape)
+        data = np.asarray(data)
+        chunk_shape, shard_shape = chunk_grid(
+            dims, data.shape, chunks,
+            shards if shards and any(d in shards for d in dims) else None,
         )
-        # string arrays persist as the numcodecs vlen-utf8 object layout
-        # (what xarray's to_zarr writes for string coords/vars)
-        vlen = data.dtype.kind in ("U", "O")
-        meta = v2_array_meta(
-            data.shape, chunk_shape, np.dtype(object) if vlen else data.dtype, compressor
+        arrays[name] = array_meta(
+            zarr_format, data.shape, chunk_shape, data.dtype, dims, attrs,
+            compressor, shard_shape,
         )
-        if vlen:
-            meta["filters"] = [{"id": "vlen-utf8"}]
-        with open(os.path.join(adir, ".zarray"), "w") as f:
-            json.dump(meta, f)
-        zattrs = json.loads(
-            json.dumps({_ARRAY_DIMENSIONS: list(dims), **attrs}, default=str)
-        )
-        with open(os.path.join(adir, ".zattrs"), "w") as f:
-            json.dump(zattrs, f)
-        consolidated[f"{name}/.zarray"] = meta
-        consolidated[f"{name}/.zattrs"] = zattrs
-        grid = [range((n + c - 1) // c) for n, c in zip(data.shape, chunk_shape)]
-        for idx in itertools.product(*grid) if data.shape else [()]:
-            sel = tuple(
-                slice(i * c, min((i + 1) * c, n))
-                for i, c, n in zip(idx, chunk_shape, data.shape)
-            )
-            block = data[sel]
-            if block.shape != chunk_shape:  # pad edge chunk to full size
-                padded = (
-                    np.full(chunk_shape, "", dtype=object)
-                    if vlen
-                    else np.zeros(chunk_shape, dtype=data.dtype)
-                )
-                padded[tuple(slice(0, s) for s in block.shape)] = block
-                block = padded
-            key = ".".join(str(i) for i in idx) if idx else "0"
-            payload = (
-                _vlen_encode(block)
-                if vlen
-                else np.ascontiguousarray(block).tobytes()
-            )
-            with open(os.path.join(adir, key), "wb") as f:
-                f.write(
-                    _compress(
-                        payload,
-                        compressor,
-                        1 if vlen else data.dtype.itemsize,
-                    )
-                )
+        ZarrArray(os.path.join(path, name), arrays[name][0]).write(data)
 
     for d, c in ds.coords.items():
-        write_array(d, (d,), np.asarray(c), dict(ds.coord_attrs.get(d, {})))
+        write_array(d, (d,), c, ds.coord_attrs.get(d, {}))
     for name, var in ds.data_vars.items():
-        write_array(name, var.dims, var.values(), dict(var.attrs))
-    # consolidated metadata (xarray's consolidated=True default): readers
-    # get the whole group's metadata in one file read
-    with open(os.path.join(path, ".zmetadata"), "w") as f:
-        json.dump({"zarr_consolidated_format": 1, "metadata": consolidated}, f)
+        write_array(name, var.dims, var.values(), var.attrs)
+    write_group(path, zarr_format, arrays, ds.attrs)
     return path
 
 
@@ -1255,9 +1270,9 @@ def append_zarr(slab, path: str, dim: str) -> str:
     coord_meta = _meta(dim)
     old_n = int(coord_meta["shape"][0])
     # Validate EVERY array being appended BEFORE any chunk file lands.
-    # Alignment must hold per array: _write_append addresses new chunks at
-    # base_idx = old_n // that array's own chunk size along the append
-    # axis, so a var whose chunk does not divide old_n (possible even when
+    # Alignment must hold per array: new chunks are addressed from
+    # old_n // that array's own chunk size along the append axis, so a
+    # var whose chunk does not divide old_n (possible even when
     # the coord's does — e.g. a coord stored as one full-length chunk)
     # would silently overwrite the committed trailing chunk with
     # zero-padded data at the wrong offset.
@@ -1292,7 +1307,7 @@ def append_zarr(slab, path: str, dim: str) -> str:
     metas: dict[str, dict] = {}
     for name, dims_, slab_dtype, slab_shape in appended:
         meta = metas[name] = _meta(name)
-        # Non-append dims must match the store exactly: _write_append
+        # Non-append dims must match the store exactly: the chunk writer
         # would silently zero-pad a short slab (fabricated values inside
         # the valid shape) or overflow chunk addressing on a long one.
         for ax, (d_, n_slab) in enumerate(zip(dims_, slab_shape)):
@@ -1329,60 +1344,20 @@ def append_zarr(slab, path: str, dim: str) -> str:
                 f"re-open with decode_cf=False)"
             )
 
-    new_metas: dict[str, dict] = {}
-
-    def _write_append(name: str, dims: tuple[str, ...], data: np.ndarray) -> None:
-        meta = metas[name]  # read once in the validation loop
-        axis = dims.index(dim)
-        chunk_shape = tuple(int(c) for c in meta["chunks"])
-        dtype = _parse_dtype(meta["dtype"])
-        compressor = meta.get("compressor")
-        sep = meta.get("dimension_separator", ".")
-        order = meta.get("order", "C")
-        data = np.ascontiguousarray(data.astype(dtype, copy=False))
-        base_idx = old_n // chunk_shape[axis]
-        grid = [
-            range((n + c - 1) // c) for n, c in zip(data.shape, chunk_shape)
-        ]
-        for idx in itertools.product(*grid):
-            sel = tuple(
-                slice(i * c, min((i + 1) * c, n))
-                for i, c, n in zip(idx, chunk_shape, data.shape)
-            )
-            block = data[sel]
-            if block.shape != chunk_shape:
-                padded = np.zeros(chunk_shape, dtype=dtype)
-                padded[tuple(slice(0, s) for s in block.shape)] = block
-                block = padded
-            store_idx = tuple(
-                i + base_idx if ax == axis else i for ax, i in enumerate(idx)
-            )
-            key = sep.join(str(i) for i in store_idx)
-            fname = os.path.join(path, name, key)
-            if sep == "/":
-                os.makedirs(os.path.dirname(fname), exist_ok=True)
-            with open(fname, "wb") as f:
-                # serialize in the array's declared order — readers reshape
-                # chunk bytes with order=meta["order"], so an F-order store
-                # must get F-order bytes
-                f.write(
-                    _compress(block.tobytes(order=order), compressor, dtype.itemsize)
-                )
-        meta["shape"][axis] = int(meta["shape"][axis]) + data.shape[axis]
-        new_metas[name] = meta
-
-    _write_append(dim, (dim,), np.asarray(slab.coords[dim]))
-    for name, var in slab.data_vars.items():
-        if dim in var.dims:
-            _write_append(name, var.dims, var.values())
+    # chunks first: each array's new keys start at the chunk-aligned old
+    # length along ``dim``, encoded in the array's own order, key encoding
+    # and codec
+    for name, dims_, *_ in appended:
+        data = np.asarray(slab.coords[dim]) if name == dim else slab.data_vars[name].values()
+        start = tuple(old_n if d_ == dim else 0 for d_ in dims_)
+        ZarrArray(os.path.join(path, name), metas[name]).write(data, start)
+        metas[name]["shape"][dims_.index(dim)] += data.shape[dims_.index(dim)]
 
     # commit point: shapes become visible only after every chunk is on disk
-    for name, meta in new_metas.items():
-        with open(os.path.join(path, name, ".zarray"), "w") as f:
-            json.dump(meta, f)
+    for name, meta in metas.items():
+        _write_json(os.path.join(path, name, ".zarray"), meta)
         if consolidated is not None:
             consolidated[f"{name}/.zarray"] = meta
     if consolidated is not None:
-        with open(zmeta_path, "w") as f:
-            json.dump({"zarr_consolidated_format": 1, "metadata": consolidated}, f)
+        _write_json(zmeta_path, {"zarr_consolidated_format": 1, "metadata": consolidated})
     return path
