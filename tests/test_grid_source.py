@@ -184,3 +184,98 @@ def test_reader_round_trip_yields_identical_batches(tmp_path, backing, columns):
     np.testing.assert_array_equal(
         np.sort(np.concatenate(u10)), np.sort(ds.data_vars["u10"].values().ravel())
     )
+
+
+# --- block packing and task-side reads ----------------------------------------
+def _store_reader(tmp_path, cores=None, columns=None, max_partition_bytes=None):
+    """A reader over a 9-block store (time chunks of 8 of 72 steps)."""
+    store = write_zarr(_grid(72, 4, 3), str(tmp_path / "p.zarr"), chunks={"time": 8})
+    payload = make_payload(store=store, chunks={"time": 8})
+    if cores is not None:
+        payload["cores"] = cores
+    if max_partition_bytes is not None:
+        payload["max_partition_bytes"] = max_partition_bytes
+    fields = payload["arrow_schema"]
+    if columns is not None:
+        fields = pa.schema([fields.field(c) for c in columns])
+    return GridReader(payload, spark_schema(fields))
+
+
+def test_packing_follows_the_file_partition_rule(tmp_path):
+    from pyspark.sql.datasource import GreaterThanOrEqual
+
+    from xarray_sql_spark.sources.grid_source import GridPartition, PackedPartition
+
+    # no core count in the payload: one block per partition
+    assert [p.index for p in _store_reader(tmp_path).partitions()] == list(range(9))
+    # 4 cores: 4 contiguous, balanced runs covering all 9 blocks in order
+    parts = _store_reader(tmp_path, cores=4).partitions()
+    assert all(isinstance(p, PackedPartition) for p in parts)
+    runs = [[b.index for b in p.blocks] for p in parts]
+    assert [i for r in runs for i in r] == list(range(9))
+    assert sorted(len(r) for r in runs) == [2, 2, 2, 3]
+    # bytes over maxPartitionBytes raise the task count above the cores
+    many = _store_reader(tmp_path, cores=2, max_partition_bytes=8 * 4 * 3 * 4 * 2 * 3)
+    assert len(many.partitions()) == 3
+    # at most `cores` kept blocks: left as they are
+    reader = _store_reader(tmp_path, cores=4)
+    reader.pushFilters([GreaterThanOrEqual(("time",), np.datetime64("2001-01-03T00", "us").item())])
+    kept = reader.partitions()
+    assert [type(p) for p in kept] == [GridPartition] * 3
+    assert [p.index for p in kept] == [6, 7, 8]
+
+
+def test_packed_task_opens_the_store_once_without_coordinates(tmp_path, monkeypatch):
+    """A packed partition opens the store once and decodes no coordinate
+    chunk (the reader carries the coordinates); its batches equal the
+    unpacked reader's, block for block."""
+    from xarray_sql_spark import zarr_store
+    from xarray_sql_spark.dataset import Dataset as DS
+
+    packed = _store_reader(tmp_path, cores=2)
+    plain = _store_reader(tmp_path)
+    want = [b for p in plain.partitions() for b in plain.read(p)]
+    parts = packed.partitions()
+    assert len(parts) == 2
+
+    opens, coord_reads = [], []
+    real_open, real_values = DS.open_store, zarr_store.ZarrArray.values
+    monkeypatch.setattr(
+        DS, "open_store",
+        classmethod(lambda cls, path, **kw: opens.append(kw) or real_open(path, **kw)),
+    )
+
+    def values(self):
+        coord_reads.append(self.path)
+        return real_values(self)
+
+    monkeypatch.setattr(zarr_store.ZarrArray, "values", values)
+    got = [b for p in parts for b in packed.read(p)]
+    assert opens == [{"load_coords": False}] * 2
+    assert coord_reads == []
+    assert [b.serialize().to_pybytes() for b in got] == [
+        b.serialize().to_pybytes() for b in want
+    ]
+
+
+def test_reader_pivots_only_requested_columns(tmp_path):
+    reader = _store_reader(tmp_path, columns=["u10"])
+    batches = [b for p in reader.partitions() for b in reader.read(p)]
+    assert {tuple(b.schema.names) for b in batches} == {("u10",)}
+    got = np.concatenate([b.column(0).to_numpy() for b in batches])
+    np.testing.assert_array_equal(got, _grid(72, 4, 3).data_vars["u10"].values().ravel())
+
+
+def test_stream_reader_keeps_one_block_per_partition(tmp_path):
+    from pyspark.sql import types as T
+
+    from xarray_sql_spark.sources.grid_source import GridPartition, GridStreamReader
+
+    store = write_zarr(_grid(72, 4, 3), str(tmp_path / "s.zarr"), chunks={"time": 8})
+    payload = make_payload(store=store, chunks={"time": 8})
+    payload["cores"] = 2
+    schema = T.StructType(
+        [T.StructField(n, T.StringType()) for n in payload["arrow_schema"].names]
+    )
+    parts = GridStreamReader(payload, schema).partitions({"offset": 0}, {"offset": 72})
+    assert [type(p) for p in parts] == [GridPartition] * 9

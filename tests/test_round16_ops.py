@@ -163,3 +163,39 @@ def test_bench_timed_body_clears_train_memos():
     assert "reset_train_caches" in run_once_calls
     # the reset precedes the plan build+execute (spec.fn -> ... .save())
     assert run_once_calls.index("reset_train_caches") < run_once_calls.index("save")
+
+
+def _documents_with_id(spark, tmp_path, doc_id: int) -> str:
+    """An sf dir whose documents table is a few sf0.001 documents, the
+    first of them re-keyed to ``doc_id``."""
+    from pyspark.sql import functions as F
+
+    docs = spark.read.parquet(os.path.join(SF_SMALL, "documents.parquet")).limit(6)
+    first = docs.agg(F.min("doc_id")).collect()[0][0]
+    docs = docs.withColumn(
+        "doc_id",
+        F.when(F.col("doc_id") == first, F.lit(doc_id)).otherwise(F.col("doc_id")),
+    )
+    sf_dir = str(tmp_path)
+    docs.coalesce(1).write.parquet(os.path.join(sf_dir, "documents.parquet"))
+    return sf_dir
+
+
+def test_dd10_packed_key_out_of_range_fails_loudly(spark, tmp_path):
+    """doc_id * 2^24 + n_g keeps 39 bits of doc_id: an id of 2^39 would
+    alias another document's key, so the query must raise, not answer."""
+    import pytest
+
+    sf_dir = _documents_with_id(spark, tmp_path, 1 << 39)
+    with pytest.raises(Exception, match="dd10 packed key out of range"):
+        REGISTRY["dd10_shared_span_pairs"].fn(spark, sf_dir).collect()
+
+
+def test_mm05_packed_key_out_of_range_fails_loudly(spark, tmp_path):
+    """doc_id * 16 + nblocks: an image document (doc_id % 3 == 0) with an
+    id of 2^59 + 1 overflows the bigint key, so the query must raise."""
+    import pytest
+
+    sf_dir = _documents_with_id(spark, tmp_path, (1 << 59) + 1)
+    with pytest.raises(Exception, match="mm05 packed key out of range"):
+        REGISTRY["mm05_phash_neardup"].fn(spark, sf_dir).collect()

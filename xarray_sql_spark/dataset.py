@@ -306,23 +306,25 @@ class Dataset:
         return out
 
     @classmethod
-    def open_store(cls, path: str) -> "Dataset":
+    def open_store(cls, path: str, load_coords: bool = True) -> "Dataset":
         """Open lazily: coordinates load eagerly (small, needed for bounds);
         data variables become lazy block-readable handles. Dispatches on the
         on-disk format: a Zarr v2 group (``.zgroup``/``.zarray`` JSON, the
         format real users have — reference reader.py:192-337) opens through
         :mod:`xarray_sql_spark.zarr_store`; otherwise the native ``.npy``
-        directory layout."""
+        directory layout. ``load_coords=False`` leaves the coordinates out
+        (a scan task carries its own)."""
         if os.path.isfile(os.path.join(path, ".zgroup")) or not os.path.isfile(
             os.path.join(path, "meta.json")
         ):
             from xarray_sql_spark.zarr_store import open_zarr
 
-            return open_zarr(path)
+            return open_zarr(path, load_coords=load_coords)
         with open(os.path.join(path, "meta.json")) as f:
             meta = json.load(f)
         coords = {
-            d: np.load(os.path.join(path, f"coord_{d}.npy")) for d in meta["coords"]
+            d: np.load(os.path.join(path, f"coord_{d}.npy"))
+            for d in (meta["coords"] if load_coords else ())
         }
         data_vars = {}
         for name, m in meta["data_vars"].items():

@@ -1027,8 +1027,18 @@ def mm05_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     nblocks = F.least(
         F.lit(PHASH_BANDS), F.ceil(F.col("n") / F.lit(PHASH_BLOCK))
     ).cast("bigint")
+    doc_id = F.col("doc_id")
+    # Range guard in the same projection (no extra job): dn = doc_id*16 +
+    # nblocks (nblocks <= PHASH_BANDS < 16) unpacks only for doc_id in
+    # [0, 2^59); anything else would overflow or alias another key.
+    dn = F.when(
+        (doc_id < 0) | (doc_id >= F.lit(1 << 59)),
+        F.raise_error(
+            F.concat(F.lit("mm05 packed key out of range: doc_id="), doc_id.cast("string"))
+        ),
+    ).otherwise(doc_id * F.lit(16) + nblocks)
     ph = base.select(
-        (F.col("doc_id") * F.lit(16) + nblocks).alias("dn"),
+        dn.alias("dn"),
         F.col("n"),
         bands.alias("bands"),
     )

@@ -123,7 +123,9 @@ def iter_record_batches(
     """Pivot one block (already sliced to the partition) into row batches.
 
     ``block_coords``: 1-D coordinate slices per dim; ``block_arrays``: the
-    N-D data arrays, C-ordered on ``dims``.
+    N-D data arrays, C-ordered on ``dims``. ``schema`` picks the output
+    columns and their order: a dim column is synthesized only when the
+    schema names it, so a projection that drops dims pays nothing for them.
     """
     shape = tuple(len(block_coords[d]) for d in dims)
     total = int(np.prod(shape)) if shape else 0
@@ -141,9 +143,11 @@ def iter_record_batches(
         stop = min(start + batch_size, total)
         idx = np.arange(start, stop, dtype=np.int64)
         columns = []
-        for d in dims:
-            pos = (idx // strides[d]) % len(block_coords[d])
-            columns.append(_to_arrow_array(block_coords[d][pos], schema.field(d).type))
-        for name in flat:
-            columns.append(_to_arrow_array(flat[name][start:stop], schema.field(name).type))
+        for field in schema:
+            if field.name in strides:
+                d = field.name
+                pos = (idx // strides[d]) % len(block_coords[d])
+                columns.append(_to_arrow_array(block_coords[d][pos], field.type))
+            else:
+                columns.append(_to_arrow_array(flat[field.name][start:stop], field.type))
         yield pa.RecordBatch.from_arrays(columns, schema=schema)

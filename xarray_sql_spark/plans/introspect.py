@@ -10,6 +10,8 @@ ds.py:435-505 walks DataFusion's logical plan the same way).
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+
 from pyspark.sql import DataFrame
 
 PURE_SCAN_NODES = {"Project", "Sort", "SubqueryAlias", "DataSourceV2ScanRelation"}
@@ -141,32 +143,61 @@ def referenced_scan_columns(df: DataFrame, payload_keys) -> dict[str, set[str]]:
     return needed
 
 
-def metadata_aggregate_spec(df: DataFrame, payload_keys):
-    """If the optimized plan is a global (group-less) aggregate of only
-    MIN/MAX/COUNT over a single grid scan's DIM columns, return
-    ``(payload, [(out_name, kind, dim)], preds)`` where kind is
-    'min' | 'max' | 'count_star' | 'count' and ``preds`` is the list of
-    per-dim filter conjuncts as (dim, op, [(value, typename)]) — empty
-    for an unfiltered scan; a filter is accepted (for counts AND
-    min/max, which the caller answers from per-dim coordinate masks)
-    only when every conjunct is a simple comparison / IN / IsNotNull on
-    one scan column. Else None.
+# Datetime fields a grouping key may take of a TIMESTAMP_NTZ dim. Spark
+# applies the date fields to ``CAST(ts AS DATE)``; on NTZ values both the
+# cast and ``hour`` are time-zone free, so numpy can mirror them exactly.
+DATETIME_KEYS = {
+    "Hour": "hour",
+    "DayOfMonth": "dayofmonth",
+    "Month": "month",
+    "Year": "year",
+    "DayOfYear": "dayofyear",
+}
 
-    This is the DataFusion-style statistics-aggregate shortcut (the
-    reference answers COUNT(*) from exact scan stats; dim coords are
-    driver-known, so their MIN/MAX are too). exprId-precise: MIN over an
-    attribute merely *named* like a dim (e.g. an aliased expression in a
-    subquery) does not match — the attribute must be the scan's own
-    output column.
+
+@dataclass(frozen=True)
+class AggregateSpec:
+    """A root aggregate over exactly one registered grid scan, in scan terms.
+
+    - ``keys``: the grouping keys, each ``("col", column)`` or
+      ``(field, dim)`` with ``field`` a :data:`DATETIME_KEYS` value.
+    - ``outputs``: one entry per result column, in order: ``("key", i)``
+      for grouping key ``i``, or ``(fn, column)`` with ``fn`` one of
+      sum/avg/min/max/count and ``column`` a scan column, or
+      ``("count_star", None)``.
+    - ``preds``: the filter conjuncts as ``(column, op, ((value, type), ...))``.
+    """
+
+    payload: str
+    keys: tuple
+    outputs: tuple
+    preds: tuple
+
+
+def aggregate_spec(df: DataFrame, payload_keys) -> AggregateSpec | None:
+    """The :class:`AggregateSpec` of ``df``'s optimized plan, or None.
+
+    Accepted: a root ``Aggregate`` over only ``Project``/``Filter`` nodes
+    over one grid scan whose payload is in ``payload_keys``, where every
+    grouping key and aggregate argument resolves (through ``Project``
+    aliases) to a scan column, a :data:`DATETIME_KEYS` field of a
+    TIMESTAMP_NTZ column, or a float column under Spark's cast to double;
+    every aggregate is SUM/AVG/MIN/MAX/COUNT without DISTINCT or FILTER;
+    and every filter conjunct is a simple comparison / IN / IsNotNull on
+    one scan column. Whether a spec can be answered (from coordinate
+    metadata, or by partial aggregation in the reader) is the caller's
+    call: this walk only translates the plan.
+
+    exprId-precise: an attribute merely *named* like a scan column (an
+    aliased expression in a subquery) does not resolve to it.
     """
     try:
         plan = df._jdf.queryExecution().optimizedPlan()
         if plan.getClass().getSimpleName() != "Aggregate":
             return None
-        if not plan.groupingExpressions().isEmpty():
-            return None
         scan = None
         filters = []
+        aliases: dict[int, object] = {}
         n_aggs = 0
         for n in _walk(plan):
             cls = n.getClass().getSimpleName()
@@ -176,82 +207,126 @@ def metadata_aggregate_spec(df: DataFrame, payload_keys):
                 scan = n
             elif cls == "Filter":
                 filters.append(n)
+            elif cls == "Project":
+                pl = n.projectList()
+                for i in range(pl.size()):
+                    e = pl.apply(i)
+                    if e.getClass().getSimpleName() == "Alias":
+                        aliases[e.exprId().id()] = e.child()
             elif cls == "Aggregate":
                 # the ROOT aggregate only: a nested Aggregate (DISTINCT /
                 # GROUP BY subquery) changes the row set the outer
-                # aggregate sees, so the dim-product answer is wrong
+                # aggregate sees
                 n_aggs += 1
                 if n_aggs > 1:
                     return None
-            elif cls != "Project":
+            else:
                 return None
         if scan is None:
             return None
         payload = scan.relation().options().get("payload")
         if payload not in payload_keys:
             return None
-        scan_cols: dict[int, str] = {}
+        scan_cols: dict[int, tuple[str, str]] = {}
         it = scan.output().iterator()
         while it.hasNext():
             a = it.next()
-            scan_cols[a.exprId().id()] = a.name()
+            scan_cols[a.exprId().id()] = (a.name(), a.dataType().typeName())
 
-        def _scan_attr(expr):
-            """Scan-output column name for a (possibly cast-free)
-            AttributeReference, else None."""
-            if expr.getClass().getSimpleName() != "AttributeReference":
+        def resolve(expr):
+            """("col", name, type) or (field, dim, type) for ``expr``, else None."""
+            cls = expr.getClass().getSimpleName()
+            if cls == "Alias":
+                return resolve(expr.child())
+            if cls == "AttributeReference":
+                eid = expr.exprId().id()
+                if eid in aliases:
+                    return resolve(aliases[eid])
+                col = scan_cols.get(eid)
+                return ("col", *col) if col else None
+            if cls in DATETIME_KEYS:
+                arg = expr.children().apply(0)
+                if cls != "Hour":
+                    # date fields read CAST(ts AS DATE)
+                    if arg.getClass().getSimpleName() != "Cast":
+                        return None
+                    if arg.dataType().typeName() != "date":
+                        return None
+                    arg = arg.child()
+                inner = resolve(arg)
+                if inner is None or inner[0] != "col" or inner[2] != "timestamp_ntz":
+                    return None
+                return (DATETIME_KEYS[cls], inner[1], "integer")
+            return None
+
+        def scan_col(expr):
+            r = resolve(expr)
+            return r[1] if r is not None and r[0] == "col" else None
+
+        keys = []
+        ge = plan.groupingExpressions()
+        for i in range(ge.size()):
+            r = resolve(ge.apply(i))
+            if r is None:
                 return None
-            return scan_cols.get(expr.exprId().id())
+            keys.append(r[:2])
 
-        spec = []
+        outputs = []
         aggs = plan.aggregateExpressions()
         for i in range(aggs.size()):
             ne = aggs.apply(i)
-            if ne.getClass().getSimpleName() != "Alias":
-                return None
-            child = ne.child()
+            child = ne.child() if ne.getClass().getSimpleName() == "Alias" else ne
             if child.getClass().getSimpleName() != "AggregateExpression":
-                return None
+                r = resolve(child)
+                if r is None or r[:2] not in keys:
+                    return None
+                outputs.append(("key", keys.index(r[:2])))
+                continue
             if child.isDistinct() or child.filter().isDefined():
                 return None
             fn = child.aggregateFunction()
             fcls = fn.getClass().getSimpleName()
             ch = fn.children()
             if fcls == "Count":
-                if ch.size() == 1 and ch.apply(0).getClass().getSimpleName() == "Literal":
-                    # COUNT(<non-null literal>) is COUNT(*); COUNT(NULL) is
-                    # 0 and must NOT be answered with the cell count — fall
-                    # back to the engine for it.
-                    if ch.apply(0).value() is None:
+                if ch.size() != 1:
+                    return None
+                arg = ch.apply(0)
+                if arg.getClass().getSimpleName() == "Literal":
+                    # COUNT(<non-null literal>) is COUNT(*); COUNT(NULL)
+                    # is 0 and must not be answered with the cell count.
+                    if arg.value() is None:
                         return None
-                    spec.append((ne.name(), "count_star", None))
+                    outputs.append(("count_star", None))
                     continue
-                if ch.size() == 1:
-                    dim = _scan_attr(ch.apply(0))
-                    if dim is not None:
-                        spec.append((ne.name(), "count", dim))
-                        continue
+                col = scan_col(arg)
+            elif fcls in ("Sum", "Average", "Min", "Max"):
+                arg = ch.apply(0)
+                if (
+                    arg.getClass().getSimpleName() == "Cast"
+                    and arg.dataType().typeName() == "double"
+                    and arg.child().dataType().typeName() in ("float", "double")
+                ):
+                    arg = arg.child()  # the implicit widening of a float
+                col = scan_col(arg)
+            else:
                 return None
-            if fcls in ("Min", "Max"):
-                dim = _scan_attr(ch.apply(0))
-                if dim is None:
-                    return None
-                spec.append((ne.name(), fcls.lower(), dim))
-                continue
-            return None
-        if filters:
-            # Per-dim masks express the filtered cross-product exactly:
-            # count = product of per-dim match counts, and (when the
-            # product is non-zero) min/max(dim) = the masked coord
-            # extremes. Every conjunct must be a simple per-dim predicate.
-            preds = []
-            for f in filters:
-                if not _conjuncts(f.condition(), _scan_attr, preds):
-                    return None
-            return (payload, spec, preds)
-        return (payload, spec, [])
+            if col is None:
+                return None
+            outputs.append(({"Average": "avg"}.get(fcls, fcls.lower()), col))
+
+        preds: list = []
+        for f in filters:
+            if not _conjuncts(f.condition(), scan_col, preds):
+                return None
+        preds = [(c, op, tuple(lits)) for c, op, lits in preds]
+        return AggregateSpec(payload, tuple(keys), tuple(outputs), tuple(preds))
     except Exception:
         return None
+
+
+# The name the session calls and the benchmark's tracer spans: one plan
+# walk serves both aggregate shortcuts.
+metadata_aggregate_spec = aggregate_spec
 
 
 _CMP_CLASSES = {

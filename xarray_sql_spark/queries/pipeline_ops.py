@@ -1596,8 +1596,21 @@ def dd10_shared_span_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # key itself. Plan: 3 scans / 2 SortMergeJoins / 8 exchanges ->
     # 1 scan / 0 joins / 2 exchanges (plans/r16/dd10_*).
     g = d.select("doc_id", shingles.alias("g"))
+    doc_id, n_g = F.col("doc_id"), F.size("g")
+    # Range guard in the same projection (no extra job): an id outside the
+    # packed key's 39 bits, or a count outside its 24, would silently
+    # collide with another document's key, so the query fails instead.
+    dn = F.when(
+        (doc_id < 0) | (doc_id >= F.lit(1 << 39)) | (n_g >= F.lit(1 << 24)),
+        F.raise_error(
+            F.concat(
+                F.lit("dd10 packed key out of range: doc_id="), doc_id.cast("string"),
+                F.lit(" n_g="), n_g.cast("string"),
+            )
+        ),
+    ).otherwise(doc_id * F.lit(1 << 24) + n_g)
     sh = g.select(
-        (F.col("doc_id") * F.lit(1 << 24) + F.size("g")).alias("dn"),
+        dn.alias("dn"),
         F.explode(
             F.transform(
                 "g",

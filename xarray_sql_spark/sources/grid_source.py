@@ -3,16 +3,27 @@ column-aware SQL table — the Spark-native re-expression of the reference's
 DataFusion TableProvider (reference reader.py:192-337 + src/lib.rs:919-1267).
 
 Design mapping (SURVEY.md §2A):
-- A1 scan: one InputPartition per chunk-grid block; ``read()`` yields Arrow
-  RecordBatches (Arrow path: no row-by-row Python serialization).
+- A1 scan: the chunk-grid blocks that survive pruning are packed into
+  contiguous, balanced InputPartitions by Spark's own FilePartition rule,
+  ``min(kept, max(cores, ceil(kept bytes / maxPartitionBytes)))`` (the
+  session writes ``cores`` and ``max_partition_bytes`` into the payload; a
+  payload without them keeps one block per partition). ``read()`` yields
+  Arrow RecordBatches block by block (Arrow path: no row-by-row Python
+  serialization), opening a store once per partition and reading only the
+  data-variable blocks: the reader already carries the coordinates.
+- Partial aggregation: a payload with an ``aggregate`` entry (written by
+  ``XarraySession`` for a GROUP BY it can answer, ``sources/partials.py``)
+  turns each block into one row per group it holds — keys, float64 sum,
+  non-NaN count, min/max — and Catalyst merges the partials; blocks whose
+  cells all fail the filter's coordinate masks are never read.
 - A2 pruning: ``pushFilters`` receives Catalyst's convertible predicates,
   prunes partitions by per-dim bounds, and returns ALL filters unhandled so
   Spark re-applies them row-level — exactly the reference's Inexact contract
   (src/lib.rs:548-565). Requires spark.sql.python.filterPushdown.enabled.
 - A3 column pruning: ``read()`` materializes only the data variables present
-  in the schema Spark hands the reader; store-backed datasets mmap just
-  those arrays' block bytes (the Zarr-selective-read equivalent,
-  src/lib.rs:597-652).
+  in the schema Spark hands the reader, and pivots only the dim columns it
+  names; store-backed datasets mmap just those arrays' block bytes (the
+  Zarr-selective-read equivalent, src/lib.rs:597-652).
 - A7 bounds: chunked-dim bounds per block + static bounds for unchunked dims
   hoisted and computed once (reference reader.py:306-335).
 - Laziness: building the reader/partitions touches only coordinate arrays;
@@ -24,8 +35,9 @@ Design mapping (SURVEY.md §2A):
   planning; the pickle copies just the block), so a task's payload is its
   block plus O(1). ``zipguard`` removes the other fixed per-call cost.
 
-Observability: pass ``read_log_dir`` to record one JSON file per partition
-read with the block slices + materialized columns — the cross-process
+Observability: pass ``read_log_dir`` to record one JSON file per block
+read (its own block index, also inside a packed partition) with the block
+slices + materialized columns — the cross-process
 equivalent of the reference's ``_iteration_callback`` test hook
 (reference reader.py:199-201).
 """
@@ -33,6 +45,7 @@ equivalent of the reference's ``_iteration_callback`` test hook
 from __future__ import annotations
 
 import json
+import math
 import os
 import pickle
 import uuid
@@ -54,7 +67,7 @@ from xarray_sql_spark import chunks as chunklib
 from xarray_sql_spark import pivot
 from xarray_sql_spark.bounds import block_may_match, dim_bounds
 from xarray_sql_spark.dataset import Dataset
-from xarray_sql_spark.sources import zipguard
+from xarray_sql_spark.sources import partials, zipguard
 
 zipguard.install()
 
@@ -70,6 +83,14 @@ class GridPartition(InputPartition):
         # In-memory registrations: var -> this block's data (a numpy view,
         # or a lazy variable read inside the task). None: read the store.
         self.arrays = arrays
+
+
+class PackedPartition(InputPartition):
+    """A contiguous run of chunk blocks read by one task."""
+
+    def __init__(self, index: int, blocks: list[GridPartition]):
+        self.index = index
+        self.blocks = blocks
 
 
 def _grid_coords(ds: Dataset, dims) -> dict[str, "np.ndarray"]:
@@ -172,21 +193,30 @@ class GridReader(DataSourceReader):
         self.read_log_dir: str | None = payload.get("read_log_dir")
         self.dims: tuple[str, ...] = tuple(payload["dims"])
         self.arrow_schema: pa.Schema = payload["arrow_schema"]
-        # Full dims+vars schema used for pivot synthesis even when the table
-        # schema is projection-pruned (some dims may be absent from it).
-        self.pivot_schema: pa.Schema = payload.get("pivot_schema", payload["arrow_schema"])
         # The schema Spark hands us here is the (possibly pruned) read
         # schema; intersecting with var_names yields the columns to
         # materialize (A3).
         self.read_columns = [f.name for f in schema.fields]
-        self.read_vars = [v for v in payload["var_names"] if v in self.read_columns]
+        # Partial aggregation (sources/partials.py): the schema holds the
+        # partial columns; the aggregate names the variables to read.
+        self.aggregate: dict | None = payload.get("aggregate")
+        if self.aggregate:
+            self.read_vars = list(self.aggregate["stats"])
+        else:
+            self.read_vars = [v for v in payload["var_names"] if v in self.read_columns]
         # String-dim pruning is sound only under binary collation; the
         # registration layer captures the session default (bounds.py doc)
         self.prune_strings: bool = bool(payload.get("binary_collation", True))
+        # Packing inputs (module doc, A1); None keeps one block per task.
+        self.cores: int | None = payload.get("cores")
+        self.max_partition_bytes: int = payload.get("max_partition_bytes", 128 * 2**20)
         self._filters: list[Filter] = []
         # Driver-side, coordinate-only work: block grid + bounds (A6/A7).
         ds = self.dataset if self.dataset is not None else Dataset.open_store(self.store_path)
         sizes = ds.sizes
+        self._cell_bytes = sum(
+            np.dtype(ds.data_vars[v].dtype).itemsize for v in self.read_vars
+        )
         chunks = payload.get("chunks")
         self.coords = _grid_coords(ds, self.dims)
         chunked_dims = {d: c for d, c in (chunks or {}).items() if d in sizes and c < sizes[d]}
@@ -210,7 +240,7 @@ class GridReader(DataSourceReader):
         # task: leave out the planning state and the in-memory grid (each
         # partition carries its own block), so the payload is O(1) in the
         # grid's data size.
-        planner_only = ("_blocks", "_bounds", "_filters")
+        planner_only = ("_blocks", "_bounds", "_filters", "_cell_bytes")
         state = {k: v for k, v in self.__dict__.items() if k not in planner_only}
         state["dataset"] = None
         return state
@@ -222,19 +252,33 @@ class GridReader(DataSourceReader):
         # scan (the reference's Inexact semantics, src/lib.rs:548-565).
         return iter(filters)
 
-    def partitions(self) -> list[GridPartition]:
+    def partitions(self) -> list[GridPartition] | list[PackedPartition]:
+        masks = self.aggregate["masks"] if self.aggregate else {}
         parts = []
+        cells = 0
         for i, (block, bounds) in enumerate(zip(self._blocks, self._bounds)):
-            if block_may_match(bounds, self._filters, self.prune_strings):
+            if block_may_match(
+                bounds, self._filters, self.prune_strings
+            ) and partials.block_has_cells(masks, block):
                 parts.append(
                     GridPartition(
                         i, {d: (s.start, s.stop) for d, s in block.items()}, self._inline(block)
                     )
                 )
+                cells += chunklib.block_num_rows(block)
         if not parts:
             # Spark requires >=1 partition; emit an empty sentinel block.
-            parts = [GridPartition(-1, {d: (0, 0) for d in self.dims})]
-        return parts
+            return [GridPartition(-1, {d: (0, 0) for d in self.dims})]
+        if self.cores is None:
+            return parts
+        n = min(
+            len(parts),
+            max(self.cores, math.ceil(cells * self._cell_bytes / self.max_partition_bytes)),
+        )
+        if n == len(parts):
+            return parts
+        bounds = np.linspace(0, len(parts), n + 1).round().astype(int)
+        return [PackedPartition(j, parts[a:b]) for j, (a, b) in enumerate(zip(bounds, bounds[1:]))]
 
     def _inline(self, block: dict) -> dict | None:
         """An in-memory registration's data over ``block``: numpy data as
@@ -249,37 +293,47 @@ class GridReader(DataSourceReader):
         }
 
     # -- execution (A1/A3/A5) ---------------------------------------------
-    def read(self, partition: GridPartition) -> Iterator[pa.RecordBatch]:
-        block = {d: slice(a, b) for d, (a, b) in partition.block.items()}
-        if self.read_log_dir:
-            rec = {
-                "partition": partition.index,
-                "block": {d: [s.start, s.stop] for d, s in block.items()},
-                "columns": list(self.read_columns),
-                "vars_read": self.read_vars,
+    def read(self, partition) -> Iterator[pa.RecordBatch]:
+        blocks = partition.blocks if isinstance(partition, PackedPartition) else [partition]
+        store_vars = None  # opened once per task, on first use
+        for part in blocks:
+            block = {d: slice(a, b) for d, (a, b) in part.block.items()}
+            if self.read_log_dir:
+                self._log_read(part.index, block)
+            if part.index < 0:
+                continue
+            source = part.arrays
+            if source is None:
+                if store_vars is None:
+                    store_vars = Dataset.open_store(self.store_path, load_coords=False).data_vars
+                source = store_vars
+            arrays = {
+                n: source[n] if isinstance(source[n], np.ndarray) else _var_block(source[n], block)
+                for n in self.read_vars
             }
-            fname = f"read_{partition.index}_{uuid.uuid4().hex}.json"
-            with open(os.path.join(self.read_log_dir, fname), "w") as f:
-                json.dump(rec, f)
-        if partition.index < 0:
-            return iter(())
-        source = partition.arrays
-        if source is None:
-            source = Dataset.open_store(self.store_path).data_vars
-        arrays = {
-            n: source[n] if isinstance(source[n], np.ndarray) else _var_block(source[n], block)
-            for n in self.read_vars
+            block_coords = {d: self.coords[d][block[d]] for d in self.dims}
+            if self.aggregate:
+                batch = partials.block_partials(
+                    arrays, block_coords, self.dims, self.aggregate, block, self.arrow_schema
+                )
+                if batch is not None:
+                    yield batch
+            else:
+                yield from _block_batches(
+                    arrays, block_coords, self.dims, self.read_columns, self.arrow_schema,
+                    self.batch_size,
+                )
+
+    def _log_read(self, index: int, block: dict) -> None:
+        rec = {
+            "partition": index,
+            "block": {d: [s.start, s.stop] for d, s in block.items()},
+            "columns": list(self.read_columns),
+            "vars_read": self.read_vars,
         }
-        return _block_batches(
-            arrays,
-            self.coords,
-            self.dims,
-            self.read_columns,
-            self.arrow_schema,
-            self.pivot_schema,
-            block,
-            self.batch_size,
-        )
+        fname = f"read_{index}_{uuid.uuid4().hex}.json"
+        with open(os.path.join(self.read_log_dir, fname), "w") as f:
+            json.dump(rec, f)
 
 
 def _var_block(var, block: dict) -> np.ndarray:
@@ -289,42 +343,20 @@ def _var_block(var, block: dict) -> np.ndarray:
 
 def _block_batches(
     block_arrays: dict,
-    coords: dict,
+    block_coords: dict,
     dims: tuple,
     read_columns: list,
     arrow_schema: pa.Schema,
-    pivot_schema: pa.Schema,
-    block: dict,
     batch_size: int,
 ) -> Iterator[pa.RecordBatch]:
-    """One partition block's arrays (var -> ndarray, in output order) ->
-    Arrow batches, shared by the batch and streaming readers so
-    projection/reorder compensation stays in sync.
-
-    Pivot synthesis needs every dim; when Spark's read schema prunes or
-    reorders columns, pivot over the full dims+vars schema and project
-    each batch down to the requested column order.
-    """
-    wanted_vars = list(block_arrays)
+    """One block's arrays (var -> ndarray) -> Arrow batches of the columns
+    Spark's read schema asks for, in its order; shared by the batch and
+    streaming readers. Every dim shapes the pivot, but only the requested
+    dims become columns."""
     out_schema = pa.schema(
         [arrow_schema.field(n) for n in read_columns if n in arrow_schema.names]
     )
-    block_coords = {d: coords[d][block[d]] for d in dims}
-    out_dims = tuple(d for d in dims if d in read_columns)
-    if set(out_dims) != set(dims) or list(out_schema.names) != list(dims) + wanted_vars:
-        full_schema = pa.schema(
-            [pivot_schema.field(d) for d in dims]
-            + [pivot_schema.field(v) for v in wanted_vars]
-        )
-        for batch in pivot.iter_record_batches(
-            dims, block_coords, block_arrays, full_schema, batch_size
-        ):
-            arrays = [batch.column(batch.schema.get_field_index(n)) for n in out_schema.names]
-            yield pa.RecordBatch.from_arrays(arrays, schema=out_schema)
-    else:
-        yield from pivot.iter_record_batches(
-            dims, block_coords, block_arrays, out_schema, batch_size
-        )
+    return pivot.iter_record_batches(dims, block_coords, block_arrays, out_schema, batch_size)
 
 
 def make_payload(
@@ -336,6 +368,7 @@ def make_payload(
     read_log_dir: str | None = None,
     var_names: list[str] | None = None,
     columns: list[str] | None = None,
+    aggregate: dict | None = None,
 ) -> dict:
     """Build the payload dict registered through the option file.
 
@@ -344,6 +377,9 @@ def make_payload(
     XarraySession analyzes each query's plan and re-registers pruned scans —
     the data variables dropped here are never read from the store, and their
     bytes never cross the Arrow boundary.
+
+    ``aggregate`` (see ``sources/partials.py``) makes the scan a partial
+    aggregation: the table schema becomes the partial columns.
     """
     ds = dataset if dataset is not None else Dataset.open_store(store)
     if var_names is None:
@@ -367,13 +403,12 @@ def make_payload(
         if not store:
             sub = sub.select_vars(kept_vars)
         var_names = kept_vars
-        full_schema = pa.schema(
-            [full_schema.field(d) for d in dims] + [full_schema.field(v) for v in kept_vars]
-        )
     else:
         schema = full_schema
+    if aggregate is not None:
+        schema = partials.partial_schema(full_schema, aggregate)
     return {
-        "pivot_schema": full_schema,
+        "aggregate": aggregate,
         "dataset": None if store else sub,
         "store": store,
         "chunks": chunks,
@@ -415,7 +450,6 @@ class GridStreamReader(DataSourceStreamReader):
         self.batch_size: int = payload.get("batch_size", pivot.DEFAULT_BATCH_SIZE)
         self.dims: tuple[str, ...] = tuple(payload["dims"])
         self.arrow_schema: pa.Schema = payload["arrow_schema"]
-        self.pivot_schema: pa.Schema = payload.get("pivot_schema", payload["arrow_schema"])
         self.read_columns = [f.name for f in schema.fields]
         self.read_vars = [v for v in payload["var_names"] if v in self.read_columns]
         self.append_dim: str = payload.get("append_dim") or (
@@ -489,14 +523,13 @@ class GridStreamReader(DataSourceStreamReader):
             return
         block = {d: slice(a, b) for d, (a, b) in partition.block.items()}
         ds = Dataset.open_store(self.store_path)
+        coords = _grid_coords(ds, self.dims)
         yield from _block_batches(
             {n: _var_block(ds.data_vars[n], block) for n in self.read_vars},
-            _grid_coords(ds, self.dims),
+            {d: coords[d][block[d]] for d in self.dims},
             self.dims,
             self.read_columns,
             self.arrow_schema,
-            self.pivot_schema,
-            block,
             self.batch_size,
         )
 

@@ -12,6 +12,15 @@
   surface (tests/test_sql.py:405-477).
 - Registered Datasets are tracked in ``_registered_datasets`` — the template
   registry powering the reverse pivot (reference sql.py:15-23).
+- Aggregate shortcuts (``metadata_aggregates``, on by default): one plan
+  walk (``plans.introspect.aggregate_spec``) classifies a root aggregate
+  over one grid scan. A global MIN/MAX/COUNT of dims is answered from the
+  coordinates with no job; a GROUP BY of dims or datetime fields of a
+  time dim, with SUM/AVG/MIN/MAX/COUNT of float variables, runs as a
+  partial-aggregate scan — the reader reduces each block in numpy and
+  Catalyst merges the groups. Anything else runs the engine's plan.
+- Every scan registered here carries the session's core count, so its
+  chunk blocks are packed into about one task per core (grid_source).
 """
 
 from __future__ import annotations
@@ -127,15 +136,17 @@ class XarraySession:
         self._tmpdir = tempfile.mkdtemp(prefix="xgrid_")
         # payload path -> (view name, registration kwargs, full DataFrame)
         self._payload_views: dict[str, tuple[str, dict, DataFrame]] = {}
-        # (view, sorted cols) -> pruned DataFrame (payload pickles reused)
+        # (view, derived-scan key) -> DataFrame of a pruned or partial-
+        # aggregate scan of that view (payload pickles reused)
         self._pruned_cache: dict[tuple[str, tuple[str, ...]], DataFrame] = {}
         # payload path -> DATASET name (full + pruned scans): the identity
         # check behind the pure-scan coordinate fast path (A12) — purity
         # alone must not let a scan of an unrelated table borrow a
         # registered grid's axes
         self._payload_dataset: dict[str, str] = {}
-        # Statistics-aggregate shortcut (A4): on by default; tests that pin
-        # the SCAN path (pruning goldens) turn it off to force real reads.
+        # Aggregate shortcuts (A4 statistics and leaf partial aggregation):
+        # on by default; tests that pin the cell SCAN path (pruning goldens)
+        # turn it off to force the engine's plan.
         self.metadata_aggregates = True
         # store path -> (metadata fingerprint, coords-only Dataset)
         self._meta_ds_cache: dict[str, tuple] = {}
@@ -289,11 +300,15 @@ class XarraySession:
 
     def _scan_df(self, make_payload_kwargs: dict) -> tuple[DataFrame, str]:
         payload = make_payload(**make_payload_kwargs)
-        # Capture whether the session's default collation is binary at
-        # registration time: the DataSource plans in a separate Python
-        # worker with no session handle, and string-dim pruning bounds are
-        # only sound under binary collation (bounds.py).
+        # Capture session facts at registration time: the DataSource plans
+        # in a separate Python worker with no session handle. String-dim
+        # pruning bounds are only sound under binary collation
+        # (bounds.py); the core count and split size drive block packing.
         payload["binary_collation"] = self._binary_collation()
+        payload["cores"] = self.spark.sparkContext.defaultParallelism
+        payload["max_partition_bytes"] = int(
+            self.spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+        )
         path = os.path.join(self._tmpdir, f"payload_{uuid.uuid4().hex}.pkl")
         with open(path, "wb") as f:
             pickle.dump(payload, f)
@@ -396,28 +411,38 @@ class XarraySession:
         return ds, tuple(ds.data_vars[var_names[0]].dims)
 
     def _with_metadata_aggregates(self, df: DataFrame) -> DataFrame | None:
-        # Fail open like the projection-pushdown pass: any surprise here
-        # (a dim with no coordinate array, py4j/Arrow conversion issues)
-        # must mean "run the engine", never a query error.
+        """The aggregate shortcuts: answer ``df`` from coordinate metadata
+        alone, else by partial aggregation in the reader, else None (run
+        the engine). Fail open like the projection-pushdown pass: any
+        surprise here (a dim with no coordinate array, py4j/Arrow
+        conversion issues) must mean "run the engine", never a query
+        error."""
         try:
-            return self._metadata_aggregates_df(df)
+            return self._aggregate_shortcut(df)
         except Exception:
             return None
 
-    def _metadata_aggregates_df(self, df: DataFrame) -> DataFrame | None:
+    def _aggregate_shortcut(self, df: DataFrame) -> DataFrame | None:
         from xarray_sql_spark.plans.introspect import metadata_aggregate_spec
 
         spec = metadata_aggregate_spec(df, self._payload_views)
         if spec is None:
             return None
-        out_names = [f.name for f in df.schema.fields]
-        if len(set(out_names)) != len(out_names):
-            return None  # duplicate output aliases: dict keying would collapse
-        payload, items, preds = spec
-        _view, kwargs, _full = self._payload_views[payload]
+        view, kwargs, _full = self._payload_views[spec.payload]
         ds, dims = self._open_table_meta(kwargs)
-        # Per-dim boolean masks from the filter conjuncts (empty filter ->
-        # full masks). Any conjunct we can't mirror exactly bails.
+        masks = self._dim_masks(ds, dims, spec.preds)
+        if masks is None:
+            return None
+        if not spec.keys and all(
+            fn in ("min", "max", "count", "count_star") and (col is None or col in dims)
+            for fn, col in spec.outputs
+        ):
+            return self._metadata_aggregates_df(df, spec, ds, dims, masks)
+        return self._partial_aggregates_df(df, spec, ds, dims, masks, view, kwargs)
+
+    def _dim_masks(self, ds: Dataset, dims, preds) -> dict[str, np.ndarray] | None:
+        """Per-dim boolean masks of the filter conjuncts (no conjunct on a
+        dim: no mask), or None if any conjunct can't be mirrored exactly."""
         masks: dict[str, np.ndarray] = {}
         for dim, op, lits in preds:
             if dim not in dims or dim not in ds.coords:
@@ -441,17 +466,22 @@ class XarraySession:
             if m is None:
                 return None
             np.logical_and(mask, m, out=mask)
+        return masks
+
+    def _metadata_aggregates_df(self, df, spec, ds, dims, masks) -> DataFrame | None:
+        """A global MIN/MAX/COUNT over dim columns, from the coordinates."""
+        out_names = [f.name for f in df.schema.fields]
+        if len(set(out_names)) != len(out_names):
+            return None  # duplicate output aliases: dict keying would collapse
         total = 1
         for d in dims:
             # ds.sizes covers implicit (coordless) dims too
             total *= int(masks[d].sum()) if d in masks else int(ds.sizes[d])
         values: dict[str, object] = {}
-        for out_name, kind, col in items:
+        for out_name, (kind, col) in zip(out_names, spec.outputs):
             if kind == "count_star":
                 values[out_name] = total
                 continue
-            if col not in dims:
-                return None  # a data variable: needs real chunk reads
             if kind == "count":
                 # COUNT(dim) excludes NULL rows: NaT/NaN coords pivot to SQL
                 # NULL, so the column's own axis contributes its NON-NULL
@@ -499,6 +529,99 @@ class XarraySession:
         pdf = pd.DataFrame({k: [v] for k, v in values.items()})
         pdf = pdf[out_names]
         return self.spark.createDataFrame(pdf, schema=df.schema)
+
+    # -- leaf partial aggregation (Dremel's serving tree) ------------------
+    # A GROUP BY over dim keys (or datetime fields of a time dim) of
+    # SUM/AVG/MIN/MAX/COUNT over float variables: the reader reduces each
+    # block to one row per group in numpy (sources/partials.py) and
+    # Catalyst merges the partials, so groups, not cells, cross the
+    # Python->JVM boundary. The partial scan is cached per (view, spec,
+    # store metadata); the merge is a fresh DataFrame per sql() call, so
+    # every query re-reads the source.
+    def _partial_aggregates_df(
+        self, df, spec, ds, dims, masks, view: str, kwargs: dict
+    ) -> DataFrame | None:
+        from pyspark.sql import functions as F
+
+        for kind, col in spec.keys:
+            if col not in dims:
+                return None
+            if col not in ds.coords:
+                if kind != "col":
+                    return None
+                continue  # implicit positional dim: the reader synthesizes it
+            c = np.asarray(ds.coords[col])
+            if kind != "col" and c.dtype.kind != "M":
+                return None
+            if (c.dtype.kind in "Mm" and np.isnat(c).any()) or (
+                c.dtype.kind == "f" and np.isnan(c).any()
+            ):
+                return None  # NULL keys: let the engine group them
+            if c.dtype.kind in "USO" and not self._binary_collation():
+                return None  # string grouping is collation-dependent
+        var_names = kwargs.get("var_names") or list(ds.data_vars)
+        stats: dict[str, set] = {}
+        for fn, col in spec.outputs:
+            if fn in ("key", "count_star"):
+                continue
+            if col not in var_names or np.dtype(ds.data_vars[col].dtype).kind != "f":
+                return None  # a dim, or an integer/other variable
+            extra = stats.setdefault(col, set())
+            if fn in ("min", "max"):
+                extra.add(fn)
+        agg = {
+            "keys": list(spec.keys),
+            "stats": {v: sorted(e) for v, e in sorted(stats.items())},
+            "rows": any(fn == "count_star" for fn, _c in spec.outputs),
+            "masks": masks,
+        }
+        store = kwargs["store"]
+        key = (
+            view,
+            ("aggregate", spec.keys, tuple((v, tuple(e)) for v, e in agg["stats"].items()),
+             agg["rows"], spec.preds, self._store_meta_fingerprint(store) if store else None),
+        )
+        partial = self._pruned_cache.get(key)
+        if partial is None:
+            cols = sorted({c for _k, c in spec.keys} | set(stats))
+            partial, _path = self._scan_df({**kwargs, "columns": cols, "aggregate": agg})
+            self._pruned_cache[key] = partial
+
+        # The merge is spelled in SQL text: pyspark wraps every Column
+        # method to capture the Python call site, and the first such call
+        # imports IPython into the driver (about 20 MB) when it is installed.
+        var_idx = {v: j for j, v in enumerate(agg["stats"])}
+        merged = []
+        for fn, col in spec.outputs:
+            if fn == "key":
+                continue
+            j = var_idx.get(col)
+            merged.append({
+                "count_star": "coalesce(sum(_rows), 0)",
+                "count": f"coalesce(sum(_n{j}), 0)",
+                # a group with no valid value is SQL NULL, even under ANSI
+                "sum": f"CASE WHEN sum(_n{j}) > 0 THEN sum(_s{j}) END",
+                "avg": f"CASE WHEN sum(_n{j}) > 0 THEN sum(_s{j}) / sum(_n{j}) END",
+                "min": f"min(_mn{j})",
+                "max": f"max(_mx{j})",
+            }[fn])
+        keys = [f"_k{i}" for i in range(len(spec.keys))]
+        out = partial.groupBy(*keys).agg(
+            *[F.expr(f"{e} AS _o{i}") for i, e in enumerate(merged or ["count(1)"])]
+        )
+        cols, i = [], 0
+        for (fn, col), field in zip(spec.outputs, df.schema.fields):
+            if fn == "key":
+                src = f"_k{col}"
+            else:
+                src, i = f"_o{i}", i + 1
+            name = field.name.replace("`", "``")
+            cols.append(f"CAST({src} AS {field.dataType.simpleString()}) AS `{name}`")
+        out = out.selectExpr(*cols)
+        got = [(f.name, f.dataType, f.metadata) for f in out.schema.fields]
+        if got != [(f.name, f.dataType, f.metadata) for f in df.schema.fields]:
+            return None
+        return out
 
     # -- query surface -----------------------------------------------------
     @staticmethod
@@ -627,8 +750,9 @@ class XarraySession:
     # with ZERO data reads, and join planning falls to AQE runtime stats.
     def scan_stats(self, name: str) -> dict:
         """Exact statistics for a registered grid table from chunk metadata:
-        total rows, partition count, per-partition rows, per-dim bounds.
-        Never launches a job or reads a cell."""
+        total rows, chunk-block count (``num_partitions``: blocks, not
+        tasks; a scan packs blocks into up to one task per core), rows per
+        block, per-dim bounds. Never launches a job or reads a cell."""
         from xarray_sql_spark.bounds import dim_bounds
         from xarray_sql_spark.chunks import block_slices, block_num_rows
 

@@ -901,7 +901,7 @@ def _cf_decode_var(arr: ZarrArray, zattrs: dict):
     return CFScaledArray(arr, scale, offset, fills, out_dtype, view_dtype), kept
 
 
-def open_zarr(path: str, decode_cf: bool = True):
+def open_zarr(path: str, decode_cf: bool = True, load_coords: bool = True):
     """Open a Zarr v2 or v3 directory group as a lazy :class:`Dataset`.
 
     Coordinates (1-D arrays whose ``_ARRAY_DIMENSIONS`` / v3
@@ -916,7 +916,11 @@ def open_zarr(path: str, decode_cf: bool = True):
     Gregorian-like integer time coordinates ("hours since ...") decode to
     datetime64[us]; non-Gregorian calendars keep ints + attrs for the
     ``cftime()`` UDF tier; scale_factor/add_offset-packed variables
-    decode lazily per block (:class:`CFScaledArray`)."""
+    decode lazily per block (:class:`CFScaledArray`).
+
+    ``load_coords=False`` leaves the coordinates out (no chunk read, no
+    decode): a scan task that carries its own opens just the data
+    variables."""
     from xarray_sql_spark.dataset import Dataset, Variable
 
     if os.path.isfile(os.path.join(path, "zarr.json")):
@@ -939,6 +943,8 @@ def open_zarr(path: str, decode_cf: bool = True):
         zattrs = dict(zattrs)
         dims = tuple(zattrs.pop(_ARRAY_DIMENSIONS, ()) or (f"dim_{i}" for i in range(len(arr.shape))))
         if dims == (name,) and len(arr.shape) == 1:
+            if not load_coords:
+                continue
             vals = arr.values()
             if vals.dtype == object:  # vlen strings -> fixed U for bounds
                 vals = vals.astype(str)
