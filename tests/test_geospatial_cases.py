@@ -143,6 +143,31 @@ def test_case04_anomaly(xs):
     np.testing.assert_allclose(got, want, rtol=1e-9, atol=1e-9)
 
 
+def test_case04_anomaly_variance_takes_the_lookup_path(xs):
+    """The anomaly self-join reduced to a per-pixel variance: the session
+    answers it as a dense lookup join (the climatology is the small side,
+    gathered per cell in the reader), matching numpy."""
+    from xarray_sql_spark.plans.introspect import aggregate_spec
+
+    q = """
+        WITH clim AS (
+            SELECT lat, lon, hour(time) AS h, AVG(t2m) AS m
+            FROM wx GROUP BY lat, lon, hour(time)
+        )
+        SELECT e.lat, e.lon, AVG((e.t2m - c.m) * (e.t2m - c.m)) AS var
+        FROM wx e JOIN clim c
+          ON hour(e.time) = c.h AND e.lat = c.lat AND e.lon = c.lon
+        GROUP BY e.lat, e.lon
+        """
+    assert aggregate_spec(xs.spark.sql(q), xs._payload_views).lookup is not None
+    assert xs._with_metadata_aggregates(xs.spark.sql(q)) is not None
+    out = xs.sql(q).df.toPandas()
+    got = _grid(out, ["lat", "lon"], "var", (8, 12))
+    clim = T2M.reshape(3, 24, 8, 12).mean(axis=0)
+    want = ((T2M - np.tile(clim, (3, 1, 1))) ** 2).mean(axis=0)
+    np.testing.assert_allclose(got, want, rtol=1e-9, atol=1e-9)
+
+
 # --- 05 forecast skill: timestamp+interval join (reference 05:158-171) ------
 def test_case05_forecast_skill(xs):
     out = xs.sql(

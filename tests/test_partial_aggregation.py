@@ -1,9 +1,11 @@
-"""Leaf partial aggregation (``sources/partials.py``) and block packing.
+"""Leaf partial aggregation (``sources/partials.py``), dense lookup joins
+and block packing.
 
 Every partial-path answer is checked against the engine's answer for the
 same query on the same session with ``metadata_aggregates = False``. The
-read log tells the two paths apart: a partial read's columns are the
-partial columns (``_k0``, ``_s0``, ...), never the table's."""
+read log tells the paths apart: a partial read's columns are the partial
+columns (``_k0``, ``_s0``, ...), never the table's; a lookup join reads its
+small side inside ``sql()`` and its big side only when collected."""
 
 from __future__ import annotations
 
@@ -82,28 +84,33 @@ def _same(fast: list[tuple], slow: list[tuple]) -> bool:
     for r1, r2 in zip(fast, slow):
         for x, y in zip(r1, r2):
             if isinstance(x, float) and isinstance(y, float):
-                if not math.isclose(x, y, rel_tol=1e-12, abs_tol=1e-9):
+                if math.isnan(x) or math.isnan(y):
+                    if not (math.isnan(x) and math.isnan(y)):
+                        return False
+                elif not math.isclose(x, y, rel_tol=1e-12, abs_tol=1e-9):
                     return False
             elif x != y:
                 return False
     return True
 
 
-def _compare(xs, read_log, q: str) -> tuple[list, list[dict]]:
+def _compare(xs, read_log, q: str, ordered: bool = False) -> tuple[list, list[dict]]:
     """Partial-path rows, and the read records of the partial run; asserts
-    the engine agrees (values and schema names/types)."""
+    the engine agrees (values, and schema names, types and nullability).
+    ``ordered``: compare the rows in the order the query returns them."""
+    rows = (lambda df: [tuple(r) for r in df.collect()]) if ordered else _rows
     fast_df = xs.sql(q).df
-    fast = _rows(fast_df)
+    fast = rows(fast_df)
     logs = read_log.drain()
     xs.metadata_aggregates = False
     try:
         slow_df = xs.sql(q).df
-        slow = _rows(slow_df)
+        slow = rows(slow_df)
     finally:
         xs.metadata_aggregates = True
     read_log.drain()
-    assert [(f.name, f.dataType) for f in fast_df.schema] == [
-        (f.name, f.dataType) for f in slow_df.schema
+    assert [(f.name, f.dataType, f.nullable) for f in fast_df.schema] == [
+        (f.name, f.dataType, f.nullable) for f in slow_df.schema
     ], q
     assert _same(fast, slow), (q, fast[:3], slow[:3])
     return fast, logs
@@ -246,8 +253,8 @@ def test_partial_scan_is_cached_but_every_query_rereads(xs, read_log):
 @pytest.mark.parametrize(
     "q",
     [
-        # Sort above the aggregate
-        "SELECT lat, AVG(a) m FROM pa_fb GROUP BY lat ORDER BY lat",
+        # a Limit above the sort
+        "SELECT lat, AVG(a) m FROM pa_fb GROUP BY lat ORDER BY lat LIMIT 2",
         # integer SUM
         "SELECT lat, SUM(k) s FROM pa_fb GROUP BY lat",
         # a data-variable filter
@@ -255,10 +262,12 @@ def test_partial_scan_is_cached_but_every_query_rereads(xs, read_log):
         # a join
         "SELECT x.lat, AVG(x.a) m FROM pa_fb x JOIN pa_fb y "
         "ON x.time = y.time AND x.lat = y.lat AND x.lon = y.lon GROUP BY x.lat",
-        # HAVING (a Filter above the aggregate)
-        "SELECT lat, AVG(a) m FROM pa_fb GROUP BY lat HAVING AVG(a) > 0",
-        # an aggregate of an expression
-        "SELECT lat, AVG(a * 2) m FROM pa_fb GROUP BY lat",
+        # HAVING over an aggregate the reader cannot answer
+        "SELECT lat, AVG(a) m FROM pa_fb GROUP BY lat HAVING SUM(k) > 0",
+        # division by a column (Spark's x / 0 is NULL, numpy's inf)
+        "SELECT lat, AVG(a / b) m FROM pa_fb GROUP BY lat",
+        # a function outside + - * /
+        "SELECT lat, AVG(abs(a)) m FROM pa_fb GROUP BY lat",
     ],
 )
 def test_fallbacks_run_the_engine(xs, read_log, q):
@@ -267,6 +276,210 @@ def test_fallbacks_run_the_engine(xs, read_log, q):
     assert xs._with_metadata_aggregates(xs.spark.sql(q)) is None
     _rows_, logs = _compare(xs, read_log, q)
     assert logs and not _is_partial(logs)
+
+
+# --- expression aggregates, ORDER BY and HAVING --------------------------------
+EXPRS = {
+    "add": "a + b",
+    "sub": "a - 280.5",
+    "mul_float32": "a * a",
+    "mul_literal": "a * 2",
+    "mul_float64": "b * 2.0",
+    "neg": "-a",
+    "div": "b / 4.0",
+    "cast": "CAST(a AS DOUBLE) - CAST(-a AS DOUBLE)",
+    "nested": "(a - b) * 2.5 + -b / -3",
+}
+
+
+@pytest.mark.parametrize("name", sorted(EXPRS))
+def test_expression_aggregates_match_the_engine(xs, read_log, name):
+    """Each expression op over the float32 ``a`` and the float64 ``b``,
+    under every aggregate (MIN/MAX of a float32 expression stay float)."""
+    xs.from_dataset("pa_ex", grid(), chunks={"time": 24}, read_log_dir=read_log.dir)
+    read_log.drain()
+    e = EXPRS[name]
+    rows, logs = _compare(
+        xs, read_log,
+        f"SELECT lat, SUM({e}) s, AVG({e}) m, MIN({e}) lo, MAX({e}) hi, COUNT({e}) n, "
+        f"COUNT(*) c FROM pa_ex GROUP BY lat",
+    )
+    assert rows and _is_partial(logs)
+
+
+def test_computed_nan_is_a_value_and_null_is_not(xs, read_log):
+    """inf - inf is NaN in Spark, not NULL: it counts, poisons SUM/AVG and
+    MAX, and is a MIN only of a group holding nothing else. NaN cells stay
+    NULL through every expression, and float32 overflow is float32's."""
+    time = np.datetime64("2021-01-01T00", "ns") + np.arange(6) * np.timedelta64(1, "h")
+    p = np.array([[1.0, np.inf], [np.inf, np.nan], [-np.inf, 2.0], [3e38, np.nan],
+                  [np.inf, np.inf], [np.nan, np.nan]], dtype=np.float32)
+    q = np.array([[1.0, 2.0], [np.inf, 0.5], [np.nan, -1.0], [1.0, 1.0],
+                  [np.inf, -np.inf], [np.nan, 4.0]])
+    ds = Dataset(
+        {"p": Variable(("time", "x"), p), "q": Variable(("time", "x"), q)},
+        {"time": time, "x": np.array([0, 1], dtype=np.int64)},
+    )
+    xs.from_dataset("pa_inf", ds, chunks={"time": 2}, read_log_dir=read_log.dir)
+    read_log.drain()
+    for e in ("p - p", "p * p", "p + q", "q - q", "p * 0.0", "-p + p"):
+        rows, logs = _compare(
+            xs, read_log,
+            f"SELECT x, SUM({e}) s, AVG({e}) m, MIN({e}) lo, MAX({e}) hi, COUNT({e}) n "
+            f"FROM pa_inf GROUP BY x",
+        )
+        assert _is_partial(logs), e
+    rows, _logs = _compare(xs, read_log, "SELECT MAX(p - p) hi, MIN(p - p) lo FROM pa_inf")
+    assert math.isnan(rows[0][0]) and rows[0][1] == 0.0
+
+
+@pytest.mark.parametrize(
+    "q",
+    [
+        "SELECT lat, AVG(a) m FROM pa_so GROUP BY lat ORDER BY lat",
+        "SELECT lat, AVG(a) m FROM pa_so GROUP BY lat ORDER BY m DESC NULLS LAST, lat",
+        "SELECT lat, AVG(a) m FROM pa_so GROUP BY lat HAVING AVG(a) > 0",
+        "SELECT lat, AVG(a) m FROM pa_so GROUP BY lat HAVING MAX(b) > 0 ORDER BY m DESC",
+        "SELECT hour(time) h, SUM(b) s FROM pa_so GROUP BY 1 "
+        "HAVING SUM(b) > -1 AND NOT (h IN (3, 4)) OR h = 4 ORDER BY s",
+    ],
+)
+def test_sort_and_having_run_over_the_merged_groups(xs, read_log, q):
+    xs.from_dataset("pa_so", grid(), chunks={"time": 24}, read_log_dir=read_log.dir)
+    read_log.drain()
+    rows, logs = _compare(xs, read_log, q, ordered="ORDER BY" in q)
+    assert rows and _is_partial(logs)
+
+
+# --- dense lookup joins ----------------------------------------------------------
+ANOMALY = (
+    "WITH clim AS (SELECT hour(time) AS h, lat, lon, AVG(a) AS a, AVG(b) AS b "
+    "FROM {t} {where} GROUP BY hour(time), lat, lon) "
+    "SELECT e.lat, e.lon, AVG((e.a - c.a) * (e.a - c.a)) AS va, "
+    "AVG((e.b - c.b) * (e.b - c.b)) AS vb, SUM(e.a * c.b) AS x, MIN(e.a - c.a) AS lo, "
+    "MAX(-c.b) AS hi, COUNT(*) AS n "
+    "FROM {t} e JOIN clim c ON hour(e.time) = c.h AND e.lat = c.lat AND e.lon = c.lon "
+    "GROUP BY e.lat, e.lon"
+)
+
+
+def _lookup_reads(xs, read_log, q: str, nblocks: int) -> list:
+    """Runs ``q`` on the lookup path and checks its read-log signature: the
+    small side's blocks are read inside ``sql()``, the big side's only
+    when the result is collected, both as partial reads."""
+    df = xs.sql(q).df
+    small = read_log.drain()
+    assert len(small) == nblocks and _is_partial(small)
+    rows = _rows(df)
+    big = read_log.drain()
+    assert len(big) == nblocks and _is_partial(big)
+    assert {tuple(r["columns"]) for r in big} != {tuple(r["columns"]) for r in small}
+    return rows
+
+
+@pytest.mark.parametrize("backing", ["memory", "store"])
+def test_anomaly_self_join_runs_as_a_lookup(xs, read_log, tmp_path, backing):
+    ds = grid()
+    if backing == "store":
+        path = write_zarr(ds, str(tmp_path / "an.zarr"), chunks={"time": 24})
+        xs.from_dataset("pa_an", Dataset.open_store(path), chunks={"time": 24}, store=path,
+                        read_log_dir=read_log.dir)
+    else:
+        xs.from_dataset("pa_an", ds, chunks={"time": 24}, read_log_dir=read_log.dir)
+    read_log.drain()
+    q = ANOMALY.format(t="pa_an", where="")
+    rows = _lookup_reads(xs, read_log, q, 3)
+    fast, _logs = _compare(xs, read_log, q)
+    assert _same(rows, fast)
+    assert all(r[-1] == 72 for r in rows)  # every cell matched
+
+
+def test_missing_keys_drop_cells(xs, read_log):
+    """A small side filtered to hours 0-5 holds a quarter of the keys: the
+    other cells have no match and are not rows, so COUNT(*) skips them."""
+    xs.from_dataset("pa_mk", grid(), chunks={"time": 24}, read_log_dir=read_log.dir)
+    read_log.drain()
+    q = ANOMALY.format(t="pa_mk", where="WHERE hour(time) < 6")
+    _lookup_reads(xs, read_log, q, 3)
+    rows, _logs = _compare(xs, read_log, q)
+    assert rows and all(r[-1] == 3 * 6 for r in rows)
+    # no key at all: an empty grouped result, and a global row of NULLs
+    q = ANOMALY.format(t="pa_mk", where="WHERE lat > 50")
+    assert _compare(xs, read_log, q)[0] == []
+    rows, _logs = _compare(
+        xs, read_log,
+        "WITH c AS (SELECT lat, AVG(a) m FROM pa_mk WHERE lat > 50 GROUP BY lat) "
+        "SELECT SUM(e.a - c.m) s, COUNT(*) n FROM pa_mk e JOIN c ON e.lat = c.lat",
+    )
+    assert rows == [(None, 0)]
+
+
+def test_small_side_from_a_second_grid(xs, read_log):
+    g = grid()
+    w = np.arange(12, dtype=np.float64).reshape(4, 3) - 5.0
+    w[0, 0] = np.nan  # a NULL small-side value
+    xs.from_dataset("pa_big", g, chunks={"time": 24}, read_log_dir=read_log.dir)
+    xs.from_dataset(
+        "pa_w", Dataset({"w": Variable(("lat", "lon"), w)},
+                        {"lat": g.coords["lat"], "lon": g.coords["lon"]}),
+        read_log_dir=read_log.dir,
+    )
+    read_log.drain()
+    q = (
+        "WITH s AS (SELECT lat, lon, AVG(w) AS w FROM pa_w GROUP BY lat, lon) "
+        "SELECT hour(e.time) h, SUM(e.b * s.w) x, AVG(e.a + s.w) m, COUNT(*) n "
+        "FROM pa_big e JOIN s ON e.lat = s.lat AND e.lon = s.lon "
+        "WHERE e.time >= TIMESTAMP '2021-03-02 00:00:00' GROUP BY 1 HAVING COUNT(*) > 0 "
+        "ORDER BY h"
+    )
+    df = xs.sql(q).df
+    assert len(read_log.drain()) == 1  # the small grid: one block
+    fast = [tuple(r) for r in df.collect()]
+    assert _is_partial(read_log.drain())
+    rows, _logs = _compare(xs, read_log, q, ordered=True)
+    assert _same(fast, rows) and len(rows) == 24
+
+
+@pytest.mark.parametrize(
+    "q",
+    [
+        # LEFT and FULL OUTER joins keep unmatched cells
+        ANOMALY.format(t="pa_jf", where="WHERE hour(time) < 6").replace(" JOIN ", " LEFT JOIN "),
+        ANOMALY.format(t="pa_jf", where="").replace(" JOIN ", " FULL OUTER JOIN "),
+        # an extra non-equi condition
+        ANOMALY.format(t="pa_jf", where="").replace("e.lon = c.lon", "e.lon = c.lon AND e.a > c.a"),
+        # the small side grouped by more keys than are joined: duplicate keys
+        "WITH c AS (SELECT lat, lon, AVG(a) AS a FROM pa_jf GROUP BY lat, lon) "
+        "SELECT e.time, SUM(e.a - c.a) s FROM pa_jf e JOIN c ON e.lat = c.lat GROUP BY e.time",
+        # a raw-scan small side
+        "SELECT e.lat, SUM(e.a - c.b) s FROM pa_jf e JOIN pa_jf c "
+        "ON e.time = c.time AND e.lat = c.lat AND e.lon = c.lon GROUP BY e.lat",
+    ],
+)
+def test_lookup_fallbacks_run_the_engine(xs, read_log, q):
+    xs.from_dataset("pa_jf", grid(), chunks={"time": 24}, read_log_dir=read_log.dir)
+    read_log.drain()
+    assert xs._with_metadata_aggregates(xs.spark.sql(q)) is None
+    assert read_log.drain() == []  # no small side ran
+    _rows_, logs = _compare(xs, read_log, q)
+    assert logs and not _is_partial(logs)
+
+
+def test_lookup_needs_a_broadcast_sized_key_space(xs, spark, read_log):
+    xs.from_dataset("pa_th", grid(), chunks={"time": 24}, read_log_dir=read_log.dir)
+    read_log.drain()
+    q = ANOMALY.format(t="pa_th", where="")
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        # 24 hours x 4 lats x 3 lons, 2 small-side value columns of 8 B
+        for threshold in ("-1", str(24 * 4 * 3 * 2 * 8 - 1)):
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+            assert xs._with_metadata_aggregates(xs.spark.sql(q)) is None, threshold
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(24 * 4 * 3 * 2 * 8))
+        assert xs._with_metadata_aggregates(xs.spark.sql(q)) is not None
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    read_log.drain()
 
 
 # --- numpy block reduction -----------------------------------------------------

@@ -10,12 +10,14 @@ Design mapping (SURVEY.md §2A):
   payload without them keeps one block per partition). ``read()`` yields
   Arrow RecordBatches block by block (Arrow path: no row-by-row Python
   serialization), opening a store once per partition and reading only the
-  data-variable blocks: the reader already carries the coordinates.
+  data-variable blocks: each partition carries its own block's coordinates.
 - Partial aggregation: a payload with an ``aggregate`` entry (written by
   ``XarraySession`` for a GROUP BY it can answer, ``sources/partials.py``)
-  turns each block into one row per group it holds — keys, float64 sum,
-  non-NaN count, min/max — and Catalyst merges the partials; blocks whose
-  cells all fail the filter's coordinate masks are never read.
+  turns each block into one row per group it holds — keys, float64 sums
+  of expressions, non-null counts, min/max — and Catalyst merges the
+  partials; blocks whose cells all fail the filter's coordinate masks are
+  never read. Under a dense lookup join the aggregate also carries the
+  small side's values, which each block gathers per cell.
 - A2 pruning: ``pushFilters`` receives Catalyst's convertible predicates,
   prunes partitions by per-dim bounds, and returns ALL filters unhandled so
   Spark re-applies them row-level — exactly the reference's Inexact contract
@@ -30,10 +32,13 @@ Design mapping (SURVEY.md §2A):
   data-variable bytes are first read inside executor ``read()`` calls
   (reference property: tests/test_reader.py:71-305).
 - Task payload: pyspark pickles the data source and reader into every
-  task. Both pickle without planning state or grid data, and an in-memory
-  registration's partition carries only its own block (a numpy view at
-  planning; the pickle copies just the block), so a task's payload is its
-  block plus O(1). ``zipguard`` removes the other fixed per-call cost.
+  task. Both pickle without planning state, grid data or whole-dim arrays
+  (coordinates, filter masks, lookup offsets); a partition carries only
+  its own block's share of them, and an in-memory registration's
+  partition its own block of data (a numpy view at planning; the pickle
+  copies just the block), so a task's payload is its block plus O(1) —
+  plus, under a lookup join, the small side's dense values.
+  ``zipguard`` removes the other fixed per-call cost.
 
 Observability: pass ``read_log_dir`` to record one JSON file per block
 read (its own block index, also inside a packed partition) with the block
@@ -76,13 +81,23 @@ FORMAT_NAME = "xgrid"
 
 class GridPartition(InputPartition):
     def __init__(
-        self, index: int, block: dict[str, tuple[int, int]], arrays: dict | None = None
+        self,
+        index: int,
+        block: dict[str, tuple[int, int]],
+        arrays: dict | None = None,
+        coords: dict | None = None,
+        axes: dict | None = None,
     ):
         self.index = index
         self.block = block  # dim -> (start, stop)
         # In-memory registrations: var -> this block's data (a numpy view,
         # or a lazy variable read inside the task). None: read the store.
         self.arrays = arrays
+        # dim -> this block's coordinates (batch scans; None: the reader
+        # derives them), and a partial scan's per-dim arrays cut to the
+        # block (partials.block_axes)
+        self.coords = coords
+        self.axes = axes
 
 
 class PackedPartition(InputPartition):
@@ -201,7 +216,7 @@ class GridReader(DataSourceReader):
         # partial columns; the aggregate names the variables to read.
         self.aggregate: dict | None = payload.get("aggregate")
         if self.aggregate:
-            self.read_vars = list(self.aggregate["stats"])
+            self.read_vars = partials.read_vars(self.aggregate)
         else:
             self.read_vars = [v for v in payload["var_names"] if v in self.read_columns]
         # String-dim pruning is sound only under binary collation; the
@@ -237,12 +252,15 @@ class GridReader(DataSourceReader):
 
     def __getstate__(self):
         # pyspark pickles the reader into the planner's answer and every
-        # task: leave out the planning state and the in-memory grid (each
-        # partition carries its own block), so the payload is O(1) in the
-        # grid's data size.
-        planner_only = ("_blocks", "_bounds", "_filters", "_cell_bytes")
+        # task: leave out the planning state, the in-memory grid and every
+        # whole-dim array (each partition carries its own block's data,
+        # coordinates and aggregate axes), so the payload is O(1) in the
+        # grid's size.
+        planner_only = ("_blocks", "_bounds", "_filters", "_cell_bytes", "coords")
         state = {k: v for k, v in self.__dict__.items() if k not in planner_only}
         state["dataset"] = None
+        if self.aggregate:
+            state["aggregate"] = partials.without_axes(self.aggregate)
         return state
 
     # -- pruning (A2) ------------------------------------------------------
@@ -262,7 +280,11 @@ class GridReader(DataSourceReader):
             ) and partials.block_has_cells(masks, block):
                 parts.append(
                     GridPartition(
-                        i, {d: (s.start, s.stop) for d, s in block.items()}, self._inline(block)
+                        i,
+                        {d: (s.start, s.stop) for d, s in block.items()},
+                        self._inline(block),
+                        {d: self.coords[d][block[d]] for d in self.dims},
+                        partials.block_axes(self.aggregate, block) if self.aggregate else None,
                     )
                 )
                 cells += chunklib.block_num_rows(block)
@@ -311,16 +333,15 @@ class GridReader(DataSourceReader):
                 n: source[n] if isinstance(source[n], np.ndarray) else _var_block(source[n], block)
                 for n in self.read_vars
             }
-            block_coords = {d: self.coords[d][block[d]] for d in self.dims}
             if self.aggregate:
                 batch = partials.block_partials(
-                    arrays, block_coords, self.dims, self.aggregate, block, self.arrow_schema
+                    arrays, part.coords, self.dims, self.aggregate, part.axes, self.arrow_schema
                 )
                 if batch is not None:
                     yield batch
             else:
                 yield from _block_batches(
-                    arrays, block_coords, self.dims, self.read_columns, self.arrow_schema,
+                    arrays, part.coords, self.dims, self.read_columns, self.arrow_schema,
                     self.batch_size,
                 )
 

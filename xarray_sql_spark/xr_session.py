@@ -13,18 +13,30 @@
 - Registered Datasets are tracked in ``_registered_datasets`` — the template
   registry powering the reverse pivot (reference sql.py:15-23).
 - Aggregate shortcuts (``metadata_aggregates``, on by default): one plan
-  walk (``plans.introspect.aggregate_spec``) classifies a root aggregate
-  over one grid scan. A global MIN/MAX/COUNT of dims is answered from the
-  coordinates with no job; a GROUP BY of dims or datetime fields of a
-  time dim, with SUM/AVG/MIN/MAX/COUNT of float variables, runs as a
-  partial-aggregate scan — the reader reduces each block in numpy and
-  Catalyst merges the groups. Anything else runs the engine's plan.
+  walk (``plans.introspect.aggregate_spec``) classifies an aggregate over
+  one grid scan, under any ORDER BY / HAVING that reads only its outputs.
+  A global MIN/MAX/COUNT of dims is answered from the coordinates with no
+  job. A GROUP BY of dims or datetime fields of a time dim, with
+  SUM/AVG/MIN/MAX/COUNT of float variables or of ``+ - *`` / unary minus /
+  literal / cast-to-double / divide-by-nonzero-literal expressions of
+  them, runs as a partial-aggregate scan: the reader reduces each block in
+  numpy, Catalyst merges the groups, and the ORDER BY / HAVING run over
+  the merged groups. An aggregate over an inner equi-join of a grid scan
+  with such an aggregate, keyed exactly by the join keys, runs as a dense
+  lookup join: ``sql()`` itself runs the small side (a job, before any
+  action) and ships its values in the big side's partial scan, whose
+  reader gathers them per cell. Anything else runs the engine's plan:
+  outer joins, extra join conditions, duplicate small-side keys, raw-scan
+  small sides, a key space over ``spark.sql.autoBroadcastJoinThreshold``
+  (or -1), LIMIT, other functions, integer variables, data-variable
+  filters.
 - Every scan registered here carries the session's core count, so its
   chunk blocks are packed into about one task per core (grid_source).
 """
 
 from __future__ import annotations
 
+import json
 import os
 import pickle
 import re
@@ -102,6 +114,22 @@ def _coord_predicate_mask(coords: np.ndarray, op: str, lits) -> np.ndarray | Non
             return None
         return np.isin(cv, cast)
     return None
+
+
+def _join_key_values(values: np.ndarray, kind: str) -> np.ndarray:
+    """Join-key values in one comparable domain: a datetime field of
+    datetimes as int64, datetimes as microseconds (the pivot's precision),
+    floats as float64 with -0.0 folded into 0.0 (as Spark's
+    normalizenanandzero does; NaN keys never get here)."""
+    from xarray_sql_spark.sources.partials import datetime_field
+
+    if kind != "col":
+        return datetime_field(values, kind).astype(np.int64)
+    if values.dtype.kind == "M":
+        return values.astype("datetime64[us]").astype(np.int64)
+    if values.dtype.kind == "f":
+        return values.astype(np.float64) + 0.0
+    return values.astype(np.int64)
 
 
 def _group_vars_by_dims(ds: Dataset) -> dict[tuple[str, ...], list[str]]:
@@ -433,21 +461,40 @@ class XarraySession:
         masks = self._dim_masks(ds, dims, spec.preds)
         if masks is None:
             return None
-        if not spec.keys and all(
-            fn in ("min", "max", "count", "count_star") and (col is None or col in dims)
-            for fn, col in spec.outputs
+        if (
+            spec.lookup is None
+            and not spec.above
+            and not spec.keys
+            and spec.select == tuple(range(len(spec.outputs)))
+            and all(
+                fn in ("min", "max", "count", "count_star") and (arg is None or arg in dims)
+                for fn, arg in spec.outputs
+            )
         ):
             return self._metadata_aggregates_df(df, spec, ds, dims, masks)
-        return self._partial_aggregates_df(df, spec, ds, dims, masks, view, kwargs)
+        lookup = None
+        if spec.lookup is not None:
+            lookup = self._lookup_arrays(spec, ds, dims)
+            if lookup is None:
+                return None
+        merged = self._merged_aggregate(spec, ds, dims, masks, view, kwargs, lookup)
+        return None if merged is None else self._select_as(merged, spec.select, df.schema)
 
     def _dim_masks(self, ds: Dataset, dims, preds) -> dict[str, np.ndarray] | None:
         """Per-dim boolean masks of the filter conjuncts (no conjunct on a
-        dim: no mask), or None if any conjunct can't be mirrored exactly."""
+        dim: no mask), or None if any conjunct can't be mirrored exactly.
+        A conjunct's term is a dim or a datetime field of a datetime dim."""
+        from xarray_sql_spark.sources.partials import datetime_field
+
         masks: dict[str, np.ndarray] = {}
-        for dim, op, lits in preds:
+        for (kind, dim), op, lits in preds:
             if dim not in dims or dim not in ds.coords:
                 return None  # a data variable, or an implicit coordless dim
             coords = np.asarray(ds.coords[dim])
+            if kind != "col":
+                if coords.dtype.kind != "M" or np.isnat(coords).any():
+                    return None
+                coords = datetime_field(coords, kind)
             if coords.dtype.kind in "US" and not self._binary_collation():
                 # numpy compares strings by code point; a collation-aware
                 # session default (e.g. UTF8_LCASE) compares differently,
@@ -531,17 +578,25 @@ class XarraySession:
         return self.spark.createDataFrame(pdf, schema=df.schema)
 
     # -- leaf partial aggregation (Dremel's serving tree) ------------------
-    # A GROUP BY over dim keys (or datetime fields of a time dim) of
-    # SUM/AVG/MIN/MAX/COUNT over float variables: the reader reduces each
-    # block to one row per group in numpy (sources/partials.py) and
-    # Catalyst merges the partials, so groups, not cells, cross the
-    # Python->JVM boundary. The partial scan is cached per (view, spec,
-    # store metadata); the merge is a fresh DataFrame per sql() call, so
-    # every query re-reads the source.
-    def _partial_aggregates_df(
-        self, df, spec, ds, dims, masks, view: str, kwargs: dict
+    # An aggregate over dim keys (or datetime fields of a time dim) of
+    # SUM/AVG/MIN/MAX/COUNT over expressions of float variables: the reader
+    # reduces each block to one row per group in numpy (sources/partials.py)
+    # and Catalyst merges the partials, so groups, not cells, cross the
+    # Python->JVM boundary; HAVING and ORDER BY then run over the merged
+    # groups. The partial scan is cached per (view, spec, store metadata);
+    # the merge is a fresh DataFrame per sql() call, so every query re-reads
+    # the source.
+    def _merged_aggregate(
+        self, spec, ds, dims, masks, view: str, kwargs: dict, lookup: dict | None = None
     ) -> DataFrame | None:
+        """Output ``i`` of ``spec``'s Aggregate node as column ``_a{i}``,
+        merged from a partial scan, with the Filter and Sort nodes above it
+        applied; None when the reader cannot answer ``spec``. ``lookup``
+        (:meth:`_lookup_arrays`) makes the scan a dense lookup join."""
         from pyspark.sql import functions as F
+        from pyspark.sql.types import StructType
+
+        from xarray_sql_spark.sources import partials
 
         for kind, col in spec.keys:
             if col not in dims:
@@ -560,43 +615,67 @@ class XarraySession:
             if c.dtype.kind in "USO" and not self._binary_collation():
                 return None  # string grouping is collation-dependent
         var_names = kwargs.get("var_names") or list(ds.data_vars)
-        stats: dict[str, set] = {}
-        for fn, col in spec.outputs:
+
+        def is_float(v):
+            return v in var_names and np.dtype(ds.data_vars[v].dtype).kind == "f"
+
+        stats: dict = {}  # expression tree -> extra stats
+        trees = []
+        for fn, arg in spec.outputs:
+            tree = arg
             if fn in ("key", "count_star"):
-                continue
-            if col not in var_names or np.dtype(ds.data_vars[col].dtype).kind != "f":
-                return None  # a dim, or an integer/other variable
-            extra = stats.setdefault(col, set())
-            if fn in ("min", "max"):
-                extra.add(fn)
+                tree = None
+            elif isinstance(arg, str):
+                if not is_float(arg):
+                    return None  # a dim, or an integer/other variable
+                wide = np.dtype(ds.data_vars[arg].dtype).itemsize == 8
+                tree = ("var", "float64" if wide else "float32", arg)
+            elif not all(is_float(v) for v in partials.tree_leaves(arg, "var")):
+                return None
+            if tree is not None:
+                extra = stats.setdefault(tree, set())
+                if fn in ("min", "max"):
+                    extra.add(fn)
+            trees.append(tree)
+        fields = StructType.fromJson(json.loads(spec.schema)).fields
+        key_nullable = [False] * len(spec.keys)
+        for (fn, arg), f in zip(spec.outputs, fields):
+            if fn == "key":
+                key_nullable[arg] = key_nullable[arg] or f.nullable
         agg = {
             "keys": list(spec.keys),
-            "stats": {v: sorted(e) for v, e in sorted(stats.items())},
-            "rows": any(fn == "count_star" for fn, _c in spec.outputs),
+            "key_nullable": key_nullable,
+            "stats": [(t, sorted(e)) for t, e in stats.items()],
+            "rows": any(fn == "count_star" for fn, _a in spec.outputs),
             "masks": masks,
+            "lookup": lookup,
         }
-        store = kwargs["store"]
-        key = (
-            view,
-            ("aggregate", spec.keys, tuple((v, tuple(e)) for v, e in agg["stats"].items()),
-             agg["rows"], spec.preds, self._store_meta_fingerprint(store) if store else None),
-        )
-        partial = self._pruned_cache.get(key)
-        if partial is None:
-            cols = sorted({c for _k, c in spec.keys} | set(stats))
-            partial, _path = self._scan_df({**kwargs, "columns": cols, "aggregate": agg})
-            self._pruned_cache[key] = partial
+        cols = sorted({c for _k, c in spec.keys} | set(partials.read_vars(agg)))
+        scan_kwargs = {**kwargs, "columns": cols, "aggregate": agg}
+        if lookup is not None:
+            # the small side's values are data: a fresh scan per query
+            partial, _path = self._scan_df(scan_kwargs)
+        else:
+            store = kwargs["store"]
+            key = (
+                view,
+                ("aggregate", spec.keys, tuple(key_nullable),
+                 tuple((t, tuple(e)) for t, e in agg["stats"]), agg["rows"], spec.preds,
+                 self._store_meta_fingerprint(store) if store else None),
+            )
+            partial = self._pruned_cache.get(key)
+            if partial is None:
+                partial, _path = self._scan_df(scan_kwargs)
+                self._pruned_cache[key] = partial
 
         # The merge is spelled in SQL text: pyspark wraps every Column
         # method to capture the Python call site, and the first such call
         # imports IPython into the driver (about 20 MB) when it is installed.
-        var_idx = {v: j for j, v in enumerate(agg["stats"])}
+        stat_idx = {t: j for j, (t, _e) in enumerate(agg["stats"])}
         merged = []
-        for fn, col in spec.outputs:
-            if fn == "key":
-                continue
-            j = var_idx.get(col)
-            merged.append({
+        for (fn, arg), tree, f in zip(spec.outputs, trees, fields):
+            j = stat_idx.get(tree)
+            e = f"_k{arg}" if fn == "key" else {
                 "count_star": "coalesce(sum(_rows), 0)",
                 "count": f"coalesce(sum(_n{j}), 0)",
                 # a group with no valid value is SQL NULL, even under ANSI
@@ -604,24 +683,123 @@ class XarraySession:
                 "avg": f"CASE WHEN sum(_n{j}) > 0 THEN sum(_s{j}) / sum(_n{j}) END",
                 "min": f"min(_mn{j})",
                 "max": f"max(_mx{j})",
-            }[fn])
+            }[fn]
+            merged.append(F.expr(f"CAST({e} AS {f.dataType.simpleString()}) AS _a{len(merged)}"))
         keys = [f"_k{i}" for i in range(len(spec.keys))]
-        out = partial.groupBy(*keys).agg(
-            *[F.expr(f"{e} AS _o{i}") for i, e in enumerate(merged or ["count(1)"])]
-        )
-        cols, i = [], 0
-        for (fn, col), field in zip(spec.outputs, df.schema.fields):
-            if fn == "key":
-                src = f"_k{col}"
-            else:
-                src, i = f"_o{i}", i + 1
-            name = field.name.replace("`", "``")
-            cols.append(f"CAST({src} AS {field.dataType.simpleString()}) AS `{name}`")
-        out = out.selectExpr(*cols)
-        got = [(f.name, f.dataType, f.metadata) for f in out.schema.fields]
-        if got != [(f.name, f.dataType, f.metadata) for f in df.schema.fields]:
-            return None
+        out = partial.groupBy(*keys).agg(*merged)
+        for op, arg in spec.above:
+            out = out.filter(arg) if op == "filter" else self._sorted(out, arg)
         return out
+
+    def _jcols(self, df: DataFrame, method: str, jcols) -> DataFrame:
+        """``df.<method>(jcols)`` over JVM columns: the Column-free
+        spelling (see the merge above) of a sort or a select."""
+        from pyspark.sql.classic.column import _to_seq
+
+        return DataFrame(
+            getattr(df._jdf, method)(_to_seq(self.spark.sparkContext, jcols)), self.spark
+        )
+
+    def _sorted(self, df: DataFrame, orders) -> DataFrame:
+        """``df`` ordered by ``(sql, "ASC"|"DESC", "NULLS FIRST"|"NULLS LAST")`` keys."""
+        fns = self.spark._jvm.org.apache.spark.sql.functions
+        return self._jcols(df, "sort", [
+            getattr(fns.expr(sql), f"{d}_{n.replace(' ', '_')}".lower())()
+            for sql, d, n in orders
+        ])
+
+    def _select_as(self, merged: DataFrame, select, schema) -> DataFrame | None:
+        """Result column ``j`` as ``_a{select[j]}``, named and annotated as
+        ``schema``'s field ``j``; None unless the result's schema then
+        equals ``schema``, nullability and metadata included."""
+        # one py4j lookup per class: each dotted step of a JVM path is a
+        # round trip
+        col = self.spark._jvm.org.apache.spark.sql.functions.col
+        metadata = self.spark._jvm.org.apache.spark.sql.types.Metadata.fromJson
+        out = self._jcols(merged, "select", [
+            getattr(col(f"_a{i}"), "as")(f.name, metadata(json.dumps(f.metadata)))
+            for i, f in zip(select, schema.fields)
+        ])
+
+        def shape(s):
+            return [(f.name, f.dataType, f.nullable, f.metadata) for f in s.fields]
+
+        return out if shape(out.schema) == shape(schema) else None
+
+    # -- dense lookup joins (F1 Query's lookup join) -----------------------
+    # An aggregate over an inner equi-join of a grid scan with a small
+    # aggregate keyed exactly by the join keys: sql() runs the small side
+    # first (itself a partial aggregate), collects it as Arrow and scatters
+    # it into dense arrays indexed by key position, bounded from the big
+    # side's coordinates by spark.sql.autoBroadcastJoinThreshold. The big
+    # side's reader then gathers the small side's values per cell, drops
+    # cells without a match, and emits partial aggregates as above.
+    def _lookup_arrays(self, spec, ds, dims) -> dict | None:
+        """The ``lookup`` entry of ``spec``'s partial scan (see
+        sources/partials.py), or None to run the engine."""
+        from xarray_sql_spark.sources.partials import tree_leaves
+
+        lk = spec.lookup
+        per_key = []  # (dim, key position per coordinate, key values)
+        for kind, dim in (k for k, _i in lk.keys):
+            if dim not in dims or dim not in ds.coords:
+                return None
+            c = np.asarray(ds.coords[dim])
+            if c.dtype.kind not in "iufM" or (kind != "col" and c.dtype.kind != "M"):
+                return None
+            if (c.dtype.kind == "f" and np.isnan(c).any()) or (
+                c.dtype.kind == "M" and np.isnat(c).any()
+            ):
+                return None
+            uniq, inv = np.unique(_join_key_values(c, kind), return_inverse=True)
+            per_key.append((dim, inv.reshape(-1), uniq))
+        shape = tuple(len(u) for _d, _i, u in per_key)
+        size = int(np.prod(shape))
+        looks = sorted({
+            i for _fn, arg in spec.outputs if isinstance(arg, tuple)
+            for i in tree_leaves(arg, "look")
+        })
+        threshold = self.spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+        if threshold < 0 or size * max(len(looks), 1) * 8 > threshold:
+            return None
+
+        small = lk.small
+        sview, skwargs, _full = self._payload_views[small.payload]
+        sds, sdims = self._open_table_meta(skwargs)
+        smasks = self._dim_masks(sds, sdims, small.preds)
+        if smasks is None:
+            return None
+        merged = self._merged_aggregate(small, sds, sdims, smasks, sview, skwargs)
+        if merged is None:
+            return None
+        key_out = [small.outputs.index(("key", k)) for _b, k in lk.keys]
+        table = merged.toArrow()
+
+        # each small-side row's position in the dense key space (C order)
+        flat = np.zeros(table.num_rows, dtype=np.int64)
+        hit = np.ones(table.num_rows, dtype=bool)
+        for (_d, _inv, uniq), i in zip(per_key, key_out):
+            v = _join_key_values(table.column(f"_a{i}").to_numpy(), "col")
+            j = np.minimum(np.searchsorted(uniq, v), len(uniq) - 1)
+            hit &= uniq[j] == v  # a key no coordinate takes matches no cell
+            flat = flat * len(uniq) + j
+        flat = flat[hit]
+        present = np.zeros(size, dtype=bool)
+        present[flat] = True
+        if int(present.sum()) != len(flat):
+            return None  # two rows on one key position
+        columns = {}
+        for i in looks:
+            col = table.column(f"_a{i}")
+            values, nulls = np.zeros(size), np.ones(size, dtype=bool)
+            values[flat] = col.fill_null(0).to_numpy().astype(np.float64)[hit]
+            nulls[flat] = col.is_null().to_numpy()[hit]
+            columns[i] = (values, nulls)
+        offsets: dict[str, np.ndarray] = {}
+        strides = np.cumprod((shape + (1,))[:0:-1])[::-1]  # C order
+        for (dim, inv, _u), stride in zip(per_key, strides):
+            offsets[dim] = offsets.get(dim, 0) + inv.astype(np.int64) * int(stride)
+        return {"offsets": offsets, "present": present, "columns": columns}
 
     # -- query surface -----------------------------------------------------
     @staticmethod
