@@ -1,22 +1,34 @@
 #!/usr/bin/env python
-"""sf0.1 -> sf1 scale probe for the heaviest operators.
+"""sf0.1 -> 10x / 100x scale probe for the heaviest operators.
 
 Sub-second sf0.1 timings can hide super-linear behavior; this probe
-materializes a 10x replica of the driver's sf0.1 parquet (ids shifted per
+materializes a replica of the driver's sf0.1 parquet (ids shifted per
 replica so key cardinalities scale with the data; document text perturbed
-so dedup buckets don't degenerate into 10x exact-duplicate pile-ups) and
-runs the heaviest queries at both scales with the same noop-sink timing
+so dedup buckets don't degenerate into exact-duplicate pile-ups) and runs
+the heaviest queries at both scales with the same noop-sink timing
 bench.py uses. Output: one JSON line with per-query medians at both
-scales, the time ratio (10.0 = perfectly linear on a fully-parallel box;
-< 10 is expected while the 32 cores are under-subscribed at sf0.1), and
-the densest stage's task count as the parallelism signal.
+scales, the time ratio, and the densest stage's task count as the
+parallelism signal.
 
-Usage: python scripts/scale_probe.py  [SPARK_GRAFT_PROBE_REPS=3]
-The replica is cached at /tmp/xss_sf1_synth; delete it to rebuild.
+- ``--factor 10`` (default): sf0.1 -> sf1, every fact table, the permanent
+  per-round sweep. 10.0 = perfectly linear on a fully-parallel box; < 10
+  is expected while the cores are under-subscribed at sf0.1.
+- ``--factor 100``: sf0.1 -> sf10 over the three heaviest families' tables
+  (documents, events, embeddings; ~10M events / 500k docs), one
+  representative heavy query per family. 10x can still hide super-linear
+  behavior that only bites two orders of magnitude up: a ratio blowing
+  past ~2x of (10x ratio)^2 signals a super-linear stage.
+
+Usage: python scripts/scale_probe.py [--factor {10,100}] [QUERY ...]
+[SPARK_GRAFT_PROBE_REPS=3 at 10x, 1 at 100x]. Query names subset the
+sweep (new-operator spot checks). Replicas are cached at
+/tmp/xss_sf1_synth and /tmp/xss_sf10_synth and rebuilt when their build
+parameters change.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import statistics
@@ -100,6 +112,65 @@ PROBE_QUERIES = ["q40_mode_percentile_disc", "ss05_kmeans_train",
                  # fingerprint scan (the candidate join is the only
                  # pairwise stage left — the ratio tracks bucket sizes)
                  "mm05_phash_neardup"]
+# one representative heavy query per family (all touch ONLY the replicated
+# tables): text LM scoring, incremental dedup, PQ serving + re-rank,
+# events VARIANT extraction, rollup maintenance, sequence packing,
+# sketch-based heavy hitters. The near-dup graph family (cc01) is
+# deliberately ABSENT: the replica's " r{i}" text perturbation keeps all
+# 100 copies of a document near-dups of each other, so candidate-pair
+# cardinality grows ~10^4x for 100x data — quadratic INPUT growth that is
+# a property of the synthetic corpus, not of the operator (SURVEY §8).
+PROBE_QUERIES_100X = [
+    "ts15_bigram_surprisal",
+    "dd08_incremental_dedup",
+    "ss10_pq_rerank",
+    "ev18_variant_props",
+    "ev19_incremental_rollup",
+    "pl08_sequence_packing",
+    "hh01_heavy_hitters",
+    # round-9: HLL cardinality (register-rows-only shuffle), duplicate
+    # token spans (linear despite 100x gram occurrence counts — the
+    # no-pair-join claim under its worst case), IVFxPQ serving
+    "hh02_hll_distinct",
+    "hh03_countmin",
+    "dd13_dup_token_spans",
+    "ss14_ivfpq_search",
+    # round-10: BPE apply — vocabulary (the apply domain) is Heaps-
+    # sublinear, training is sample-bounded; only the word-key join
+    # scales with the corpus
+    "ts19_bpe_tokenize",
+    # round-12: trained quality scoring (map-only integer fold — the
+    # honest-linear floor of touching every word, ts19's profile), and
+    # line dedup under a WORST-case input: the replica's copies make
+    # every full 8-word line an exact 100-way duplicate, inflating dup
+    # mass ~100x — the map-side-combined min(struct) must keep the
+    # shuffle per-key bounded
+    "ts20_quality_classifier",
+    "dd15_line_dedup",
+    # round-13: pl17's windowed-count plan (the curl/tmd5 windows must
+    # stay hot-key safe under 100x duplicate URL mass — every canonical
+    # URL is a 100-way duplicate in the replica), the policy-gate
+    # broadcast joins, and the bigram-widened scoring fold
+    "pl17_url_provenance",
+    "pl22_license_gate",
+    "ts25_ngram_classifier",
+    # round-12 late wave: KMV — the sketch-shuffle-size-independence
+    # claim at two orders of magnitude (the k-min state is 128 longs
+    # per source per partition regardless of corpus size; only the
+    # exact-twin pin columns scale with distinct bigrams)
+    "hh04_kmv_set_ops",
+    # round-14: the five-stage composition DAG. Unlike cc01 (excluded
+    # above — its PAIR output is quadratic under the replica's near-dup
+    # mass), pl23's near-dup gate is CLAIM-based: <= N_BANDS candidate
+    # pairs per doc whatever the cluster size, so the chain must stay
+    # ~linear even though every replica copy is a near-dup of its base.
+    "pl23_pipeline_e2e",
+    # round-15: the two-pass decile calibration — the histogram stays
+    # grid-bounded (diversity values, not docs) at every scale, so the
+    # ratio must track the two scans + the (diversity, h) digest
+    # shuffle, never a global sort.
+    "pl14b_quality_calibration_two_pass",
+]
 SRC_SF = "/root/testdata/sf0.1"
 DST = "/tmp/xss_sf1_synth"
 COPIES = 10
@@ -110,6 +181,12 @@ DIM_TABLES = ("region", "nation", "customer", "supplier", "part")
 ID_COLS = {"lineitem": ["l_orderkey"], "embeddings": ["vec_id"],
            "documents": ["doc_id"], "orders": ["o_orderkey"],
            "events": ["event_id", "user_id"]}
+# factor -> (queries, replica dir, replicated tables, default reps)
+FACTORS = {
+    COPIES: (PROBE_QUERIES, DST, TABLES, 3),
+    100: (PROBE_QUERIES_100X, "/tmp/xss_sf10_synth",
+          ("documents", "events", "embeddings"), 1),
+}
 
 
 def build_replica(
@@ -215,16 +292,21 @@ def build_replica(
         json.dump(params, f)
 
 
-def main() -> None:
-    build_replica()
+def main(argv: list[str] | None = None) -> None:
+    p = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    p.add_argument("--factor", type=int, choices=sorted(FACTORS), default=COPIES)
+    p.add_argument("queries", nargs="*", help="registry queries to probe instead of the factor's sweep")
+    args = p.parse_args(argv)
+    sweep, dst, tables, default_reps = FACTORS[args.factor]
+    build_replica(SRC_SF, dst, args.factor, tables)
 
     from xarray_sql_spark.queries import REGISTRY
     from xarray_sql_spark.session import get_spark
 
-    spark = get_spark("xarray-sql-spark-scale-probe")
+    spark = get_spark(f"xarray-sql-spark-scale-probe-{args.factor}x")
     spark.range(1_000_000).selectExpr("sum(id)").collect()
     spark.range(1000).mapInPandas(lambda it: it, "id long").count()
-    reps = int(os.environ.get("SPARK_GRAFT_PROBE_REPS", "3"))
+    reps = int(os.environ.get("SPARK_GRAFT_PROBE_REPS", str(default_reps)))
     st = spark.sparkContext.statusTracker()
 
     def densest(group: str) -> int:
@@ -237,20 +319,19 @@ def main() -> None:
                     best = max(best, stage.numTasks)
         return best
 
-    # CLI names subset the probe (new-operator spot checks); no args =
-    # the full permanent sweep.
-    names = sys.argv[1:] or PROBE_QUERIES
+    names = args.queries or sweep
     unknown = [n for n in names if n not in REGISTRY]
     if unknown:
         sys.exit(f"not in registry: {unknown}")
+    big = f"sf{args.factor // 10}"
     results: dict[str, dict] = {}
     for name in names:
         spec = REGISTRY[name]
         row: dict[str, float | int] = {}
-        for label, sf_dir in (("sf0.1", SRC_SF), ("sf1", DST)):
+        for label, sf_dir in (("sf0.1", SRC_SF), (big, dst)):
             spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             spark.sparkContext._jvm.System.gc()
-            group = f"probe:{name}:{label}"
+            group = f"probe{args.factor}x:{name}:{label}"
             spark.sparkContext.setJobGroup(group, group)
             samples = []
             try:
@@ -262,10 +343,10 @@ def main() -> None:
                 spark.sparkContext.setJobGroup("", "")
             row[label] = round(statistics.median(samples), 3)
             row[f"{label}_tasks"] = densest(group)
-        row["ratio"] = round(row["sf1"] / row["sf0.1"], 2)
+        row["ratio"] = round(row[big] / row["sf0.1"], 2)
         results[name] = row
         print(f"{name}: {row}", file=sys.stderr)
-    print(json.dumps({"metric": "scale_probe_sf01_vs_sf1", "copies": COPIES,
+    print(json.dumps({"metric": f"scale_probe_sf01_vs_{big}", "copies": args.factor,
                       "reps": reps, "queries": results}))
 
 

@@ -13,6 +13,7 @@ import numpy as np
 import pytest
 
 from xarray_sql_spark.dataset import Dataset, Variable
+from xarray_sql_spark.zarr_store import write_zarr
 
 
 @pytest.fixture
@@ -93,7 +94,7 @@ def test_isel_rejects_2d_indexer(ds):
 
 
 def test_isel_store_backed_matches_memory(ds, tmp_path):
-    store = ds.to_store(str(tmp_path / "grid"))
+    store = write_zarr(ds, str(tmp_path / "grid"), chunks={"t": 2, "y": 2})
     lazy = Dataset.open_store(store)
     for idx in (
         {"t": 2},

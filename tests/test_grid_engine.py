@@ -154,6 +154,46 @@ def test_projection_reaches_storage(xs, read_log):
     assert all(l["vars_read"] == [] for l in logs)
 
 
+@pytest.mark.parametrize("backing", ["memory", "store"])
+def test_projection_falls_back_when_the_pruned_view_cannot_analyze(
+    xs, read_log, tmp_path, backing
+):
+    """count(lat) of a non-nullable dim optimizes to count(1), so the
+    optimized plan references only ``time``; re-planning the SQL text over a
+    view pruned to [time] cannot resolve ``lat`` and must run unpruned."""
+    from xarray_sql_spark.zarr_store import write_zarr
+
+    time = np.arange("2024-01-01T00", "2024-01-03T00", dtype="datetime64[h]").astype(
+        "datetime64[ns]"
+    )
+    lat = np.linspace(-10, 10, 8).astype(np.float32)
+    lon = np.arange(4, dtype=np.float32)
+    rng = np.random.default_rng(3)
+    t2m, u10 = rng.normal(size=(2, 48, 8, 4)).astype(np.float32)
+    dims = ("time", "lat", "lon")
+    ds = Dataset(
+        {"t2m": Variable(dims, t2m), "u10": Variable(dims, u10)},
+        {"time": time, "lat": lat, "lon": lon},
+    )
+    store = write_zarr(ds, str(tmp_path / "g"), chunks={"time": 12}) if backing == "store" else None
+    name = f"proj_fallback_{backing}"
+    xs.from_dataset(name, ds, chunks={"time": 12}, store=store, read_log_dir=read_log.dir)
+    xs.metadata_aggregates = False  # the shortcut answers this without a scan
+    n = xs.sql(
+        f"SELECT count(lat) AS n FROM {name} WHERE time < TIMESTAMP '2024-01-02 00:00:00'"
+    ).df.collect()[0]["n"]
+    assert n == int((time < np.datetime64("2024-01-02")).sum()) * lat.size * lon.size
+    read_log.drain()
+    # an ordinary projected query still reads only the variable it names
+    rows = xs.sql(
+        f"SELECT time, lat, lon, t2m FROM {name} "
+        "WHERE time < TIMESTAMP '2024-01-01 12:00:00' ORDER BY time, lat, lon"
+    ).df.collect()
+    np.testing.assert_array_equal([r["t2m"] for r in rows], t2m[:12].ravel())
+    logs = [l for l in read_log.drain() if l["partition"] >= 0]
+    assert logs and all(l["vars_read"] == ["t2m"] for l in logs)
+
+
 # --- NaN -> null semantics (FIXTURES.md F7 golden answers) -----------------
 def test_nan_null_semantics(xs):
     time = np.arange("2021-01-01", "2021-01-03", dtype="datetime64[D]").astype("datetime64[ns]")
@@ -308,8 +348,10 @@ def test_sparsity_template_fill(xs):
 
 # --- store-backed laziness -------------------------------------------------
 def test_store_backed_scan(xs, read_log, tmp_path):
+    from xarray_sql_spark.zarr_store import write_zarr
+
     ds = air_small()
-    store = ds.to_store(str(tmp_path / "air_store"))
+    store = write_zarr(ds, str(tmp_path / "air_store"), chunks={"time": 6})
     xs.from_dataset("st_air", ds, chunks={"time": 6}, store=store, read_log_dir=read_log.dir)
     read_log.drain()
     row = xs.sql("SELECT AVG(air) AS a FROM st_air").df.collect()[0]

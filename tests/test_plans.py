@@ -456,6 +456,7 @@ def test_pure_scan_identity_guard(spark, tmp_path):
     import numpy as np
 
     from xarray_sql_spark.dataset import Dataset, Variable
+    from xarray_sql_spark.plans.introspect import pure_scan_passthrough
     from xarray_sql_spark.sources.grid_source import FORMAT_NAME, make_payload
     from xarray_sql_spark.to_dataset import XarrayDataFrame
     from xarray_sql_spark.xr_session import XarraySession
@@ -477,7 +478,7 @@ def test_pure_scan_identity_guard(spark, tmp_path):
         df2, genuine._registered, {}, genuine._payload_names
     )
     # df2 IS a pure scan — but not of dataset "ga"
-    assert imposter._is_pure_scan()
+    assert pure_scan_passthrough(df2) == (path, {"t", "w"})
     assert not imposter._pure_scan_of("ga")
 
 

@@ -180,3 +180,14 @@ def test_build_replica_layout_gives_wide_scans(tmp_path):
     m0 = os.stat(parts[0]).st_mtime_ns
     build_replica(src, dst, copies=2, tables=("documents",), parts_per_table=8)
     assert os.stat(parts[0]).st_mtime_ns == m0
+    # rebuilt from another src, the verbatim dimension tables follow it:
+    # stale dims would silently join the probe against the old src
+    import filecmp
+
+    from tests.conftest import SF_MED
+
+    dim = "customer.parquet"
+    assert filecmp.cmp(os.path.join(dst, dim), os.path.join(src, dim), shallow=False)
+    build_replica(SF_MED, dst, copies=2, tables=("documents",), parts_per_table=8)
+    assert filecmp.cmp(os.path.join(dst, dim), os.path.join(SF_MED, dim), shallow=False)
+    assert not filecmp.cmp(os.path.join(src, dim), os.path.join(SF_MED, dim), shallow=False)

@@ -16,6 +16,7 @@ from xarray_sql_spark.dataset import Dataset, Variable
 from xarray_sql_spark.operators import sinks
 from xarray_sql_spark.session import table
 from xarray_sql_spark.xr_session import XarraySession
+from xarray_sql_spark.zarr_store import write_zarr
 
 
 def test_write_partitioned_layout(spark, tmp_path):
@@ -57,7 +58,7 @@ def test_bucketed_join_has_no_shuffle(spark, tmp_path):
 
 @pytest.fixture(scope="module")
 def big_grid(spark, tmp_path_factory):
-    # 1000 x 100 x 100 = 10M cells, float32, store-backed (memory-mapped)
+    # 1000 x 100 x 100 = 10M cells, float32, store-backed (uncompressed Zarr)
     tmp = tmp_path_factory.mktemp("biggrid")
     t = (
         np.datetime64("2020-01-01", "h") + np.arange(1000)
@@ -67,7 +68,7 @@ def big_grid(spark, tmp_path_factory):
     rng = np.random.default_rng(0)
     v = rng.normal(0, 1, (1000, 100, 100)).astype(np.float32)
     ds = Dataset({"v": Variable(("time", "lat", "lon"), v)}, {"time": t, "lat": lat, "lon": lon})
-    store = ds.to_store(str(tmp / "store"))
+    store = write_zarr(ds, str(tmp / "store"), chunks={"time": 50}, compressor=None)
     log_dir = str(tmp / "log")
     os.makedirs(log_dir)
     xs = XarraySession(spark)

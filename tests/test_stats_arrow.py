@@ -10,6 +10,7 @@ import pytest
 from xarray_sql_spark import arrow_io
 from xarray_sql_spark.dataset import Dataset, Variable
 from xarray_sql_spark.xr_session import XarraySession
+from xarray_sql_spark.zarr_store import write_zarr
 from tests.test_grid_engine import air_small
 
 
@@ -40,7 +41,7 @@ def test_count_star_shortcut_no_reads(xs, spark, tmp_path):
 
 def test_scan_stats_store_backed(xs, tmp_path):
     ds = air_small()
-    path = ds.to_store(str(tmp_path / "store"))
+    path = write_zarr(ds, str(tmp_path / "store"), chunks={"time": 6})
     xs.from_dataset("stats_store", ds, chunks={"time": 6}, store=path)
     stats = xs.scan_stats("stats_store")
     assert stats["num_rows"] == 1320

@@ -9,17 +9,15 @@ SURVEY.md §1; xarray_sql/reader.py:94-99 validates the same invariants).
 Two storage modes:
 - in-memory: variables hold numpy arrays (pickled to executors — fine for
   tests and small grids);
-- store-backed (:class:`GridStore`): variables are lazy handles into a
-  directory of ``.npy`` files read via memory-mapping, so an executor reads
-  only the bytes of the block + columns it was asked for — the same
-  selective-read contract the reference gets from Zarr
+- store-backed: :meth:`Dataset.open_store` opens a Zarr v2 or v3 store
+  (:mod:`xarray_sql_spark.zarr_store`) whose variables are lazy handles,
+  so an executor reads only the chunks of the block + columns it was asked
+  for — the same selective-read contract the reference gets from Zarr
   (reference reader.py:270-303).
 """
 
 from __future__ import annotations
 
-import json
-import os
 from dataclasses import dataclass, field
 from typing import Any, Mapping
 
@@ -31,7 +29,7 @@ class Variable:
     """An N-D array with named dimensions."""
 
     dims: tuple[str, ...]
-    data: Any  # np.ndarray | LazyVar
+    data: Any  # np.ndarray | a lazy handle with read_block
     attrs: dict = field(default_factory=dict)
     encoding: dict = field(default_factory=dict)
 
@@ -44,7 +42,7 @@ class Variable:
         return self.data.dtype
 
     def values(self) -> np.ndarray:
-        if hasattr(self.data, "read_block"):  # LazyVar / QueryBackedVar
+        if hasattr(self.data, "read_block"):  # ZarrArray / QueryBackedVar
             return self.data.read_block(tuple(slice(None) for _ in self.shape))
         return np.asarray(self.data)
 
@@ -52,21 +50,6 @@ class Variable:
         if hasattr(self.data, "read_block"):
             return self.data.read_block(slices)
         return np.asarray(self.data[slices])
-
-
-class LazyVar:
-    """Store-backed lazy array: reads only the requested block via mmap."""
-
-    def __init__(self, path: str, shape: tuple[int, ...], dtype: str):
-        self.path = path
-        self.shape = tuple(shape)
-        self.dtype = np.dtype(dtype)
-
-    def read_block(self, slices: tuple[slice, ...]) -> np.ndarray:
-        mm = np.load(self.path, mmap_mode="r")
-        out = np.ascontiguousarray(mm[slices])
-        del mm
-        return out
 
 
 class Dataset:
@@ -219,36 +202,6 @@ class Dataset:
             dict(self.extra_coords),
         )
 
-    # ---- store round-trip ------------------------------------------------
-    def to_store(self, path: str) -> str:
-        """Persist as a directory of .npy files + meta.json (zarr-like
-        chunk-addressable layout; executors mmap and read only their block)."""
-        os.makedirs(path, exist_ok=True)
-        meta: dict[str, Any] = {
-            "attrs": self.attrs,
-            "coords": {},
-            "data_vars": {},
-            "extra_coords": {},
-        }
-        for d, c in self.coords.items():
-            np.save(os.path.join(path, f"coord_{d}.npy"), c)
-            meta["coords"][d] = {"dtype": str(c.dtype)}
-        for name, var in self.data_vars.items():
-            np.save(os.path.join(path, f"var_{name}.npy"), var.values())
-            meta["data_vars"][name] = {
-                "dims": list(var.dims),
-                "dtype": str(var.dtype),
-                "shape": list(var.shape),
-                "attrs": var.attrs,
-                "encoding": var.encoding,
-            }
-        for name, var in self.extra_coords.items():
-            np.save(os.path.join(path, f"xcoord_{name}.npy"), var.values())
-            meta["extra_coords"][name] = {"dims": list(var.dims), "attrs": var.attrs}
-        with open(os.path.join(path, "meta.json"), "w") as f:
-            json.dump(meta, f, default=str)
-        return path
-
     @classmethod
     def from_xarray(cls, xds) -> "Dataset":
         """Adapt a real ``xarray.Dataset`` into this model — the reference's
@@ -307,38 +260,12 @@ class Dataset:
 
     @classmethod
     def open_store(cls, path: str, load_coords: bool = True) -> "Dataset":
-        """Open lazily: coordinates load eagerly (small, needed for bounds);
-        data variables become lazy block-readable handles. Dispatches on the
-        on-disk format: a Zarr v2 group (``.zgroup``/``.zarray`` JSON, the
-        format real users have — reference reader.py:192-337) opens through
-        :mod:`xarray_sql_spark.zarr_store`; otherwise the native ``.npy``
-        directory layout. ``load_coords=False`` leaves the coordinates out
-        (a scan task carries its own)."""
-        if os.path.isfile(os.path.join(path, ".zgroup")) or not os.path.isfile(
-            os.path.join(path, "meta.json")
-        ):
-            from xarray_sql_spark.zarr_store import open_zarr
+        """Open a Zarr v2 or v3 store lazily (the format real users have —
+        reference reader.py:192-337): coordinates load eagerly (small,
+        needed for bounds), data variables become lazy block-readable
+        handles. ``load_coords=False`` leaves the coordinates out (a scan
+        task carries its own)."""
+        # looked up per call, so a patched zarr_store.open_zarr is the one used
+        from xarray_sql_spark.zarr_store import open_zarr
 
-            return open_zarr(path, load_coords=load_coords)
-        with open(os.path.join(path, "meta.json")) as f:
-            meta = json.load(f)
-        coords = {
-            d: np.load(os.path.join(path, f"coord_{d}.npy"))
-            for d in (meta["coords"] if load_coords else ())
-        }
-        data_vars = {}
-        for name, m in meta["data_vars"].items():
-            data_vars[name] = Variable(
-                tuple(m["dims"]),
-                LazyVar(os.path.join(path, f"var_{name}.npy"), tuple(m["shape"]), m["dtype"]),
-                m.get("attrs", {}),
-                m.get("encoding", {}),
-            )
-        extra = {}
-        for name, m in meta["extra_coords"].items():
-            extra[name] = Variable(
-                tuple(m["dims"]), np.load(os.path.join(path, f"xcoord_{name}.npy")), m.get("attrs", {})
-            )
-        return cls(data_vars, coords, meta.get("attrs", {}), extra)
-
-
+        return open_zarr(path, load_coords=load_coords)

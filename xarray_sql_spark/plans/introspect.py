@@ -39,72 +39,41 @@ def _walk(plan):
             pass
 
 
-def is_pure_scan(df: DataFrame) -> bool:
-    """True iff the optimized plan is a single unfiltered table scan under
-    only {Project, Sort, SubqueryAlias} — the case where result coordinates
-    provably equal the source's (A12 fast path)."""
-    try:
-        plan = df._jdf.queryExecution().optimizedPlan()
-        n_scans = 0
-        for n in _walk(plan):
-            cls = n.getClass().getSimpleName()
-            if cls == "DataSourceV2ScanRelation":
-                n_scans += 1
-            elif cls not in PURE_SCAN_NODES:
-                return False
-        return n_scans == 1
-    except Exception:
-        return False
-
-
-def pure_scan_payload(df: DataFrame) -> str | None:
-    """The ``payload`` option of the single scan of a pure-scan plan, or
-    None. Callers use it to verify the plan scans the SAME registered
-    grid they resolved coordinates from — purity alone is not identity
-    (a session can hold one registered grid plus unrelated V2 tables,
-    and a pure scan of one of those must not borrow the grid's axes)."""
-    try:
-        plan = df._jdf.queryExecution().optimizedPlan()
-        payloads: list = []
-        for n in _walk(plan):
-            cls = n.getClass().getSimpleName()
-            if cls == "DataSourceV2ScanRelation":
-                try:
-                    payloads.append(n.relation().options().get("payload"))
-                except Exception:
-                    payloads.append(None)
-            elif cls not in PURE_SCAN_NODES:
-                return None
-        if len(payloads) == 1 and payloads[0]:
-            return payloads[0]
-        return None
-    except Exception:
-        return None
-
-
 def pure_scan_passthrough(df: DataFrame) -> tuple[str, set[str]] | None:
     """(payload, result columns that ARE the scan's own output attributes)
-    for a pure-scan plan, else None.
+    when the optimized plan is a single unfiltered table scan under only
+    {Project, Sort, SubqueryAlias} — the case where result coordinates can
+    equal the source's (A12 fast path) — else None.
 
-    Purity alone does not make a result column safe to resolve from source
-    coordinates: ``SELECT time + INTERVAL 1 HOUR AS time, ...`` is still
-    Project-over-scan, but its ``time`` is a COMPUTED alias (fresh exprId)
-    whose values no longer equal the source axis. Only columns whose
-    exprId appears verbatim in the scan output pass through unchanged —
-    Project/Sort/SubqueryAlias all preserve exprIds for bare attributes,
-    and every alias (even a pure rename) mints a new one, which is the
-    conservative side."""
+    Callers match the payload against the registered grid they resolved
+    coordinates from: purity alone is not identity (a session can hold one
+    registered grid plus unrelated V2 tables, and a pure scan of one of
+    those must not borrow the grid's axes). Nor does purity make a result
+    column safe to resolve from source coordinates: ``SELECT time +
+    INTERVAL 1 HOUR AS time, ...`` is still Project-over-scan, but its
+    ``time`` is a COMPUTED alias (fresh exprId) whose values no longer
+    equal the source axis. Only columns whose exprId appears verbatim in
+    the scan output pass through unchanged — Project/Sort/SubqueryAlias
+    all preserve exprIds for bare attributes, and every alias (even a pure
+    rename) mints a new one, which is the conservative side."""
     try:
-        payload = pure_scan_payload(df)
-        if payload is None:
-            return None
         plan = df._jdf.queryExecution().optimizedPlan()
-        scan_ids: set[int] = set()
+        scans = []
         for n in _walk(plan):
-            if n.getClass().getSimpleName() == "DataSourceV2ScanRelation":
-                it = n.output().iterator()
-                while it.hasNext():
-                    scan_ids.add(it.next().exprId().id())
+            cls = n.getClass().getSimpleName()
+            if cls == "DataSourceV2ScanRelation":
+                scans.append(n)
+            elif cls not in PURE_SCAN_NODES:
+                return None
+        if len(scans) != 1:
+            return None
+        payload = scans[0].relation().options().get("payload")
+        if not payload:
+            return None
+        scan_ids: set[int] = set()
+        it = scans[0].output().iterator()
+        while it.hasNext():
+            scan_ids.add(it.next().exprId().id())
         passthrough: set[str] = set()
         it = plan.output().iterator()
         while it.hasNext():

@@ -695,7 +695,9 @@ def ts06_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     0.64-0.72x at the 10x replica: the per-row sort + lambda compute
     constant exceeds what the two map-side-combined 8-byte-keyed
     exchanges cost, so the explode shape is the scale-favorable one
-    (scripts/ab_ts06.py)."""
+    (OPTIMIZATION_r16.md §11; with the rewrite in the working tree,
+    ``SPARK_GRAFT_SF_DIR=<10x replica of scripts/scale_probe.py>
+    python3 scripts/ab.py --base 330572d ts06_char_entropy`` repeats it)."""
     d = table(spark, sf_dir, "documents", spread=True).filter(F.length("text") >= 2)
     bigrams = F.expr("transform(sequence(1, length(text) - 1), i -> substring(text, i, 2))")
     counts = (

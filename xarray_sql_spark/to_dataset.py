@@ -318,14 +318,6 @@ class XarrayDataFrame:
             raise ValueError(f"unknown chunks spec {chunks!r}")
         return dict(chunks) or None
 
-    def _is_pure_scan(self) -> bool:
-        """Plan walk (reference ds.py:435-505): True iff the plan is only
-        {Project, Sort, SubqueryAlias, ScanRelation} — i.e. an unfiltered
-        single-table scan whose coords equal the source's."""
-        from xarray_sql_spark.plans.introspect import is_pure_scan
-
-        return is_pure_scan(self._df)
-
     def _pure_scan_of(self, name: str | None, dims=()) -> bool:
         """True iff the plan is a pure scan AND the scanned relation is a
         registered scan (full or pruned) of dataset ``name`` AND every

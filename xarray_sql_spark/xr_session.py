@@ -46,6 +46,7 @@ from typing import Mapping
 
 import numpy as np
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 from xarray_sql_spark.dataset import Dataset, Variable
@@ -379,6 +380,11 @@ class XarraySession:
             return df
         try:
             return self.spark.sql(q, args=args) if args else self.spark.sql(q)
+        except AnalysisException:
+            # the columns come from the optimized plan, which can drop one
+            # the text names (count(lat) of a non-null lat is count(1)); the
+            # text already analysed against the full views, so keep those
+            return df
         finally:
             for view, full_df in swaps:
                 full_df.createOrReplaceTempView(view)
@@ -399,7 +405,7 @@ class XarraySession:
         Zarr's append-commit model and are not detected — the same
         assumption the streaming source's offset tracking makes."""
         out = []
-        for rel in (".zmetadata", ".zgroup", "zarr.json", "meta.json"):
+        for rel in (".zmetadata", ".zgroup", "zarr.json"):
             p = os.path.join(store, rel)
             if os.path.isfile(p):
                 s = os.stat(p)
