@@ -4,6 +4,7 @@ the rebuild's analogue of the reference's dask-differential chunk tests
 
 from __future__ import annotations
 
+import datetime as _dt
 import os
 
 import numpy as np
@@ -143,10 +144,14 @@ def test_zarr_roundtrip_property(case):
         np.testing.assert_array_equal(got, data)
 
 
-# --- property: pruning soundness (block_may_match never drops a match) ------
+# --- property: pruning is exact (a block is read iff some cell matches) -----
+_UTC = _dt.timezone.utc
+_DT_LO, _DT_HI = _dt.datetime(2000, 1, 1), _dt.datetime(2000, 1, 3)
+
+
 @st.composite
 def _prune_cases(draw):
-    kind = draw(st.sampled_from(["int", "float", "str"]))
+    kind = draw(st.sampled_from(["int", "float", "str", "datetime"]))
     n = draw(st.integers(1, 40))
     if kind == "int":
         vals = draw(st.lists(st.integers(-50, 50), min_size=n, max_size=n))
@@ -156,36 +161,60 @@ def _prune_cases(draw):
         vals = draw(st.lists(
             st.floats(-50, 50, allow_nan=False), min_size=n, max_size=n))
         arr = np.array(vals, dtype=np.float64)
-        lit = st.floats(-60, 60, allow_nan=False)
-    else:
+        # int values on a float axis too
+        lit = st.one_of(st.floats(-60, 60, allow_nan=False), st.integers(-60, 60))
+    elif kind == "str":
         words = st.text(alphabet="abcßπ0", min_size=0, max_size=4)
         vals = draw(st.lists(words, min_size=n, max_size=n))
-        arr = np.array(vals, dtype=str) if vals else np.array([], dtype="U1")
+        arr = np.array(vals, dtype=str)
         lit = words
-    lo = draw(st.integers(0, n - 1))
-    hi = draw(st.integers(lo + 1, n))
+    else:
+        vals = draw(st.lists(
+            st.datetimes(_DT_LO, _DT_HI), min_size=n, max_size=n))
+        arr = np.array(vals, dtype="datetime64[us]")
+        # naive values, or aware ones (compared in UTC; the coordinates are
+        # UTC wall clock)
+        tz = draw(st.sampled_from([None, _UTC, _dt.timezone(_dt.timedelta(hours=-3))]))
+        lit = st.one_of(st.sampled_from(vals), st.datetimes(_DT_LO, _DT_HI)).map(
+            lambda v: v.replace(tzinfo=tz)
+        )
+    chunk = draw(st.integers(1, n))
     op = draw(st.sampled_from(["=", ">", ">=", "<", "<=", "in"]))
     value = draw(st.lists(lit, min_size=1, max_size=4)) if op == "in" else draw(lit)
-    return arr, (lo, hi), op, value
+    return arr, chunk, op, value
+
+
+def _grid_reader(coords: dict, chunks: dict, binary_collation: bool = True):
+    from xarray_sql_spark.dataset import Dataset, Variable
+    from xarray_sql_spark.sources.grid_source import GridReader, make_payload, spark_schema
+
+    dims = tuple(coords)
+    shape = tuple(len(c) for c in coords.values())
+    ds = Dataset({"v": Variable(dims, np.zeros(shape, dtype=np.float32))}, coords)
+    payload = make_payload(dataset=ds, chunks=chunks)
+    payload["binary_collation"] = binary_collation
+    return GridReader(payload, spark_schema(payload["arrow_schema"]))
+
+
+def _kept_blocks(reader, filters) -> list[int]:
+    reader.pushFilters(filters)
+    return [p.index for p in reader.partitions() if p.index >= 0]
 
 
 @settings(max_examples=300, deadline=None)
 @given(_prune_cases())
 def test_block_pruning_is_sound(case):
-    """The pruning contract (reference 'Inexact' filters): dropping a
-    block is only legal when NO row in it can match — for every dtype
-    the bounds support, including the round-6 string bounds. The dual
-    (keeping a non-matching block) is always allowed, so only the
-    drop direction is asserted."""
+    """The pruning contract (reference 'Inexact' filters), driven through
+    GridReader.pushFilters + partitions(): dropping a block is only legal
+    when NO row in it can match, for every dtype the coordinate masks
+    support. The masks are exact, so a block without a match is dropped
+    too."""
     from pyspark.sql.datasource import (
         EqualTo, GreaterThan, GreaterThanOrEqual, In, LessThan,
         LessThanOrEqual,
     )
 
-    from xarray_sql_spark.bounds import block_may_match, dim_bounds
-
-    arr, (lo, hi), op, value = case
-    bounds = dim_bounds({"d": arr}, {"d": slice(lo, hi)})
+    arr, chunk, op, value = case
     mk = {
         "=": lambda: EqualTo(("d",), value),
         ">": lambda: GreaterThan(("d",), value),
@@ -194,39 +223,51 @@ def test_block_pruning_is_sound(case):
         "<=": lambda: LessThanOrEqual(("d",), value),
         "in": lambda: In(("d",), tuple(value)),
     }
-    f = mk[op]()
-    seg = arr[lo:hi].tolist()
-    if op == "=":
-        truly = any(x == value for x in seg)
-    elif op == ">":
-        truly = any(x > value for x in seg)
-    elif op == ">=":
-        truly = any(x >= value for x in seg)
-    elif op == "<":
-        truly = any(x < value for x in seg)
-    elif op == "<=":
-        truly = any(x <= value for x in seg)
-    else:
-        truly = any(x in value for x in seg)
-    if truly:
-        assert block_may_match(bounds, [f]), (bounds, op, value, seg)
+    kept = _kept_blocks(_grid_reader({"d": arr}, {"d": chunk}), [mk[op]()])
+
+    def row(x):
+        if isinstance(x, _dt.datetime) and (value[0] if op == "in" else value).tzinfo:
+            return x.replace(tzinfo=_UTC)
+        return x
+
+    matches = []
+    for i, lo in enumerate(range(0, len(arr), chunk)):
+        seg = [row(x) for x in arr[lo:lo + chunk].tolist()]
+        if op == "=":
+            truly = any(x == value for x in seg)
+        elif op == ">":
+            truly = any(x > value for x in seg)
+        elif op == ">=":
+            truly = any(x >= value for x in seg)
+        elif op == "<":
+            truly = any(x < value for x in seg)
+        elif op == "<=":
+            truly = any(x <= value for x in seg)
+        else:
+            truly = any(x in value for x in seg)
+        if truly:
+            matches.append(i)
+    assert kept == matches, (op, value, arr, chunk)
 
 
 def test_string_pruning_disabled_under_nonbinary_collation():
-    """With prune_strings=False (registration saw a non-binary session
-    default collation), string bounds must never drop a block — code-point
-    min/max is unsound under e.g. UTF8_LCASE — while numeric pruning
-    keeps working."""
+    """A payload registered under a non-binary session default collation
+    (``binary_collation=False``) never drops a block on a string
+    predicate — code-point comparison is unsound under e.g. UTF8_LCASE —
+    while numeric pruning keeps working."""
     from pyspark.sql.datasource import EqualTo
 
-    from xarray_sql_spark.bounds import block_may_match
-
-    bounds = {"station": ("alpha", "delta"), "t": (0, 9)}
-    ex_string = [EqualTo(("station",), "zulu")]  # outside code-point range
-    assert not block_may_match(bounds, ex_string)  # binary default: prunes
-    assert block_may_match(bounds, ex_string, prune_strings=False)
-    ex_num = [EqualTo(("t",), 50)]
-    assert not block_may_match(bounds, ex_num, prune_strings=False)
+    coords = {
+        "station": np.array(["alpha", "bravo", "charlie", "delta"]),
+        "t": np.arange(10, dtype=np.int64),
+    }
+    chunks = {"station": 2, "t": 5}
+    ex_string = [EqualTo(("station",), "zulu")]  # matches no station
+    assert _kept_blocks(_grid_reader(coords, chunks), ex_string) == []  # binary: prunes
+    lcase = _grid_reader(coords, chunks, binary_collation=False)
+    assert _kept_blocks(lcase, ex_string) == [0, 1, 2, 3]
+    assert _kept_blocks(lcase, [EqualTo(("t",), 50)]) == []
+    assert _kept_blocks(lcase, [EqualTo(("t",), 7)]) == [1, 3]
 
 
 # --- property: v2 read-side filter fuzz (shuffle / packbits) ----------------

@@ -13,9 +13,9 @@ import numpy as np
 import pyarrow as pa
 import pytest
 
-from xarray_sql_spark.bounds import dim_bounds
+from xarray_sql_spark.bounds import coord_mask, dim_bounds
 from xarray_sql_spark.dataset import Dataset, Variable
-from xarray_sql_spark.xr_session import XarraySession, _coord_predicate_mask
+from xarray_sql_spark.xr_session import XarraySession
 
 
 @pytest.fixture(scope="module")
@@ -86,10 +86,10 @@ def test_nat_coord_predicate_mask_declines():
     # plan introspection hands timestamp literals as (epoch_us, type)
     epoch_us = int(np.datetime64("2024-01-01", "us").astype(np.int64))
     lits = [(epoch_us, "timestamp")]
-    assert _coord_predicate_mask(c, ">=", lits) is None
+    assert coord_mask(c, ">=", lits) is None
     # NaT-free axis still takes the shortcut
     ok = np.array(["2024-01-01", "2024-01-02"], dtype="datetime64[ns]")
-    assert _coord_predicate_mask(ok, ">=", lits).tolist() == [True, True]
+    assert coord_mask(ok, ">=", lits).tolist() == [True, True]
 
 
 def test_nat_coord_no_false_prune_and_correct_minmax(xs):
@@ -110,6 +110,22 @@ def test_nat_coord_no_false_prune_and_correct_minmax(xs):
         ("SELECT count(*) AS n FROM natgrid", 8),
     ]:
         assert xs.sql(q).df.collect()[0].n == expect
+
+
+def test_nan_literal_neither_prunes_nor_shortcuts(xs):
+    """Spark orders NaN above every number, so ``lat < NaN`` holds on every
+    row; numpy compares NaN False. The coordinate masks must decline a NaN
+    literal, in the metadata shortcut and in the scan's block pruning."""
+    lat = np.array([-10.0, 0.0, 10.0, 20.0])
+    xs.from_dataset("nanlit", Dataset({"v": (("lat",), np.arange(4.0))}, {"lat": lat}),
+                    chunks={"lat": 2})
+    where = "WHERE lat < CAST('NaN' AS DOUBLE)"
+    assert xs.sql(f"SELECT count(*) AS n FROM nanlit {where}").df.collect()[0].n == 4
+    xs.metadata_aggregates = False
+    try:
+        assert len(xs.sql(f"SELECT * FROM nanlit {where}").df.collect()) == 4
+    finally:
+        xs.metadata_aggregates = True
 
 
 def test_nat_coord_schema_nullable_only_when_needed(xs):

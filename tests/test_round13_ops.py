@@ -118,11 +118,7 @@ def test_ts20_single_pass_priors_count_empty_docs(spark, tmp_path):
     the bucket counts (first-word marker rows; empty docs surface as a
     null-word row). Priors must equal a direct doc-level recount — with
     an empty document planted to exercise the posexplode_outer path."""
-    from xarray_sql_spark.queries.pipeline_ops import (
-        _TS20_CACHE,
-        _ts20_base,
-        ts20_train,
-    )
+    from xarray_sql_spark.queries.pipeline_ops import _ts20_base, ts20_train
 
     texts = [
         "fast merge join hash sort group",   # good-heavy
@@ -132,7 +128,7 @@ def test_ts20_single_pass_priors_count_empty_docs(spark, tmp_path):
         "merge join slow scan delta",
     ]
     sf = _write_documents(tmp_path, texts)
-    _TS20_CACHE.clear()
+    ts20_train.cache.clear()
     try:
         iw, bias = ts20_train(spark, sf)
         train = _ts20_base(spark, sf).filter("split = 'train'")
@@ -145,7 +141,7 @@ def test_ts20_single_pass_priors_count_empty_docs(spark, tmp_path):
         assert bias == expect_bias
         assert len(iw) == 64
     finally:
-        _TS20_CACHE.clear()  # don't leak tmp-fixture weights to other tests
+        ts20_train.cache.clear()  # don't leak tmp-fixture weights to other tests
 
 
 # --- pl22 license gate --------------------------------------------------------

@@ -118,11 +118,11 @@ def test_all_train_memos_registered():
     equality — clearing must hit the dict the query builders read)."""
     registered = {id(c) for c in reg.TRAIN_CACHES}
     for cache in (
-        bpe_tokenizer._MERGES_CACHE,
-        advanced_ops._PQ_TRAIN_CACHE,
-        pipeline_ops._TS20_CACHE,
-        pipeline_ops._TS25_CACHE,
-        pipeline_ops._PL21_CACHE,
+        bpe_tokenizer.bpe_merges.cache,
+        advanced_ops._pq_fit.cache,
+        pipeline_ops.ts20_train.cache,
+        pipeline_ops.ts25_train.cache,
+        pipeline_ops.pl21_model.cache,
     ):
         assert id(cache) in registered
     assert len(reg.TRAIN_CACHES) >= 5
@@ -132,14 +132,14 @@ def test_second_rep_retrains_after_reset(spark):
     """Populate one memo by training, reset, and verify the next call
     re-trains (repopulates) rather than serving a stale secondary memo."""
     reg.reset_train_caches()
-    assert not bpe_tokenizer._MERGES_CACHE
+    assert not bpe_tokenizer.bpe_merges.cache
     merges1 = bpe_tokenizer.bpe_merges(spark, SF_SMALL)
-    assert bpe_tokenizer._MERGES_CACHE, "training did not populate the memo"
+    assert bpe_tokenizer.bpe_merges.cache, "training did not populate the memo"
     dropped = reg.reset_train_caches()
     assert dropped >= 1
-    assert not bpe_tokenizer._MERGES_CACHE
+    assert not bpe_tokenizer.bpe_merges.cache
     merges2 = bpe_tokenizer.bpe_merges(spark, SF_SMALL)
-    assert bpe_tokenizer._MERGES_CACHE, "second rep did not re-train"
+    assert bpe_tokenizer.bpe_merges.cache, "second rep did not re-train"
     assert merges1 == merges2  # deterministic training, identical results
 
 

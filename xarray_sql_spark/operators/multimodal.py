@@ -2158,10 +2158,6 @@ def _signal_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         )
 
 
-def signal_stats(media: DataFrame) -> DataFrame:
-    return media.mapInPandas(_signal_batches, SIGNAL_SCHEMA)
-
-
 @query(
     "mm12_signal_stats",
     oracle=f"""

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from xarray_sql_spark.registry import query
+from xarray_sql_spark.registry import query, train_memo
 from xarray_sql_spark.session import table
 
 
@@ -1752,11 +1752,6 @@ _PQ_CTES = f"""
     )"""
 
 
-from xarray_sql_spark.registry import register_train_cache as _rtc
-
-_PQ_TRAIN_CACHE: dict = _rtc({})
-
-
 def _pq_dj_pairs(se_col, books):
     """(d2, j) struct array over every centroid in ``books``, spelled as
     ONE nested-array literal + an indexed ``transform`` instead of one
@@ -1906,32 +1901,25 @@ def _pq_train(spark: SparkSession, sf_dir: str):
     every double is bit-identical to the join-based formulation and to
     the oracle's fold.
 
-    The trained (codebook, dtab) pair is memoized per sf_dir: training
-    is fully deterministic (fixed seeds, round-4 means), and a PQ index
-    is trained ONCE and served many times, so repeat calls — bench
-    medians, the ss09+ss10 pair — pay only the serving projection,
-    exactly like a production ADC path."""
+    The trained (codebook, dtab) pair is memoized per embeddings content
+    (:func:`_pq_fit`): training is fully deterministic (fixed seeds,
+    round-4 means), and a PQ index is trained ONCE and served many times,
+    so repeat calls — bench medians, the ss09+ss10 pair — pay only the
+    serving projection, exactly like a production ADC path."""
     # spread: the serving projection does 8 x 64-dim distance folds per
     # row — heavy enough to repartition when the file layout can't feed
     # the cores (no-op on real multi-row-group data)
     v = table(spark, sf_dir, "embeddings", spread=True).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb")
     )
-    # Memo key is the dataset's content signature (session._file_sig:
-    # for a directory of part files it aggregates part count/size/mtime,
-    # because the directory's own stat does NOT change when a part is
-    # rewritten in place — r7 ADVICE) so an in-process rewrite of the
-    # same path retrains instead of serving a stale codebook.
-    import os as _os
+    cbf, dtab = _pq_fit(spark, sf_dir, v)
+    return v, cbf, dtab
 
-    from xarray_sql_spark.session import _file_sig
 
-    fp = _os.path.join(sf_dir, "embeddings.parquet")
-    cache_key = (sf_dir, _file_sig(fp))
-    if cache_key in _PQ_TRAIN_CACHE:
-        cbf, dtab = _PQ_TRAIN_CACHE[cache_key]
-        return v, cbf, dtab
-
+@train_memo("embeddings.parquet")
+def _pq_fit(spark: SparkSession, sf_dir: str, v: DataFrame):
+    """``(cbf, dtab)`` of :func:`_pq_train` over its full-vector table
+    ``v``, or ``(None, None)``."""
     # One tiny job: seed + query vectors off the corpus (k + nq rows).
     picked = {
         r["vec_id"]: list(r["emb"])
@@ -1949,7 +1937,7 @@ def _pq_train(spark: SparkSession, sf_dir: str):
     seed_js = [j for j in range(_PQ_K) if j in picked]
     queries_present = [q for q in _PQ_QUERIES if q in picked]
     if not seed_js or not queries_present:
-        return v, None, None
+        return None, None
     seed_books = {
         s: {j: half(picked[j], s) for j in seed_js} for s in (0, 1)
     }
@@ -2032,8 +2020,7 @@ def _pq_train(spark: SparkSession, sf_dir: str):
         for s in (0, 1)
         for j in seed_js
     }
-    _PQ_TRAIN_CACHE[cache_key] = (cbf, dtab)
-    return v, cbf, dtab
+    return cbf, dtab
 
 
 @query(

@@ -44,12 +44,10 @@ broadcast hash join. No Python UDF anywhere on the hot path.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from xarray_sql_spark.registry import query
+from xarray_sql_spark.registry import query, train_memo
 from xarray_sql_spark.session import table
 
 _BPE_N_MERGES = 8
@@ -186,28 +184,15 @@ def _word_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
 # while bench / driver runs over one sf_dir train once per process however
 # many queries ride the vocabulary (ts19/pl08/pl10/ts13/pl16 share one
 # training).
-from xarray_sql_spark.registry import register_train_cache as _rtc
-
-_MERGES_CACHE: dict[tuple, list[tuple[str, str]]] = _rtc({})
-
-
+@train_memo("documents.parquet")
 def bpe_merges(spark: SparkSession, sf_dir: str) -> list[tuple[str, str]]:
-    from xarray_sql_spark.session import _file_sig
-
-    path = os.path.join(sf_dir, "documents.parquet")
-    key = _file_sig(os.path.abspath(path))
-    cached = _MERGES_CACHE.get(key)
-    if cached is not None:
-        return cached
     sample = (
         _word_freq(spark, sf_dir)
         .orderBy(F.desc("cnt"), "word")
         .limit(_BPE_K_SAMPLE)
         .collect()
     )
-    merges = train_merges([(r.word, r.cnt) for r in sample])
-    _MERGES_CACHE[key] = merges
-    return merges
+    return train_merges([(r.word, r.cnt) for r in sample])
 
 
 def _merge_fold_spark(col: Column, pa: str, pb: str) -> Column:

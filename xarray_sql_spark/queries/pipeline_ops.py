@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from xarray_sql_spark.registry import query
+from xarray_sql_spark.registry import query, train_memo
 from xarray_sql_spark.session import table
 
 STOPWORDS = ("the", "a", "of", "to", "and", "in")
@@ -4315,11 +4315,7 @@ def _ts20_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).selectExpr("doc_id", "ws", "split", f"{_TS20_LABEL_SPARK} AS y")
 
 
-from xarray_sql_spark.registry import register_train_cache as _rtc
-
-_TS20_CACHE: dict[tuple, tuple[list[int], int]] = _rtc({})
-
-
+@train_memo("documents.parquet")
 def ts20_train(spark: SparkSession, sf_dir: str) -> tuple[list[int], int]:
     """Train the scorer; returns (per-bucket micro-weights, micro-bias).
 
@@ -4331,14 +4327,6 @@ def ts20_train(spark: SparkSession, sf_dir: str) -> tuple[list[int], int]:
     the 1e-6 grid as BIGINT micro-units, so scoring is pure integer
     arithmetic — order-independent and engine-exact."""
     import math
-    import os as _os
-
-    from xarray_sql_spark.session import _file_sig
-
-    key = _file_sig(_os.path.abspath(_os.path.join(sf_dir, "documents.parquet")))
-    cached = _TS20_CACHE.get(key)
-    if cached is not None:
-        return cached
 
     train = _ts20_base(spark, sf_dir).filter("split = 'train'")
     # ONE tokenize pass for BOTH the bucket counts and the class priors
@@ -4388,7 +4376,6 @@ def ts20_train(spark: SparkSession, sf_dir: str) -> tuple[list[int], int]:
         ) * 1000000.0
         iw.append(_half_away(v))
     bias = _half_away(math.log((n_pos + 1) / float(n_neg + 1)) * 1000000.0)
-    _TS20_CACHE[key] = (iw, bias)
     return iw, bias
 
 
@@ -6312,9 +6299,7 @@ def _pl21_base(spark: SparkSession, sf_dir: str):
     return d, bg
 
 
-_PL21_CACHE: dict[tuple, list[int]] = _rtc({})
-
-
+@train_memo("documents.parquet")
 def pl21_model(spark: SparkSession, sf_dir: str) -> list[int]:
     """Fit the DSIR importance model; returns 64 micro log-ratios.
 
@@ -6326,14 +6311,6 @@ def pl21_model(spark: SparkSession, sf_dir: str) -> list[int]:
     micro log-ratios with the oracle's exact operation order (ln of a
     quotient of quotients, round half-away on the 1e-6 grid)."""
     import math
-    import os as _os
-
-    from xarray_sql_spark.session import _file_sig
-
-    key = _file_sig(_os.path.abspath(_os.path.join(sf_dir, "documents.parquet")))
-    cached = _PL21_CACHE.get(key)
-    if cached is not None:
-        return cached
 
     _, bg = _pl21_base(spark, sf_dir)
     cnt = (
@@ -6360,7 +6337,6 @@ def pl21_model(spark: SparkSession, sf_dir: str) -> list[int]:
             * 1000000.0
         )
         s.append(_half_away(v))
-    _PL21_CACHE[key] = s
     return s
 
 
@@ -6657,9 +6633,7 @@ def _ts25_feats_expr(engine: str) -> str:
     )
 
 
-_TS25_CACHE: dict[tuple, tuple[list[int], int]] = _rtc({})
-
-
+@train_memo("documents.parquet")
 def ts25_train(spark: SparkSession, sf_dir: str) -> tuple[list[int], int]:
     """Train the n-gram scorer; returns (128 micro-weights, micro-bias).
     Same contract as ts20_train: ONE exploded pass with map-side combine
@@ -6667,14 +6641,6 @@ def ts25_train(spark: SparkSession, sf_dir: str) -> tuple[list[int], int]:
     the class priors), one <= 129-row driver collect, weights rounded
     half-away onto the 1e-6 grid as BIGINTs."""
     import math
-    import os as _os
-
-    from xarray_sql_spark.session import _file_sig
-
-    key = _file_sig(_os.path.abspath(_os.path.join(sf_dir, "documents.parquet")))
-    cached = _TS25_CACHE.get(key)
-    if cached is not None:
-        return cached
 
     train = (
         _ts20_base(spark, sf_dir)
@@ -6716,7 +6682,6 @@ def ts25_train(spark: SparkSession, sf_dir: str) -> tuple[list[int], int]:
         ) * 1000000.0
         iw.append(_half_away(v))
     bias = _half_away(math.log((n_pos + 1) / float(n_neg + 1)) * 1000000.0)
-    _TS25_CACHE[key] = (iw, bias)
     return iw, bias
 
 

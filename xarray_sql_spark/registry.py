@@ -14,8 +14,10 @@ Cross-engine determinism conventions (the driver hash-compares values):
 
 from __future__ import annotations
 
+import functools
+import os
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -44,9 +46,36 @@ TRAIN_CACHES: list[dict] = []
 
 
 def register_train_cache(cache: dict) -> dict:
-    """Register a driver-side train memo for per-rep clearing by bench.py."""
+    """Register a driver-side train memo for per-rep clearing by bench.py.
+    Kept beside :func:`train_memo` for older revisions' query modules,
+    which ``scripts/ab.py`` runs against this registry."""
     TRAIN_CACHES.append(cache)
     return cache
+
+
+def train_memo(input_name: str):
+    """Decorator memoizing a driver-side training ``fn(spark, sf_dir, ...)``
+    on the content signature of ``sf_dir/input_name`` (``session._file_sig``,
+    so an in-process rewrite of the input retrains); the remaining
+    arguments must be derived from those two. The memo, registered for
+    :func:`reset_train_caches`, is the wrapper's ``cache``."""
+
+    def deco(fn):
+        cache = register_train_cache({})
+
+        @functools.wraps(fn)
+        def memoized(spark, sf_dir, *args):
+            from xarray_sql_spark.session import _file_sig
+
+            key = _file_sig(os.path.abspath(os.path.join(sf_dir, input_name)))
+            if key not in cache:
+                cache[key] = fn(spark, sf_dir, *args)
+            return cache[key]
+
+        memoized.cache = cache
+        return memoized
+
+    return deco
 
 
 def reset_train_caches() -> int:

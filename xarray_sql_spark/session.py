@@ -235,9 +235,3 @@ def table(
             df = df.repartition(cores)
     per_session[cache_key] = df
     return df
-
-
-def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES) -> None:
-    """Register the parquet tables as temp views so SQL-form queries run."""
-    for name in names:
-        table(spark, sf_dir, name).createOrReplaceTempView(name)

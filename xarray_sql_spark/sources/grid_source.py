@@ -18,16 +18,19 @@ Design mapping (SURVEY.md §2A):
   partials; blocks whose cells all fail the filter's coordinate masks are
   never read. Under a dense lookup join the aggregate also carries the
   small side's values, which each block gathers per cell.
-- A2 pruning: ``pushFilters`` receives Catalyst's convertible predicates,
-  prunes partitions by per-dim bounds, and returns ALL filters unhandled so
-  Spark re-applies them row-level — exactly the reference's Inexact contract
+- A2 pruning: ``pushFilters`` turns Catalyst's convertible predicates on
+  dims into exact coordinate masks (``bounds.dim_masks``, the evaluator the
+  partial-aggregate scans use too) and ``partitions()`` keeps the blocks
+  holding a cell that passes them; it returns ALL filters unhandled so
+  Spark re-applies them row-level — the reference's Inexact contract
   (src/lib.rs:548-565). Requires spark.sql.python.filterPushdown.enabled.
 - A3 column pruning: ``read()`` materializes only the data variables present
   in the schema Spark hands the reader, and pivots only the dim columns it
   names; store-backed datasets mmap just those arrays' block bytes (the
   Zarr-selective-read equivalent, src/lib.rs:597-652).
-- A7 bounds: chunked-dim bounds per block + static bounds for unchunked dims
-  hoisted and computed once (reference reader.py:306-335).
+- A7: the reference's per-block min/max bounds (reader.py:306-335) are
+  not built; masks over whole dims replace them, so planning holds one
+  boolean array per filtered dim, not one bounds dict per block.
 - Laziness: building the reader/partitions touches only coordinate arrays;
   data-variable bytes are first read inside executor ``read()`` calls
   (reference property: tests/test_reader.py:71-305).
@@ -49,6 +52,7 @@ equivalent of the reference's ``_iteration_callback`` test hook
 
 from __future__ import annotations
 
+import datetime as _dt
 import json
 import math
 import os
@@ -63,14 +67,21 @@ from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
     DataSourceStreamReader,
+    EqualTo,
     Filter,
+    GreaterThan,
+    GreaterThanOrEqual,
+    In,
     InputPartition,
+    IsNotNull,
+    LessThan,
+    LessThanOrEqual,
 )
 from pyspark.sql.types import StructType
 
 from xarray_sql_spark import chunks as chunklib
 from xarray_sql_spark import pivot
-from xarray_sql_spark.bounds import block_may_match, dim_bounds
+from xarray_sql_spark.bounds import dim_masks
 from xarray_sql_spark.dataset import Dataset
 from xarray_sql_spark.sources import partials, zipguard
 
@@ -221,34 +232,22 @@ class GridReader(DataSourceReader):
             self.read_vars = [v for v in payload["var_names"] if v in self.read_columns]
         # String-dim pruning is sound only under binary collation; the
         # registration layer captures the session default (bounds.py doc)
-        self.prune_strings: bool = bool(payload.get("binary_collation", True))
+        self.binary_collation: bool = bool(payload.get("binary_collation", True))
         # Packing inputs (module doc, A1); None keeps one block per task.
         self.cores: int | None = payload.get("cores")
         self.max_partition_bytes: int = payload.get("max_partition_bytes", 128 * 2**20)
-        self._filters: list[Filter] = []
-        # Driver-side, coordinate-only work: block grid + bounds (A6/A7).
+        # dim -> mask of the pushed filters (pushFilters)
+        self._masks: dict[str, np.ndarray] = {}
+        # Driver-side, coordinate-only work: the block grid (A6).
         ds = self.dataset if self.dataset is not None else Dataset.open_store(self.store_path)
         sizes = ds.sizes
         self._cell_bytes = sum(
             np.dtype(ds.data_vars[v].dtype).itemsize for v in self.read_vars
         )
-        chunks = payload.get("chunks")
         self.coords = _grid_coords(ds, self.dims)
-        chunked_dims = {d: c for d, c in (chunks or {}).items() if d in sizes and c < sizes[d]}
-        static_bounds = dim_bounds(
-            self.coords, {d: slice(0, sizes[d]) for d in self.dims if d not in chunked_dims}
+        self._blocks = list(
+            chunklib.block_slices({d: sizes[d] for d in self.dims}, payload.get("chunks"))
         )
-        self._blocks = list(chunklib.block_slices({d: sizes[d] for d in self.dims}, chunks))
-        # Per-block bounds over CHUNKED dims only — the static (unchunked)
-        # bounds are computed once above; recomputing them per block would
-        # make reader construction O(#blocks x unchunked dim length).
-        self._bounds = [
-            {
-                **static_bounds,
-                **dim_bounds(self.coords, {d: sl for d, sl in b.items() if d in chunked_dims}),
-            }
-            for b in self._blocks
-        ]
 
     def __getstate__(self):
         # pyspark pickles the reader into the planner's answer and every
@@ -256,7 +255,7 @@ class GridReader(DataSourceReader):
         # whole-dim array (each partition carries its own block's data,
         # coordinates and aggregate axes), so the payload is O(1) in the
         # grid's size.
-        planner_only = ("_blocks", "_bounds", "_filters", "_cell_bytes", "coords")
+        planner_only = ("_blocks", "_masks", "_cell_bytes", "coords")
         state = {k: v for k, v in self.__dict__.items() if k not in planner_only}
         state["dataset"] = None
         if self.aggregate:
@@ -265,19 +264,18 @@ class GridReader(DataSourceReader):
 
     # -- pruning (A2) ------------------------------------------------------
     def pushFilters(self, filters: list[Filter]) -> Iterator[Filter]:
-        self._filters = list(filters)
+        preds = [p for p in map(_filter_pred, filters) if p is not None]
+        self._masks = dim_masks(self.coords, preds, self.binary_collation)[0]
         # Return everything: Catalyst keeps a row-level Filter above the
         # scan (the reference's Inexact semantics, src/lib.rs:548-565).
         return iter(filters)
 
     def partitions(self) -> list[GridPartition] | list[PackedPartition]:
-        masks = self.aggregate["masks"] if self.aggregate else {}
+        masks = self.aggregate["masks"] if self.aggregate else self._masks
         parts = []
         cells = 0
-        for i, (block, bounds) in enumerate(zip(self._blocks, self._bounds)):
-            if block_may_match(
-                bounds, self._filters, self.prune_strings
-            ) and partials.block_has_cells(masks, block):
+        for i, block in enumerate(self._blocks):
+            if partials.block_has_cells(masks, block):
                 parts.append(
                     GridPartition(
                         i,
@@ -355,6 +353,56 @@ class GridReader(DataSourceReader):
         fname = f"read_{index}_{uuid.uuid4().hex}.json"
         with open(os.path.join(self.read_log_dir, fname), "w") as f:
             json.dump(rec, f)
+
+
+_FILTER_OPS = {
+    EqualTo: "=",
+    GreaterThan: ">",
+    GreaterThanOrEqual: ">=",
+    LessThan: "<",
+    LessThanOrEqual: "<=",
+    In: "in",
+}
+_EPOCH = _dt.datetime(1970, 1, 1)
+_EPOCH_UTC = _EPOCH.replace(tzinfo=_dt.timezone.utc)
+_US = _dt.timedelta(microseconds=1)
+
+
+def _filter_literal(v) -> tuple | None:
+    """A pushed filter value as ``(value, Spark type name)``, the literal
+    form ``bounds.dim_masks`` takes, or None for a type it does not mirror
+    (bool, Decimal, date, ...)."""
+    if isinstance(v, bool):
+        return None
+    if isinstance(v, int):
+        return (v, "long")
+    if isinstance(v, float):
+        return (v, "double")
+    if isinstance(v, str):
+        return (v, "string")
+    if isinstance(v, _dt.datetime):
+        if v.tzinfo is None:
+            return ((v - _EPOCH) // _US, "timestamp_ntz")
+        return ((v - _EPOCH_UTC) // _US, "timestamp")
+    return None
+
+
+def _filter_pred(f: Filter) -> tuple | None:
+    """A pushed filter as a ``bounds.dim_masks`` conjunct, or None when it
+    narrows nothing (Not, IsNull, EqualNullSafe, string patterns, a value
+    type without a mirror)."""
+    attr = getattr(f, "attribute", ())
+    if len(attr) != 1:
+        return None
+    if isinstance(f, IsNotNull):
+        return (("col", attr[0]), "notnull", ())
+    op = _FILTER_OPS.get(type(f))
+    if op is None:
+        return None
+    lits = tuple(map(_filter_literal, f.value if op == "in" else (f.value,)))
+    if not lits or None in lits:
+        return None
+    return (("col", attr[0]), op, lits)
 
 
 def _var_block(var, block: dict) -> np.ndarray:

@@ -37,6 +37,7 @@
 from __future__ import annotations
 
 import json
+import math
 import os
 import pickle
 import re
@@ -49,72 +50,10 @@ import numpy as np
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
-from xarray_sql_spark.dataset import Dataset, Variable
+from xarray_sql_spark.bounds import dim_masks
+from xarray_sql_spark.dataset import Dataset
 from xarray_sql_spark.pivot import DEFAULT_BATCH_SIZE
 from xarray_sql_spark.sources.grid_source import FORMAT_NAME, GridDataSource, make_payload
-
-
-_INT_SQL_TYPES = {"integer", "long", "short", "byte"}
-
-
-def _coord_predicate_mask(coords: np.ndarray, op: str, lits) -> np.ndarray | None:
-    """Evaluate one filter conjunct against a coordinate array with
-    EXACTLY Spark's comparison semantics, or None if we can't guarantee
-    that (type mismatch, NaN coords where Spark orders NaN greatest,
-    unsupported dtype)."""
-    kinds = {t for _v, t in lits}
-    vals = [v for v, _t in lits]
-    if coords.dtype.kind == "M":
-        if not kinds <= {"timestamp", "timestamp_ntz"}:
-            return None
-        if np.isnat(coords).any():
-            # NaT pivots to SQL NULL (excluded by every comparison); the
-            # int64 view would compare it as INT64_MIN and over-count.
-            return None
-        # the pivoted table exposes microsecond timestamps, so compare in
-        # the same truncated domain the engine would
-        cv = coords.astype("datetime64[us]").astype(np.int64)
-    elif coords.dtype.kind in "iu":
-        if not kinds <= _INT_SQL_TYPES:
-            return None
-        cv = coords
-    elif coords.dtype.kind == "f":
-        if not kinds <= (_INT_SQL_TYPES | {"double", "float"}):
-            return None
-        if np.isnan(coords).any():
-            return None  # Spark orders NaN greatest; numpy compares False
-        cv = coords
-    elif coords.dtype.kind in "US":
-        if kinds != {"string"}:
-            return None
-        cv = coords.astype(str)
-        vals = [str(v) for v in vals]
-    else:
-        return None
-    if op == ">":
-        return cv > vals[0]
-    if op == ">=":
-        return cv >= vals[0]
-    if op == "<":
-        return cv < vals[0]
-    if op == "<=":
-        return cv <= vals[0]
-    if op == "=":
-        return cv == vals[0]
-    if op == "in":
-        # Validate the literal->coord-dtype cast explicitly: an out-of-range
-        # IN value (e.g. a long literal against int32 coords) overflow-wraps
-        # SILENTLY on older numpy instead of raising, which would produce a
-        # wrong mask. Round-trip the cast through Python scalars and fall
-        # back to the engine on any mismatch.
-        try:
-            cast = np.asarray(vals).astype(cv.dtype)
-            if cast.tolist() != np.asarray(vals).tolist():
-                return None
-        except Exception:
-            return None
-        return np.isin(cv, cast)
-    return None
 
 
 def _join_key_values(values: np.ndarray, kind: str) -> np.ndarray:
@@ -131,6 +70,11 @@ def _join_key_values(values: np.ndarray, kind: str) -> np.ndarray:
     if values.dtype.kind == "f":
         return values.astype(np.float64) + 0.0
     return values.astype(np.int64)
+
+
+def _dim_coords(ds: Dataset, dims) -> dict[str, np.ndarray]:
+    """The coordinate arrays of ``dims`` that have one."""
+    return {d: ds.coords[d] for d in dims if d in ds.coords}
 
 
 def _group_vars_by_dims(ds: Dataset) -> dict[tuple[str, ...], list[str]]:
@@ -165,9 +109,9 @@ class XarraySession:
         self._tmpdir = tempfile.mkdtemp(prefix="xgrid_")
         # payload path -> (view name, registration kwargs, full DataFrame)
         self._payload_views: dict[str, tuple[str, dict, DataFrame]] = {}
-        # (view, derived-scan key) -> DataFrame of a pruned or partial-
-        # aggregate scan of that view (payload pickles reused)
-        self._pruned_cache: dict[tuple[str, tuple[str, ...]], DataFrame] = {}
+        # (view, derived-scan key) -> (DataFrame, payload path) of a pruned
+        # or partial-aggregate scan of that view (payload pickles reused)
+        self._pruned_cache: dict[tuple[str, tuple], tuple[DataFrame, str]] = {}
         # payload path -> DATASET name (full + pruned scans): the identity
         # check behind the pure-scan coordinate fast path (A12) — purity
         # alone must not let a scan of an unrelated table borrow a
@@ -195,11 +139,7 @@ class XarraySession:
         groups = _group_vars_by_dims(ds)
         table_names = dict(table_names or {})
         views: list[str] = []
-        # Re-registration invalidates payload->dataset identity (stale
-        # pruned payloads would otherwise validate against the NEW dataset)
-        self._payload_dataset = {
-            p: n for p, n in self._payload_dataset.items() if n != name
-        }
+        self._forget_views(self._tables.get(name, []))
 
         scalar_vars = [v for dims, vs in groups.items() if dims == () for v in vs]
         nd_groups = {dims: vs for dims, vs in groups.items() if dims != ()}
@@ -235,12 +175,6 @@ class XarraySession:
                     self.spark.catalog.dropTempView(old)
                 except Exception:
                     pass
-                self._pruned_cache = {
-                    k: v for k, v in self._pruned_cache.items() if k[0] != old
-                }
-                self._payload_views = {
-                    p: t for p, t in self._payload_views.items() if t[0] != old
-                }
         self._registered_datasets[name] = ds
         self._registered_chunks[name] = dict(chunks) if chunks else {}
         self._tables[name] = views
@@ -301,19 +235,24 @@ class XarraySession:
             read_log_dir=read_log_dir,
             var_names=var_names,
         )
-        # Re-registration under an existing view name must invalidate the
-        # pruned-scan cache and the old payload mapping, or projection
-        # pushdown re-plans against the PREVIOUS dataset's data.
-        self._pruned_cache = {
-            k: v for k, v in self._pruned_cache.items() if k[0] != view
-        }
-        self._payload_views = {
-            p: t for p, t in self._payload_views.items() if t[0] != view
-        }
+        self._forget_views([view])  # another dataset's view of that name
         df, path = self._scan_df(kwargs)
         df.createOrReplaceTempView(view)
         self._payload_views[path] = (view, kwargs, df)
         return path
+
+    def _forget_views(self, views) -> None:
+        """Drop every scan the session derived from ``views``: their payload
+        entries, their cached pruned and partial scans, and the dataset
+        identity of those payloads. A view re-registered without this would
+        keep re-planning (projection pushdown, aggregate shortcuts) and
+        validating pure scans against the PREVIOUS dataset's data."""
+        views = set(views)
+        paths = {p for p, t in self._payload_views.items() if t[0] in views}
+        paths |= {p for k, (_df, p) in self._pruned_cache.items() if k[0] in views}
+        self._payload_views = {p: t for p, t in self._payload_views.items() if p not in paths}
+        self._pruned_cache = {k: e for k, e in self._pruned_cache.items() if k[0] not in views}
+        self._payload_dataset = {p: n for p, n in self._payload_dataset.items() if p not in paths}
 
     def _binary_collation(self) -> bool:
         """True when the session's default string collation compares by
@@ -331,7 +270,7 @@ class XarraySession:
         payload = make_payload(**make_payload_kwargs)
         # Capture session facts at registration time: the DataSource plans
         # in a separate Python worker with no session handle. String-dim
-        # pruning bounds are only sound under binary collation
+        # pruning masks are only sound under binary collation
         # (bounds.py); the core count and split size drive block packing.
         payload["binary_collation"] = self._binary_collation()
         payload["cores"] = self.spark.sparkContext.defaultParallelism
@@ -366,16 +305,15 @@ class XarraySession:
             if cols >= full_cols:
                 continue
             key = (view, tuple(sorted(cols)))
-            pruned = self._pruned_cache.get(key)
-            if pruned is None:
+            if key not in self._pruned_cache:
                 pruned, ppath = self._scan_df({**kwargs, "columns": sorted(cols)})
-                self._pruned_cache[key] = pruned
+                self._pruned_cache[key] = (pruned, ppath)
                 # a pruned scan is still a scan of the same dataset — keep
                 # the A12 identity map covering it
                 if payload in self._payload_dataset:
                     self._payload_dataset[ppath] = self._payload_dataset[payload]
             swaps.append((view, full_df))
-            pruned.createOrReplaceTempView(view)
+            self._pruned_cache[key][0].createOrReplaceTempView(view)
         if not swaps:
             return df
         try:
@@ -488,48 +426,22 @@ class XarraySession:
 
     def _dim_masks(self, ds: Dataset, dims, preds) -> dict[str, np.ndarray] | None:
         """Per-dim boolean masks of the filter conjuncts (no conjunct on a
-        dim: no mask), or None if any conjunct can't be mirrored exactly.
-        A conjunct's term is a dim or a datetime field of a datetime dim."""
-        from xarray_sql_spark.sources.partials import datetime_field
-
-        masks: dict[str, np.ndarray] = {}
-        for (kind, dim), op, lits in preds:
-            if dim not in dims or dim not in ds.coords:
-                return None  # a data variable, or an implicit coordless dim
-            coords = np.asarray(ds.coords[dim])
-            if kind != "col":
-                if coords.dtype.kind != "M" or np.isnat(coords).any():
-                    return None
-                coords = datetime_field(coords, kind)
-            if coords.dtype.kind in "US" and not self._binary_collation():
-                # numpy compares strings by code point; a collation-aware
-                # session default (e.g. UTF8_LCASE) compares differently,
-                # so the shortcut must defer to the engine (bounds.py doc).
-                return None
-            mask = masks.setdefault(dim, np.ones(len(coords), dtype=bool))
-            if op == "notnull":
-                # Dim coords are non-null EXCEPT NaT/NaN axis values, which
-                # pivot to SQL NULL — mask those out instead of skipping.
-                if coords.dtype.kind in "Mm":
-                    np.logical_and(mask, ~np.isnat(coords), out=mask)
-                elif coords.dtype.kind == "f":
-                    np.logical_and(mask, ~np.isnan(coords), out=mask)
-                continue
-            m = _coord_predicate_mask(coords, op, lits)
-            if m is None:
-                return None
-            np.logical_and(mask, m, out=mask)
-        return masks
+        dim: no mask), or None if any conjunct can't be mirrored exactly
+        (bounds.dim_masks)."""
+        masks, exact = dim_masks(_dim_coords(ds, dims), preds, self._binary_collation())
+        return masks if exact else None
 
     def _metadata_aggregates_df(self, df, spec, ds, dims, masks) -> DataFrame | None:
         """A global MIN/MAX/COUNT over dim columns, from the coordinates."""
         out_names = [f.name for f in df.schema.fields]
         if len(set(out_names)) != len(out_names):
             return None  # duplicate output aliases: dict keying would collapse
-        total = 1
-        for d in dims:
+
+        def cells(masks):
             # ds.sizes covers implicit (coordless) dims too
-            total *= int(masks[d].sum()) if d in masks else int(ds.sizes[d])
+            return math.prod(int(masks[d].sum()) if d in masks else ds.sizes[d] for d in dims)
+
+        total = cells(masks)
         values: dict[str, object] = {}
         for out_name, (kind, col) in zip(out_names, spec.outputs):
             if kind == "count_star":
@@ -537,26 +449,13 @@ class XarraySession:
                 continue
             if kind == "count":
                 # COUNT(dim) excludes NULL rows: NaT/NaN coords pivot to SQL
-                # NULL, so the column's own axis contributes its NON-NULL
-                # (and filter-masked) count, other axes their masked counts.
-                cc = np.asarray(ds.coords[col]) if col in ds.coords else None
-                nn = None
-                if cc is not None and cc.dtype.kind in "Mm":
-                    nn = ~np.isnat(cc)
-                elif cc is not None and cc.dtype.kind == "f":
-                    nn = ~np.isnan(cc)
-                if nn is not None and not nn.all():
-                    cnt = 1
-                    for d in dims:
-                        m = masks.get(d)
-                        if d == col:
-                            m = nn if m is None else (m & nn)
-                            cnt *= int(m.sum())
-                        else:
-                            cnt *= int(m.sum()) if m is not None else int(ds.sizes[d])
-                    values[out_name] = cnt
-                else:
-                    values[out_name] = total
+                # NULL, so count the filter with a NOT NULL on the column
+                # (which the fold may skip only on dims holding no NULL)
+                values[out_name] = cells(dim_masks(
+                    _dim_coords(ds, dims),
+                    spec.preds + ((("col", col), "notnull", ()),),
+                    self._binary_collation(),
+                )[0])
                 continue
             if total == 0:
                 values[out_name] = None  # SQL MIN/MAX over zero rows
@@ -669,10 +568,9 @@ class XarraySession:
                  tuple((t, tuple(e)) for t, e in agg["stats"]), agg["rows"], spec.preds,
                  self._store_meta_fingerprint(store) if store else None),
             )
-            partial = self._pruned_cache.get(key)
-            if partial is None:
-                partial, _path = self._scan_df(scan_kwargs)
-                self._pruned_cache[key] = partial
+            if key not in self._pruned_cache:
+                self._pruned_cache[key] = self._scan_df(scan_kwargs)
+            partial = self._pruned_cache[key][0]
 
         # The merge is spelled in SQL text: pyspark wraps every Column
         # method to capture the Python call site, and the first such call
