@@ -7,6 +7,8 @@ from __future__ import annotations
 import glob
 import json
 import os
+import subprocess
+import sys
 import tempfile
 
 import numpy as np
@@ -186,11 +188,15 @@ def test_projection_reaches_storage(xs, read_log):
 
 @pytest.mark.parametrize("backing", ["memory", "store"])
 def test_projection_falls_back_when_the_pruned_view_cannot_analyze(
-    xs, read_log, tmp_path, backing
+    xs, read_log, tmp_path, backing, monkeypatch
 ):
     """count(lat) of a non-nullable dim optimizes to count(1), so the
-    optimized plan references only ``time``; re-planning the SQL text over a
-    view pruned to [time] cannot resolve ``lat`` and must run unpruned."""
+    optimized plan references only ``time``; the pruned view must still
+    hold the ``lat`` the SQL text names, or re-planning the text cannot
+    resolve it (which falls open to the unpruned scan, reading every
+    variable)."""
+    from pyspark.errors import AnalysisException
+
     from xarray_sql_spark.zarr_store import write_zarr
 
     time = np.arange("2024-01-01T00", "2024-01-03T00", dtype="datetime64[h]").astype(
@@ -209,11 +215,26 @@ def test_projection_falls_back_when_the_pruned_view_cannot_analyze(
     name = f"proj_fallback_{backing}"
     xs.from_dataset(name, ds, chunks={"time": 12}, store=store, read_log_dir=read_log.dir)
     xs.metadata_aggregates = False  # the shortcut answers this without a scan
+    raised = []
+    plan = xs.spark.sql
+
+    def sql(*a, **k):
+        try:
+            return plan(*a, **k)
+        except AnalysisException as e:
+            raised.append(e)
+            raise
+
+    monkeypatch.setattr(xs.spark, "sql", sql)
     n = xs.sql(
         f"SELECT count(lat) AS n FROM {name} WHERE time < TIMESTAMP '2024-01-02 00:00:00'"
     ).df.collect()[0]["n"]
     assert n == int((time < np.datetime64("2024-01-02")).sum()) * lat.size * lon.size
-    read_log.drain()
+    # the pruned view keeps the lat the text names, so the re-plan
+    # analyses and reads no data variable
+    assert raised == []
+    logs = [l for l in read_log.drain() if l["partition"] >= 0]
+    assert logs and all(l["vars_read"] == [] for l in logs)
     # an ordinary projected query still reads only the variable it names
     rows = xs.sql(
         f"SELECT time, lat, lon, t2m FROM {name} "
@@ -222,6 +243,35 @@ def test_projection_falls_back_when_the_pruned_view_cannot_analyze(
     np.testing.assert_array_equal([r["t2m"] for r in rows], t2m[:12].ravel())
     logs = [l for l in read_log.drain() if l["partition"] >= 0]
     assert logs and all(l["vars_read"] == ["t2m"] for l in logs)
+
+
+def test_session_payload_dir_is_removed_at_exit(tmp_path):
+    """A process that registers a grid and runs a query leaves no payload
+    directory behind once it exits."""
+    code = (
+        "import numpy as np\n"
+        "from pyspark.sql import SparkSession\n"
+        "from xarray_sql_spark.dataset import Dataset\n"
+        "from xarray_sql_spark.xr_session import XarraySession\n"
+        "spark = (SparkSession.builder.master('local[1]')\n"
+        "         .config('spark.ui.enabled', 'false').getOrCreate())\n"
+        "xs = XarraySession(spark)\n"
+        "xs.from_dataset('g', Dataset({'v': (('x',), np.arange(4.0))}, {'x': np.arange(4)}))\n"
+        "assert xs.sql('SELECT x, v FROM g WHERE x < 2').df.count() == 2\n"
+        "assert os.listdir(xs._tmpdir)\n"
+        "print(xs._tmpdir)\n"
+    )
+    env = {**os.environ, "TMPDIR": str(tmp_path)}
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", "import os\n" + code],
+        cwd=repo, env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    payload_dir = out.stdout.strip().splitlines()[-1]
+    assert os.path.dirname(payload_dir) == str(tmp_path)
+    assert not os.path.exists(payload_dir)
+    assert glob.glob(str(tmp_path / "xgrid_*")) == []
 
 
 # --- NaN -> null semantics (FIXTURES.md F7 golden answers) -----------------

@@ -394,6 +394,34 @@ def test_anomaly_self_join_runs_as_a_lookup(xs, read_log, tmp_path, backing):
     assert all(r[-1] == 72 for r in rows)  # every cell matched
 
 
+def test_every_scan_reads_the_one_registered_payload(spark, read_log):
+    """A projection, a GROUP BY and three lookup joins over one in-memory
+    table: the session directory holds one payload (the only file with the
+    Dataset); every other file is an aggregate dict alone."""
+    import pickle
+
+    xs = XarraySession(spark)
+    xs.from_dataset("pa_one", grid(), chunks={"time": 24}, read_log_dir=read_log.dir)
+    xs.sql("SELECT time, lat, lon, a FROM pa_one WHERE lat > 0").df.collect()
+    assert {tuple(r["vars_read"]) for r in read_log.drain() if r["partition"] >= 0} == {("a",)}
+    _compare(xs, read_log, "SELECT lat, AVG(a) m FROM pa_one GROUP BY lat")
+    for where in ("", "WHERE hour(time) < 6", "WHERE lat < 0"):
+        _lookup_reads(xs, read_log, ANOMALY.format(t="pa_one", where=where), 3)
+
+    objs = []
+    for name in os.listdir(xs._tmpdir):
+        with open(os.path.join(xs._tmpdir, name), "rb") as f:
+            objs.append(pickle.load(f))
+    payloads = [o for o in objs if isinstance(o.get("dataset"), Dataset)]
+    assert len(payloads) == 1
+    aggregates = [o for o in objs if o is not payloads[0]]
+    assert len(aggregates) >= 1 + 3 * 2
+    assert all(
+        set(o) == {"keys", "key_nullable", "stats", "rows", "masks", "lookup"}
+        for o in aggregates
+    )
+
+
 def test_missing_keys_drop_cells(xs, read_log):
     """A small side filtered to hours 0-5 holds a quarter of the keys: the
     other cells have no match and are not rows, so COUNT(*) skips them."""

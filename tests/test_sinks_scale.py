@@ -465,6 +465,32 @@ def test_distributed_zarr_sink_pure_scan_skips_axis_jobs(spark, tmp_path, monkey
     np.testing.assert_array_equal(back.coords["t"], t)
 
 
+def test_distributed_zarr_sink_pure_scan_of_some_variables(spark, tmp_path, monkeypatch):
+    """A pure scan of a strict subset of the variables reads a narrower
+    scan of the same registration: it still takes the source's axes."""
+    from xarray_sql_spark.operators import zarr_sink
+    from xarray_sql_spark.zarr_store import open_zarr
+
+    t = np.arange(40, dtype=np.int64)
+    y = np.arange(5, dtype=np.int64)
+    v = t[:, None] * 1.0 + y[None, :]
+    ds = Dataset({"v": Variable(("t", "y"), v), "w": Variable(("t", "y"), -v)}, {"t": t, "y": y})
+    xs = XarraySession(spark)
+    xs.from_dataset("dz_sub", ds, chunks={"t": 10})
+    res = xs.sql("SELECT t, y, v FROM dz_sub")
+
+    def _boom(*a, **k):
+        raise AssertionError("pure-scan sink path must not collect axes")
+
+    monkeypatch.setattr(zarr_sink, "_collect_axes", _boom)
+    path = str(tmp_path / "dz_sub.zarr")
+    stats = res.to_zarr_distributed(path, dims=["t", "y"], chunks={"t": 10})
+    assert sum(stats.values()) == 40 * 5
+    back = open_zarr(path)
+    assert set(back.data_vars) == {"v"}
+    np.testing.assert_allclose(back.data_vars["v"].values(), v)
+
+
 def test_distributed_zarr_sink_axis_guard(spark, tmp_path, monkeypatch):
     """The fallback axis fetch is length-guarded: an axis past MAX_AXIS_LEN
     fails fast with an actionable message instead of OOMing the driver."""

@@ -6,9 +6,9 @@ xarray_sql/__init__.py:1-12). This module provides the Spark-side twins of
 the function entry points so a reference user can switch imports 1:1:
 
 - ``read_xarray_table`` (reference reader.py:192-337) — register a Dataset
-  as a lazy, partition-pruned, projection-pushed table and get the
-  queryable DataFrame back. Registration reads nothing; WHERE clauses on
-  dim columns prune chunk partitions exactly as the reference documents.
+  as a lazy, partition-pruned table and get the queryable DataFrame back.
+  Registration reads nothing; WHERE clauses on dim columns prune chunk
+  blocks exactly as the reference documents.
 - ``from_map`` / ``from_map_batched`` (reference df.py:120-189, deprecated
   there) — map a pd.DataFrame-producing function over iterables. The local
   flavors return pyarrow objects like the reference; ``from_map_spark`` is
@@ -41,9 +41,10 @@ def read_xarray_table(
 
     Nothing is read at registration (reference reader.py:202-208 contract —
     pinned by tests/test_grid_engine.py::test_zero_reads_at_registration_and_planning);
-    each chunk is one input partition, dim-column predicates prune
-    partitions before any read, and projection pushdown trims the columns
-    read from the store. The returned DataFrame is re-queryable; every
+    dim-column predicates prune chunk blocks before any read, and the kept
+    blocks are packed into about one task per core. Every query over the
+    returned DataFrame reads every variable: projection pushdown runs only
+    inside ``XarraySession.sql``. The DataFrame is re-queryable; every
     query opens a fresh stream over the source.
     """
     from xarray_sql_spark.xr_session import XarraySession

@@ -11,23 +11,24 @@ Design mapping (SURVEY.md §2A):
   Arrow RecordBatches block by block (Arrow path: no row-by-row Python
   serialization), opening a store once per partition and reading only the
   data-variable blocks: each partition carries its own block's coordinates.
-- Partial aggregation: a payload with an ``aggregate`` entry (written by
-  ``XarraySession`` for a GROUP BY it can answer, ``sources/partials.py``)
-  turns each block into one row per group it holds — keys, float64 sums
-  of expressions, non-null counts, min/max — and Catalyst merges the
-  partials; blocks whose cells all fail the filter's coordinate masks are
-  never read. Under a dense lookup join the aggregate also carries the
-  small side's values, which each block gathers per cell.
+- Partial aggregation: a read with an ``aggregate`` option (a pickled
+  aggregate dict written by ``XarraySession`` for a GROUP BY it can
+  answer, ``sources/partials.py``) turns each block into one row per group
+  it holds — keys, float64 sums of expressions, non-null counts, min/max —
+  and Catalyst merges the partials; blocks whose cells all fail the
+  filter's coordinate masks are never read. Under a dense lookup join the
+  aggregate also carries the small side's values, gathered per cell.
 - A2 pruning: ``pushFilters`` turns Catalyst's convertible predicates on
   dims into exact coordinate masks (``bounds.dim_masks``, the evaluator the
   partial-aggregate scans use too) and ``partitions()`` keeps the blocks
   holding a cell that passes them; it returns ALL filters unhandled so
   Spark re-applies them row-level — the reference's Inexact contract
   (src/lib.rs:548-565). Requires spark.sql.python.filterPushdown.enabled.
-- A3 column pruning: ``read()`` materializes only the data variables present
-  in the schema Spark hands the reader, and pivots only the dim columns it
-  names; store-backed datasets mmap just those arrays' block bytes (the
-  Zarr-selective-read equivalent, src/lib.rs:597-652).
+- A3 column pruning: every scan of a registered table reads its one
+  payload through the schema it needs (the reference's
+  ``factory(projection_names)``, src/lib.rs:597-652); ``read()``
+  materializes only the data variables in that schema and pivots only the
+  dim columns it names, so a store-backed scan reads just those arrays.
 - A7: the reference's per-block min/max bounds (reader.py:306-335) are
   not built; masks over whole dims replace them, so planning holds one
   boolean array per filtered dim, not one bounds dict per block.
@@ -174,7 +175,9 @@ class GridDataSource(DataSource):
 
     ``payload`` is a driver-written pickle holding either an inline Dataset
     or a store path, plus the chunk spec — Spark options are strings, so the
-    Python-object handoff goes through a file in the Spark local dir.
+    Python-object handoff goes through a file. An ``aggregate`` option names
+    a second pickle, an aggregate dict (``sources/partials.py``) that makes
+    the read a partial aggregation of the same payload.
     """
 
     def __init__(self, options):
@@ -182,6 +185,7 @@ class GridDataSource(DataSource):
         self._payload_path = options.get("payload")
         if not self._payload_path:
             raise ValueError("xgrid requires .option('payload', <path to payload pickle>)")
+        self._aggregate_path = options.get("aggregate")
         self._payload = None
 
     def __getstate__(self):
@@ -198,6 +202,9 @@ class GridDataSource(DataSource):
         if self._payload is None:
             with open(self._payload_path, "rb") as f:
                 self._payload = pickle.load(f)
+            if self._aggregate_path:
+                with open(self._aggregate_path, "rb") as f:
+                    self._payload["aggregate"] = pickle.load(f)
         return self._payload
 
     def schema(self) -> StructType:
@@ -227,6 +234,7 @@ class GridReader(DataSourceReader):
         # partial columns; the aggregate names the variables to read.
         self.aggregate: dict | None = payload.get("aggregate")
         if self.aggregate:
+            self.arrow_schema = partials.partial_schema(self.arrow_schema, self.aggregate)
             self.read_vars = partials.read_vars(self.aggregate)
         else:
             self.read_vars = [v for v in payload["var_names"] if v in self.read_columns]
@@ -436,20 +444,12 @@ def make_payload(
     batch_size: int = pivot.DEFAULT_BATCH_SIZE,
     read_log_dir: str | None = None,
     var_names: list[str] | None = None,
-    columns: list[str] | None = None,
-    aggregate: dict | None = None,
 ) -> dict:
-    """Build the payload dict registered through the option file.
-
-    ``columns`` narrows the table schema itself (projection pushdown to
-    storage, A3): Spark 4.1 does not column-prune Python data sources, so
-    XarraySession analyzes each query's plan and re-registers pruned scans —
-    the data variables dropped here are never read from the store, and their
-    bytes never cross the Arrow boundary.
-
-    ``aggregate`` (see ``sources/partials.py``) makes the scan a partial
-    aggregation: the table schema becomes the partial columns.
-    """
+    """Build the payload dict registered through the option file: the
+    table's data (an inline Dataset or a store path), chunk spec and full
+    Arrow schema. It serves every scan of the table (A3): a projection
+    reads it through a narrower schema, a partial aggregation adds the
+    ``aggregate`` read option (``GridDataSource``)."""
     ds = dataset if dataset is not None else Dataset.open_store(store)
     if var_names is None:
         var_names = list(ds.data_vars)
@@ -460,24 +460,10 @@ def make_payload(
             # Implicit positional coordinate (reference: a dim with no
             # coordinate still pivots, using 0..n-1).
             sub.coords[d] = np.arange(sub.sizes[d], dtype=np.int64)
-    full_schema = pivot.infer_schema(
+    schema = pivot.infer_schema(
         dims, sub.coords, sub.data_vars, coord_meta=getattr(ds, "coord_attrs", None)
     )
-    if columns is not None:
-        keep = [n for n in full_schema.names if n in set(columns)]
-        if not keep:
-            keep = [dims[0]]  # COUNT(*)-style: one cheap dim column
-        schema = pa.schema([full_schema.field(n) for n in keep])
-        kept_vars = [v for v in var_names if v in set(keep)]
-        if not store:
-            sub = sub.select_vars(kept_vars)
-        var_names = kept_vars
-    else:
-        schema = full_schema
-    if aggregate is not None:
-        schema = partials.partial_schema(full_schema, aggregate)
     return {
-        "aggregate": aggregate,
         "dataset": None if store else sub,
         "store": store,
         "chunks": chunks,

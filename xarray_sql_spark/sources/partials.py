@@ -1,9 +1,10 @@
 """Leaf partial aggregation: one chunk block -> one Arrow row per group.
 
-The grid reader's aggregate mode (``payload["aggregate"]``, written by
-``XarraySession`` for an :class:`~xarray_sql_spark.plans.introspect.AggregateSpec`
-it can answer) reduces each block in numpy and emits the groups the block
-holds instead of its cells; Catalyst merges the partials with an ordinary
+The grid reader's aggregate mode (``payload["aggregate"]``, read from the
+``aggregate`` option that ``XarraySession`` writes for an
+:class:`~xarray_sql_spark.plans.introspect.AggregateSpec` it can answer)
+reduces each block in numpy and emits the groups the block holds instead
+of its cells; Catalyst merges the partials with an ordinary
 ``groupBy().agg()``. This is the serving-tree split of Dremel: leaves
 aggregate, the root merges.
 

@@ -36,24 +36,30 @@
 
 from __future__ import annotations
 
+import atexit
 import json
 import math
 import os
 import pickle
 import re
+import shutil
 import tempfile
 import uuid
-from typing import Mapping
+from typing import Mapping, NamedTuple
 
 import numpy as np
+import pyarrow as pa
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from xarray_sql_spark.bounds import dim_masks
 from xarray_sql_spark.dataset import Dataset
 from xarray_sql_spark.pivot import DEFAULT_BATCH_SIZE
-from xarray_sql_spark.sources.grid_source import FORMAT_NAME, GridDataSource, make_payload
+from xarray_sql_spark.sources.grid_source import (
+    FORMAT_NAME, GridDataSource, make_payload, spark_schema,
+)
 
 
 def _join_key_values(values: np.ndarray, kind: str) -> np.ndarray:
@@ -75,6 +81,17 @@ def _join_key_values(values: np.ndarray, kind: str) -> np.ndarray:
 def _dim_coords(ds: Dataset, dims) -> dict[str, np.ndarray]:
     """The coordinate arrays of ``dims`` that have one."""
     return {d: ds.coords[d] for d in dims if d in ds.coords}
+
+
+class _Table(NamedTuple):
+    """A registered grid table: its view, registration kwargs, full scan,
+    dataset name (the pure-scan identity, A12) and full Arrow schema."""
+
+    view: str
+    kwargs: dict
+    df: DataFrame
+    dataset: str
+    arrow_schema: pa.Schema
 
 
 def _group_vars_by_dims(ds: Dataset) -> dict[tuple[str, ...], list[str]]:
@@ -107,16 +124,15 @@ class XarraySession:
         self._registered_chunks: dict[str, dict] = {}
         self._tables: dict[str, list[str]] = {}  # dataset name -> view names
         self._tmpdir = tempfile.mkdtemp(prefix="xgrid_")
-        # payload path -> (view name, registration kwargs, full DataFrame)
-        self._payload_views: dict[str, tuple[str, dict, DataFrame]] = {}
-        # (view, derived-scan key) -> (DataFrame, payload path) of a pruned
-        # or partial-aggregate scan of that view (payload pickles reused)
-        self._pruned_cache: dict[tuple[str, tuple], tuple[DataFrame, str]] = {}
-        # payload path -> DATASET name (full + pruned scans): the identity
-        # check behind the pure-scan coordinate fast path (A12) — purity
-        # alone must not let a scan of an unrelated table borrow a
-        # registered grid's axes
-        self._payload_dataset: dict[str, str] = {}
+        # Removed at exit, not with the session: read_xarray_table drops its
+        # session while the DataFrame it returns still plans against these.
+        atexit.register(shutil.rmtree, self._tmpdir, ignore_errors=True)
+        # payload path -> registered table; every scan of a table reads its
+        # one payload, so the path is also the dataset identity behind the
+        # pure-scan coordinate fast path (A12)
+        self._payload_views: dict[str, _Table] = {}
+        # (view, derived-scan key) -> pruned or partial-aggregate scan
+        self._pruned_cache: dict[tuple[str, tuple], DataFrame] = {}
         # Aggregate shortcuts (A4 statistics and leaf partial aggregation):
         # on by default; tests that pin the cell SCAN path (pruning goldens)
         # turn it off to force the engine's plan.
@@ -144,27 +160,16 @@ class XarraySession:
         scalar_vars = [v for dims, vs in groups.items() if dims == () for v in vs]
         nd_groups = {dims: vs for dims, vs in groups.items() if dims != ()}
 
-        if len(nd_groups) == 1 and not scalar_vars:
-            dims, var_names = next(iter(nd_groups.items()))
-            path = self._register_table(
-                name, ds, var_names, chunks, batch_size, store, read_log_dir
-            )
-            self._payload_dataset[path] = name
-            views.append(name)
-        else:
-            for dims, var_names in nd_groups.items():
-                tbl = table_names.get(tuple(dims), "_".join(dims))
-                view = f"{name}__{tbl}"
-                path = self._register_table(
-                    view, ds, var_names, chunks, batch_size, store, read_log_dir
-                )
-                self._payload_dataset[path] = name
-                views.append(view)
-            if scalar_vars:
-                view = f"{name}__scalar"
-                row = {v: ds.data_vars[v].values().item() for v in scalar_vars}
-                self.spark.createDataFrame([row]).createOrReplaceTempView(view)
-                views.append(view)
+        single = len(nd_groups) == 1 and not scalar_vars
+        for dims, var_names in nd_groups.items():
+            view = name if single else f"{name}__{table_names.get(dims, '_'.join(dims))}"
+            self._register_table(view, name, ds, var_names, chunks, batch_size, store, read_log_dir)
+            views.append(view)
+        if scalar_vars:
+            view = f"{name}__scalar"
+            row = {v: ds.data_vars[v].values().item() for v in scalar_vars}
+            self.spark.createDataFrame([row]).createOrReplaceTempView(view)
+            views.append(view)
 
         # Re-registering under the same name with a different dims-group
         # structure must drop the previous registration's group views, or
@@ -220,13 +225,14 @@ class XarraySession:
     def _register_table(
         self,
         view: str,
+        name: str,
         ds: Dataset,
         var_names: list[str],
         chunks,
         batch_size: int,
         store: str | None,
         read_log_dir: str | None,
-    ) -> str:
+    ) -> None:
         kwargs = dict(
             dataset=None if store else ds,
             store=store,
@@ -236,23 +242,45 @@ class XarraySession:
             var_names=var_names,
         )
         self._forget_views([view])  # another dataset's view of that name
-        df, path = self._scan_df(kwargs)
+        payload = make_payload(**kwargs)
+        # Capture session facts at registration time: the DataSource plans
+        # in a separate Python worker with no session handle. String-dim
+        # pruning masks are only sound under binary collation
+        # (bounds.py); the core count and split size drive block packing.
+        payload["binary_collation"] = self._binary_collation()
+        payload["cores"] = self.spark.sparkContext.defaultParallelism
+        payload["max_partition_bytes"] = int(
+            self.spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+        )
+        path = self._dump("payload", payload)
+        df = self._read(path, spark_schema(payload["arrow_schema"]))
         df.createOrReplaceTempView(view)
-        self._payload_views[path] = (view, kwargs, df)
+        self._payload_views[path] = _Table(view, kwargs, df, name, payload["arrow_schema"])
+
+    def _dump(self, kind: str, obj) -> str:
+        path = os.path.join(self._tmpdir, f"{kind}_{uuid.uuid4().hex}.pkl")
+        with open(path, "wb") as f:
+            pickle.dump(obj, f)
         return path
+
+    def _read(self, path: str, schema: StructType, aggregate: dict | None = None) -> DataFrame:
+        """A scan of the payload at ``path`` through ``schema``; given the
+        schema, ``load()`` makes no planner call. ``aggregate`` makes it a
+        partial-aggregate scan (sources/partials.py)."""
+        reader = self.spark.read.format(FORMAT_NAME).option("payload", path).schema(schema)
+        if aggregate is not None:
+            reader = reader.option("aggregate", self._dump("aggregate", aggregate))
+        return reader.load()
 
     def _forget_views(self, views) -> None:
         """Drop every scan the session derived from ``views``: their payload
-        entries, their cached pruned and partial scans, and the dataset
-        identity of those payloads. A view re-registered without this would
-        keep re-planning (projection pushdown, aggregate shortcuts) and
-        validating pure scans against the PREVIOUS dataset's data."""
+        entries and their cached pruned and partial scans. A view
+        re-registered without this would keep re-planning (projection
+        pushdown, aggregate shortcuts) and validating pure scans against
+        the PREVIOUS dataset's data."""
         views = set(views)
-        paths = {p for p, t in self._payload_views.items() if t[0] in views}
-        paths |= {p for k, (_df, p) in self._pruned_cache.items() if k[0] in views}
-        self._payload_views = {p: t for p, t in self._payload_views.items() if p not in paths}
-        self._pruned_cache = {k: e for k, e in self._pruned_cache.items() if k[0] not in views}
-        self._payload_dataset = {p: n for p, n in self._payload_dataset.items() if p not in paths}
+        self._payload_views = {p: t for p, t in self._payload_views.items() if t.view not in views}
+        self._pruned_cache = {k: df for k, df in self._pruned_cache.items() if k[0] not in views}
 
     def _binary_collation(self) -> bool:
         """True when the session's default string collation compares by
@@ -266,31 +294,14 @@ class XarraySession:
             coll = "UTF8_BINARY"
         return (coll or "UTF8_BINARY").upper() == "UTF8_BINARY"
 
-    def _scan_df(self, make_payload_kwargs: dict) -> tuple[DataFrame, str]:
-        payload = make_payload(**make_payload_kwargs)
-        # Capture session facts at registration time: the DataSource plans
-        # in a separate Python worker with no session handle. String-dim
-        # pruning masks are only sound under binary collation
-        # (bounds.py); the core count and split size drive block packing.
-        payload["binary_collation"] = self._binary_collation()
-        payload["cores"] = self.spark.sparkContext.defaultParallelism
-        payload["max_partition_bytes"] = int(
-            self.spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
-        )
-        path = os.path.join(self._tmpdir, f"payload_{uuid.uuid4().hex}.pkl")
-        with open(path, "wb") as f:
-            pickle.dump(payload, f)
-        df = self.spark.read.format(FORMAT_NAME).option("payload", path).load()
-        return df, path
-
     # -- projection pushdown to storage (A3) -------------------------------
     # Spark 4.1 does not column-prune Python data sources (the scan's
     # ReadSchema stays full with a Project above). Compensation, per
     # SURVEY.md §4: analyze the optimized plan (plans/introspect.py), and
-    # for every grid scan that uses a strict subset of its columns,
-    # re-register a pruned scan and re-plan the query. View swaps are safe
-    # because Spark binds views at analysis time — they are restored
-    # immediately after re-planning.
+    # for every grid scan that uses a strict subset of its columns, swap in
+    # a read of its payload through the narrower schema and re-plan the
+    # query. View swaps are safe because Spark binds views at analysis
+    # time — they are restored immediately after re-planning.
     def _with_projection_pushdown(self, df: DataFrame, q: str, args) -> DataFrame:
         from xarray_sql_spark.plans.introspect import referenced_scan_columns
 
@@ -298,34 +309,33 @@ class XarraySession:
             needed = referenced_scan_columns(df, self._payload_views)
         except Exception:
             return df  # fail open: correct, just unpruned
-        swaps: list[tuple[str, DataFrame]] = []
-        for payload, cols in needed.items():
-            view, kwargs, full_df = self._payload_views[payload]
-            full_cols = set(self.spark.table(view).columns)
-            if cols >= full_cols:
+        swaps: list[_Table] = []
+        for path, cols in needed.items():
+            table = self._payload_views[path]
+            fields = table.df.schema.fields
+            # the optimized plan can drop a column the text names
+            # (count(lat) of a non-null lat is count(1)); the re-plan of the
+            # text must still resolve it
+            cols = cols | self._named_in(q, [f.name for f in fields])
+            if cols >= {f.name for f in fields}:
                 continue
-            key = (view, tuple(sorted(cols)))
+            key = (table.view, tuple(sorted(cols)))
             if key not in self._pruned_cache:
-                pruned, ppath = self._scan_df({**kwargs, "columns": sorted(cols)})
-                self._pruned_cache[key] = (pruned, ppath)
-                # a pruned scan is still a scan of the same dataset — keep
-                # the A12 identity map covering it
-                if payload in self._payload_dataset:
-                    self._payload_dataset[ppath] = self._payload_dataset[payload]
-            swaps.append((view, full_df))
-            self._pruned_cache[key][0].createOrReplaceTempView(view)
+                # COUNT(*)-style: one cheap dim column
+                keep = [f for f in fields if f.name in cols] or fields[:1]
+                self._pruned_cache[key] = self._read(path, StructType(keep))
+            swaps.append(table)
+            self._pruned_cache[key].createOrReplaceTempView(table.view)
         if not swaps:
             return df
         try:
             return self.spark.sql(q, args=args) if args else self.spark.sql(q)
         except AnalysisException:
-            # the columns come from the optimized plan, which can drop one
-            # the text names (count(lat) of a non-null lat is count(1)); the
-            # text already analysed against the full views, so keep those
+            # backstop: the text already analysed against the full views
             return df
         finally:
-            for view, full_df in swaps:
-                full_df.createOrReplaceTempView(view)
+            for table in swaps:
+                table.df.createOrReplaceTempView(table.view)
 
     # -- statistics aggregates (A4 extension) ------------------------------
     # DataFusion answers COUNT(*) (and could min/max) from exact scan
@@ -400,8 +410,7 @@ class XarraySession:
         spec = metadata_aggregate_spec(df, self._payload_views)
         if spec is None:
             return None
-        view, kwargs, _full = self._payload_views[spec.payload]
-        ds, dims = self._open_table_meta(kwargs)
+        ds, dims = self._open_table_meta(self._payload_views[spec.payload].kwargs)
         masks = self._dim_masks(ds, dims, spec.preds)
         if masks is None:
             return None
@@ -421,7 +430,7 @@ class XarraySession:
             lookup = self._lookup_arrays(spec, ds, dims)
             if lookup is None:
                 return None
-        merged = self._merged_aggregate(spec, ds, dims, masks, view, kwargs, lookup)
+        merged = self._merged_aggregate(spec, ds, dims, masks, lookup)
         return None if merged is None else self._select_as(merged, spec.select, df.schema)
 
     def _dim_masks(self, ds: Dataset, dims, preds) -> dict[str, np.ndarray] | None:
@@ -492,14 +501,13 @@ class XarraySession:
     # the merge is a fresh DataFrame per sql() call, so every query re-reads
     # the source.
     def _merged_aggregate(
-        self, spec, ds, dims, masks, view: str, kwargs: dict, lookup: dict | None = None
+        self, spec, ds, dims, masks, lookup: dict | None = None
     ) -> DataFrame | None:
         """Output ``i`` of ``spec``'s Aggregate node as column ``_a{i}``,
         merged from a partial scan, with the Filter and Sort nodes above it
         applied; None when the reader cannot answer ``spec``. ``lookup``
         (:meth:`_lookup_arrays`) makes the scan a dense lookup join."""
         from pyspark.sql import functions as F
-        from pyspark.sql.types import StructType
 
         from xarray_sql_spark.sources import partials
 
@@ -519,7 +527,8 @@ class XarraySession:
                 return None  # NULL keys: let the engine group them
             if c.dtype.kind in "USO" and not self._binary_collation():
                 return None  # string grouping is collation-dependent
-        var_names = kwargs.get("var_names") or list(ds.data_vars)
+        table = self._payload_views[spec.payload]
+        var_names = table.kwargs.get("var_names") or list(ds.data_vars)
 
         def is_float(v):
             return v in var_names and np.dtype(ds.data_vars[v].dtype).kind == "f"
@@ -555,22 +564,21 @@ class XarraySession:
             "masks": masks,
             "lookup": lookup,
         }
-        cols = sorted({c for _k, c in spec.keys} | set(partials.read_vars(agg)))
-        scan_kwargs = {**kwargs, "columns": cols, "aggregate": agg}
+        schema = spark_schema(partials.partial_schema(table.arrow_schema, agg))
         if lookup is not None:
             # the small side's values are data: a fresh scan per query
-            partial, _path = self._scan_df(scan_kwargs)
+            partial = self._read(spec.payload, schema, agg)
         else:
-            store = kwargs["store"]
+            store = table.kwargs["store"]
             key = (
-                view,
+                table.view,
                 ("aggregate", spec.keys, tuple(key_nullable),
                  tuple((t, tuple(e)) for t, e in agg["stats"]), agg["rows"], spec.preds,
                  self._store_meta_fingerprint(store) if store else None),
             )
             if key not in self._pruned_cache:
-                self._pruned_cache[key] = self._scan_df(scan_kwargs)
-            partial = self._pruned_cache[key][0]
+                self._pruned_cache[key] = self._read(spec.payload, schema, agg)
+            partial = self._pruned_cache[key]
 
         # The merge is spelled in SQL text: pyspark wraps every Column
         # method to capture the Python call site, and the first such call
@@ -668,12 +676,11 @@ class XarraySession:
             return None
 
         small = lk.small
-        sview, skwargs, _full = self._payload_views[small.payload]
-        sds, sdims = self._open_table_meta(skwargs)
+        sds, sdims = self._open_table_meta(self._payload_views[small.payload].kwargs)
         smasks = self._dim_masks(sds, sdims, small.preds)
         if smasks is None:
             return None
-        merged = self._merged_aggregate(small, sds, sdims, smasks, sview, skwargs)
+        merged = self._merged_aggregate(small, sds, sdims, smasks)
         if merged is None:
             return None
         key_out = [small.outputs.index(("key", k)) for _b, k in lk.keys]
@@ -728,16 +735,29 @@ class XarraySession:
                 i += 1
         return spans
 
+    @classmethod
+    def _outside_strings(cls, query: str):
+        """Whether a position of ``query`` lies outside its string literals."""
+        spans = cls._string_spans(query)
+        return lambda pos: not any(a < pos < b for a, b in spans)
+
+    @classmethod
+    def _named_in(cls, query: str, names) -> set[str]:
+        """The ``names`` that ``query`` spells outside its string literals,
+        case-insensitively (as Spark resolves them)."""
+        outside = cls._outside_strings(query)
+        return {
+            n for n in names
+            for m in re.finditer(rf"(?<!\w){re.escape(n)}(?!\w)", query, re.IGNORECASE)
+            if outside(m.start())
+        }
+
     def _rewrite(self, query: str) -> str:
         """Rewrite ``name.table`` -> ``name__table`` for registered
         namespaced datasets (temp views cannot be schema-qualified).
         Quoted string literals are never rewritten — ``'era5.surface'``
         stays a literal (round-2 ADVICE: the raw regex corrupted it)."""
-        spans = self._string_spans(query)
-
-        def outside(pos: int) -> bool:
-            return not any(a < pos < b for a, b in spans)
-
+        outside = self._outside_strings(query)
         for name, views in self._tables.items():
             if any(v.startswith(f"{name}__") for v in views):
                 query = re.sub(
@@ -774,11 +794,7 @@ class XarraySession:
     )
 
     def _or_to_in(self, query: str) -> str:
-        spans = self._string_spans(query)
-
-        def outside(pos: int) -> bool:
-            return not any(a < pos < b for a, b in spans)
-
+        outside = self._outside_strings(query)
         out: list[str] = []
         last = 0
         for m in self._OR_CHAIN.finditer(query):
@@ -818,7 +834,7 @@ class XarraySession:
             df,
             dict(self._registered_datasets),
             dict(self._registered_chunks),
-            dict(self._payload_dataset),
+            {p: t.dataset for p, t in self._payload_views.items()},
         )
 
     def table(self, name: str) -> DataFrame:
@@ -839,26 +855,19 @@ class XarraySession:
         from xarray_sql_spark.chunks import block_slices, block_num_rows
 
         view = self._rewrite(name)
-        for _, (v, kwargs, _df) in self._payload_views.items():
-            if v != view:
+        for table in self._payload_views.values():
+            if table.view != view:
                 continue
-            ds, dims = self._open_table_meta(kwargs)
+            ds, dims = self._open_table_meta(table.kwargs)
             all_sizes = ds.sizes  # covers implicit (coordless) dims too
             sizes = {d: all_sizes[d] for d in dims}
-            chunks = {
-                d: c for d, c in (kwargs["chunks"] or {}).items() if d in sizes
-            }
+            chunks = {d: c for d, c in (table.kwargs["chunks"] or {}).items() if d in sizes}
             blocks = list(block_slices(sizes, chunks or None))
-            rows_per_partition = [block_num_rows(b) for b in blocks]
-            total = 1
-            for s in sizes.values():
-                total *= s
-            full_block = {d: slice(0, sizes[d]) for d in dims}
             return {
-                "num_rows": total,
+                "num_rows": math.prod(sizes.values()),
                 "num_partitions": len(blocks),
-                "rows_per_partition": rows_per_partition,
-                "dim_bounds": dim_bounds(ds.coords, full_block),
+                "rows_per_partition": [block_num_rows(b) for b in blocks],
+                "dim_bounds": dim_bounds(ds.coords, {d: slice(0, n) for d, n in sizes.items()}),
                 "null_count": 0,  # dim coords are never null by construction
             }
         raise KeyError(f"'{name}' is not a registered grid table")
