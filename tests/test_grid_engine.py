@@ -9,7 +9,6 @@ import json
 import os
 import subprocess
 import sys
-import tempfile
 
 import numpy as np
 import pytest
@@ -33,8 +32,9 @@ def _reset_metadata_aggregates(xs):
 
 
 @pytest.fixture()
-def read_log():
-    d = tempfile.mkdtemp(prefix="readlog_")
+def read_log(tmp_path):
+    d = str(tmp_path / "readlog")
+    os.mkdir(d)
 
     class Log:
         dir = d
@@ -160,6 +160,91 @@ def test_non_monotonic_axis_prunes_by_coordinate(xs, read_log, tmp_path, backing
     logs = read_log.drain()
     assert sorted(l["partition"] for l in logs) == [1, 2]  # x = 1 and x = 8
     assert all(l["block"]["x"] in ([2, 4], [4, 6]) for l in logs)
+
+
+# --- exact dim-filter pushdown ----------------------------------------------
+_BOX = (
+    "SELECT time, lat, lon, air FROM {t} "
+    "WHERE time < TIMESTAMP '2013-01-01 05:00:00' AND lat BETWEEN 60 AND 70 AND lon > 215"
+)
+
+
+def _box_cells(ds: Dataset):
+    """The cells of ``_BOX``: 5 hours x 5 latitudes x 3 longitudes."""
+    t = ds.coords["time"] < np.datetime64("2013-01-01T05")
+    y = (ds.coords["lat"] >= 60) & (ds.coords["lat"] <= 70)
+    x = ds.coords["lon"] > 215
+    return t, y, x
+
+
+def test_mirrored_dim_filters_leave_the_plan(xs):
+    """The reader answers the dim conjuncts: the optimized plan keeps a
+    Filter only for the data-variable predicate, and the rows are exact."""
+    ds = air_small()
+    xs.from_dataset("exact_air", ds, chunks={"time": 4})
+    df = xs.sql(_BOX.format(t="exact_air") + " AND air > 280").df
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    filters = [line for line in plan.splitlines() if "Filter" in line]
+    assert len(filters) == 1, plan
+    assert "air" in filters[0]
+    assert not any(d in filters[0] for d in ("time", "lat", "lon")), plan
+    t, y, x = _box_cells(ds)
+    air = ds.data_vars["air"].values()
+    want = sorted(
+        (float(ds.coords["lat"][j]), float(ds.coords["lon"][k]), float(air[i, j, k]))
+        for i in np.flatnonzero(t) for j in np.flatnonzero(y) for k in np.flatnonzero(x)
+        if air[i, j, k] > 280
+    )
+    got = sorted((r["lat"], r["lon"], r["air"]) for r in df.collect())
+    assert got == want
+
+
+def test_dim_filtered_results_get_the_filtered_axes(xs, tmp_path):
+    """A dim-filtered query is no pure scan: the lazy to_dataset and the
+    distributed Zarr sink collect the result's axes instead of borrowing
+    the source's."""
+    from xarray_sql_spark.zarr_store import open_zarr
+
+    ds = air_small()
+    xs.from_dataset("exact_ax", ds, chunks={"time": 4})
+    t, y, x = _box_cells(ds)
+    want = {
+        "time": ds.coords["time"][t].astype("datetime64[us]"),
+        "lat": np.sort(ds.coords["lat"][y]),
+        "lon": ds.coords["lon"][x],
+    }
+    air = ds.data_vars["air"].values()[np.ix_(t, y, x)][:, ::-1]  # ascending lat
+    dims = ("time", "lat", "lon")
+    res = xs.sql(_BOX.format(t="exact_ax"))
+    lazy = res.to_dataset(dims=dims, template="exact_ax", chunks={"time": 4})
+    res.to_zarr_distributed(str(tmp_path / "box.zarr"), dims=list(dims))
+    for out in (lazy, open_zarr(str(tmp_path / "box.zarr"))):
+        for d in dims:
+            np.testing.assert_array_equal(np.sort(np.asarray(out.coords[d])), want[d])
+        got = out.data_vars["air"].values()
+        if out.coords["lat"][0] > out.coords["lat"][-1]:
+            got = got[:, ::-1]
+        np.testing.assert_array_equal(got, air)
+
+
+def test_slices_differing_in_literals_compile_no_new_code(xs):
+    """With the dim conjuncts answered in the reader, no box literal is
+    inlined into generated code: a second slice that differs from the
+    first only in its literals compiles no whole-stage class."""
+    xs.from_dataset("exact_cg", air_small(), chunks={"time": 4})
+    compiles = xs.spark._jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME()
+    q = (
+        "SELECT time, lat, lon, air FROM exact_cg WHERE time >= TIMESTAMP '{}' "
+        "AND time < TIMESTAMP '{}' AND lat BETWEEN {} AND {} AND lon BETWEEN {} AND {}"
+    )
+    xs.sql(q.format("2013-01-01 01:00:00", "2013-01-01 04:00:00", 60, 70, 205, 215)).df.collect()
+    before = compiles.getCount()
+    rows = xs.sql(
+        q.format("2013-01-01 06:00:00", "2013-01-01 08:00:00", 50, 55, 210, 217.5)
+    ).df.collect()
+    assert compiles.getCount() - before == 0
+    assert len(rows) == 2 * 3 * 4
 
 
 # --- projection pushdown golden (FIXTURES.md F11) --------------------------
@@ -694,8 +779,9 @@ def test_pruning_operator_matrix(xs, read_log):
     breadth): =, >, <= prune to exactly the covering chunks; IN prunes to
     the named chunks even when non-contiguous; != and NOT BETWEEN never
     prune (conservative keep, reference src/lib.rs:206-448) yet still
-    return exact rows because pruning is Inexact — Catalyst re-applies
-    every filter above the scan."""
+    return exact rows: the masks cannot mirror a negation, so the reader
+    hands those filters back (Inexact) and Catalyst re-applies them above
+    the scan."""
     xs.from_dataset(
         "prune_m", prune_fixture(), chunks={"time": 25}, read_log_dir=read_log.dir
     )

@@ -187,7 +187,9 @@ def test_reader_round_trip_yields_identical_batches(tmp_path, backing, columns):
 
 
 # --- block packing and task-side reads ----------------------------------------
-def _store_reader(tmp_path, cores=None, columns=None, max_partition_bytes=None):
+def _store_reader(
+    tmp_path, cores=None, columns=None, max_partition_bytes=None, open_cost_bytes=None
+):
     """A reader over a 9-block store (time chunks of 8 of 72 steps)."""
     store = write_zarr(_grid(72, 4, 3), str(tmp_path / "p.zarr"), chunks={"time": 8})
     payload = make_payload(store=store, chunks={"time": 8})
@@ -195,6 +197,8 @@ def _store_reader(tmp_path, cores=None, columns=None, max_partition_bytes=None):
         payload["cores"] = cores
     if max_partition_bytes is not None:
         payload["max_partition_bytes"] = max_partition_bytes
+    if open_cost_bytes is not None:
+        payload["open_cost_bytes"] = open_cost_bytes
     fields = payload["arrow_schema"]
     if columns is not None:
         fields = pa.schema([fields.field(c) for c in columns])
@@ -208,17 +212,23 @@ def test_packing_follows_the_file_partition_rule(tmp_path):
 
     # no core count in the payload: one block per partition
     assert [p.index for p in _store_reader(tmp_path).partitions()] == list(range(9))
-    # 4 cores: 4 contiguous, balanced runs covering all 9 blocks in order
-    parts = _store_reader(tmp_path, cores=4).partitions()
+    # with no open cost: 4 cores, 4 contiguous, balanced runs covering all
+    # 9 blocks in order
+    parts = _store_reader(tmp_path, cores=4, open_cost_bytes=0).partitions()
     assert all(isinstance(p, PackedPartition) for p in parts)
     runs = [[b.index for b in p.blocks] for p in parts]
     assert [i for r in runs for i in r] == list(range(9))
     assert sorted(len(r) for r in runs) == [2, 2, 2, 3]
     # bytes over maxPartitionBytes raise the task count above the cores
-    many = _store_reader(tmp_path, cores=2, max_partition_bytes=8 * 4 * 3 * 4 * 2 * 3)
+    many = _store_reader(
+        tmp_path, cores=2, max_partition_bytes=8 * 4 * 3 * 4 * 2 * 3, open_cost_bytes=0
+    )
     assert len(many.partitions()) == 3
+    # a scan that reads no variable is sized by its emitted coordinates
+    assert len(_store_reader(tmp_path, cores=4, open_cost_bytes=0, columns=["time"])
+               .partitions()) == 4
     # at most `cores` kept blocks: left as they are
-    reader = _store_reader(tmp_path, cores=4)
+    reader = _store_reader(tmp_path, cores=4, open_cost_bytes=0)
     reader.pushFilters([GreaterThanOrEqual(("time",), np.datetime64("2001-01-03T00", "us").item())])
     kept = reader.partitions()
     assert [type(p) for p in kept] == [GridPartition] * 3
@@ -232,7 +242,7 @@ def test_packed_task_opens_the_store_once_without_coordinates(tmp_path, monkeypa
     from xarray_sql_spark import zarr_store
     from xarray_sql_spark.dataset import Dataset as DS
 
-    packed = _store_reader(tmp_path, cores=2)
+    packed = _store_reader(tmp_path, cores=2, open_cost_bytes=0)
     plain = _store_reader(tmp_path)
     want = [b for p in plain.partitions() for b in plain.read(p)]
     parts = packed.partitions()
@@ -256,6 +266,29 @@ def test_packed_task_opens_the_store_once_without_coordinates(tmp_path, monkeypa
     assert [b.serialize().to_pybytes() for b in got] == [
         b.serialize().to_pybytes() for b in want
     ]
+
+
+def test_default_open_cost_packs_a_small_filtered_read_into_one_task(tmp_path):
+    """Under Spark's default open cost (4 MiB) a read of a few kept cells
+    spread over five blocks is one task, and it emits only those cells;
+    an unfiltered read of the whole small store is one task too."""
+    from pyspark.sql.datasource import GreaterThanOrEqual, LessThan
+
+    from xarray_sql_spark.sources.grid_source import PackedPartition
+
+    assert len(_store_reader(tmp_path, cores=4).partitions()) == 1
+    reader = _store_reader(tmp_path, cores=4)
+    t = np.datetime64("2001-01-01T00", "us") + np.timedelta64(20, "h")
+    unhandled = list(reader.pushFilters([
+        GreaterThanOrEqual(("time",), t.item()),
+        LessThan(("time",), (t + np.timedelta64(30, "h")).item()),
+    ]))
+    assert unhandled == []
+    parts = reader.partitions()
+    assert len(parts) == 1 and isinstance(parts[0], PackedPartition)
+    assert [b.index for b in parts[0].blocks] == [2, 3, 4, 5, 6]
+    rows = sum(b.num_rows for b in reader.read(parts[0]))
+    assert rows == 30 * 4 * 3
 
 
 def test_reader_pivots_only_requested_columns(tmp_path):

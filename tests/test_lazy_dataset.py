@@ -221,17 +221,15 @@ def test_lazy_close_unpersists(xs, spark):
     assert n_cached() <= base
 
 
-def test_eager_aggregation_single_scan(xs):
+def test_eager_aggregation_single_scan(xs, tmp_path):
     """The eager reverse pivot materializes an aggregation ("barrier"
     query) with exactly ONE source scan (reference tests/test_ds.py:142-177):
     coords + every data var come from the same executed result, never from
     per-var or discovery re-queries."""
     import glob
     import json
-    import os
-    import tempfile
 
-    d = tempfile.mkdtemp(prefix="readlog_")
+    d = str(tmp_path)
     xs.from_dataset(
         "barrier_t", fixture_ds(), chunks={"time": 4}, read_log_dir=d
     )

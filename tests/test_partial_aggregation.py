@@ -422,6 +422,48 @@ def test_every_scan_reads_the_one_registered_payload(spark, read_log):
     )
 
 
+def test_repeated_lookup_join_writes_its_aggregate_once(spark, read_log):
+    """Aggregate files are named by their bytes: the same lookup join run
+    three times leaves exactly one aggregate file with its small side's
+    values, and the answers agree."""
+    import pickle
+
+    xs = XarraySession(spark)
+    xs.from_dataset("pa_rep", grid(), chunks={"time": 24}, read_log_dir=read_log.dir)
+    q = ANOMALY.format(t="pa_rep", where="")
+    first = _lookup_reads(xs, read_log, q, 3)
+    files = sorted(os.listdir(xs._tmpdir))
+    for _ in range(2):
+        assert _same(_lookup_reads(xs, read_log, q, 3), first)
+    assert sorted(os.listdir(xs._tmpdir)) == files
+
+    def load(name):
+        with open(os.path.join(xs._tmpdir, name), "rb") as f:
+            return pickle.load(f)
+
+    assert len([n for n in files if n.startswith("aggregate_") and load(n)["lookup"]]) == 1
+
+
+def test_failed_aggregate_write_leaves_no_named_file(spark, monkeypatch):
+    """An aggregate file appears under its content name only once it is
+    complete: a write that fails leaves nothing a later equal aggregate
+    would reuse."""
+    import pickle
+
+    xs = XarraySession(spark)
+
+    def full_disk(*_args):
+        raise OSError(28, "No space left on device")
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "replace", full_disk)
+        with pytest.raises(OSError):
+            xs._aggregate_file({"masks": {}})
+    assert not [n for n in os.listdir(xs._tmpdir) if n.startswith("aggregate_")]
+    with open(xs._aggregate_file({"masks": {}}), "rb") as f:
+        assert pickle.load(f) == {"masks": {}}
+
+
 def test_missing_keys_drop_cells(xs, read_log):
     """A small side filtered to hours 0-5 holds a quarter of the keys: the
     other cells have no match and are not rows, so COUNT(*) skips them."""
@@ -525,11 +567,22 @@ def test_datetime_fields_match_calendar_before_and_after_epoch():
 
 
 # --- block packing -------------------------------------------------------------
-def test_nine_blocks_pack_into_one_task_per_core(xs, spark, read_log, tmp_path):
-    """9 store blocks run as min(9, cores) tasks, and each block still
-    writes its own read record with its own block index."""
+def test_nine_blocks_pack_into_one_task_per_core(
+    xs, spark, read_log, tmp_path, monkeypatch
+):
+    """9 store blocks run as min(9, cores) tasks when opening a block costs
+    nothing, and each block still writes its own read record with its own
+    block index."""
+    from xarray_sql_spark import xr_session
+
     ds = grid(nt=72)
     path = write_zarr(ds, str(tmp_path / "p.zarr"), chunks={"time": 8})
+    # the reader plans in a Python worker: the zero open cost rides in the
+    # registered payload
+    make_payload = xr_session.make_payload
+    monkeypatch.setattr(
+        xr_session, "make_payload", lambda **kw: {**make_payload(**kw), "open_cost_bytes": 0}
+    )
     xs.from_dataset(
         "pk_grid", Dataset.open_store(path), chunks={"time": 8}, store=path,
         read_log_dir=read_log.dir,

@@ -184,15 +184,19 @@ def _prune_cases(draw):
     return arr, chunk, op, value
 
 
-def _grid_reader(coords: dict, chunks: dict, binary_collation: bool = True):
+def _grid_reader(coords: dict, chunks: dict, binary_collation: bool = True, **packing):
+    """A reader over an in-memory grid whose variable ``v`` numbers the
+    cells in C order; ``packing`` sets the payload's packing inputs."""
     from xarray_sql_spark.dataset import Dataset, Variable
     from xarray_sql_spark.sources.grid_source import GridReader, make_payload, spark_schema
 
     dims = tuple(coords)
     shape = tuple(len(c) for c in coords.values())
-    ds = Dataset({"v": Variable(dims, np.zeros(shape, dtype=np.float32))}, coords)
+    cells = np.arange(np.prod(shape), dtype=np.float32).reshape(shape)
+    ds = Dataset({"v": Variable(dims, cells)}, coords)
     payload = make_payload(dataset=ds, chunks=chunks)
     payload["binary_collation"] = binary_collation
+    payload.update(packing)
     return GridReader(payload, spark_schema(payload["arrow_schema"]))
 
 
@@ -201,10 +205,23 @@ def _kept_blocks(reader, filters) -> list[int]:
     return [p.index for p in reader.partitions() if p.index >= 0]
 
 
+def _passes(x, op, value) -> bool:
+    """Python's answer to ``x <op> value`` (aware literals compare against
+    the coordinate read as UTC wall clock)."""
+    probe = value[0] if op == "in" else value
+    if isinstance(x, _dt.datetime) and probe.tzinfo:
+        x = x.replace(tzinfo=_UTC)
+    if op == "in":
+        return x in value
+    return {
+        "=": x == value, ">": x > value, ">=": x >= value, "<": x < value, "<=": x <= value,
+    }[op]
+
+
 @settings(max_examples=300, deadline=None)
 @given(_prune_cases())
 def test_block_pruning_is_sound(case):
-    """The pruning contract (reference 'Inexact' filters), driven through
+    """The block-pruning half of the pushdown contract, driven through
     GridReader.pushFilters + partitions(): dropping a block is only legal
     when NO row in it can match, for every dtype the coordinate masks
     support. The masks are exact, so a block without a match is dropped
@@ -224,30 +241,69 @@ def test_block_pruning_is_sound(case):
         "in": lambda: In(("d",), tuple(value)),
     }
     kept = _kept_blocks(_grid_reader({"d": arr}, {"d": chunk}), [mk[op]()])
-
-    def row(x):
-        if isinstance(x, _dt.datetime) and (value[0] if op == "in" else value).tzinfo:
-            return x.replace(tzinfo=_UTC)
-        return x
-
-    matches = []
-    for i, lo in enumerate(range(0, len(arr), chunk)):
-        seg = [row(x) for x in arr[lo:lo + chunk].tolist()]
-        if op == "=":
-            truly = any(x == value for x in seg)
-        elif op == ">":
-            truly = any(x > value for x in seg)
-        elif op == ">=":
-            truly = any(x >= value for x in seg)
-        elif op == "<":
-            truly = any(x < value for x in seg)
-        elif op == "<=":
-            truly = any(x <= value for x in seg)
-        else:
-            truly = any(x in value for x in seg)
-        if truly:
-            matches.append(i)
+    matches = [
+        i for i, lo in enumerate(range(0, len(arr), chunk))
+        if any(_passes(x, op, value) for x in arr[lo:lo + chunk].tolist())
+    ]
     assert kept == matches, (op, value, arr, chunk)
+
+
+@st.composite
+def _pushdown_cases(draw):
+    arr, chunk, op, value = draw(_prune_cases())
+    narrow = draw(st.booleans())  # 32-bit coordinates
+    if narrow and arr.dtype.kind in "if":
+        arr = arr.astype(np.int32 if arr.dtype.kind == "i" else np.float32)
+    # coordinates or a session the masks cannot mirror exactly
+    nan = arr.dtype.kind == "f" and draw(st.booleans())
+    if nan:
+        arr = arr.copy()
+        arr[draw(st.integers(0, len(arr) - 1))] = np.nan
+    binary = arr.dtype.kind != "U" or draw(st.booleans())
+    m = draw(st.integers(1, 5))  # a second, always mirrored dim
+    e_chunk = draw(st.integers(1, m))
+    e_max = draw(st.integers(-1, m))
+    return arr, chunk, op, value, nan or not binary, binary, m, e_chunk, e_max
+
+
+@settings(max_examples=300, deadline=None)
+@given(_pushdown_cases())
+def test_pushed_filters_select_exactly_their_cells(case):
+    """The exact pushdown contract, for every coordinate dtype: ``read()``
+    emits exactly the cells that pass the filters ``pushFilters`` answers,
+    and returns exactly the ones it cannot mirror (a data variable, NaN
+    coordinates, a string under a non-binary collation) for Catalyst to
+    re-apply. Packed or not, every partition's rows are those cells."""
+    from pyspark.sql.datasource import (
+        EqualTo, GreaterThan, GreaterThanOrEqual, In, LessThan,
+        LessThanOrEqual,
+    )
+
+    arr, chunk, op, value, unmirrored, binary, m, e_chunk, e_max = case
+    cls = {"=": EqualTo, ">": GreaterThan, ">=": GreaterThanOrEqual, "<": LessThan,
+           "<=": LessThanOrEqual, "in": In}[op]
+    on_d = cls(("d",), tuple(value) if op == "in" else value)
+    on_e = LessThanOrEqual(("e",), e_max)
+    on_v = GreaterThan(("v",), 1.5)
+    reader = _grid_reader(
+        {"d": arr, "e": np.arange(m, dtype=np.int64)}, {"d": chunk, "e": e_chunk}, binary,
+        cores=2, open_cost_bytes=0,
+    )
+
+    unhandled = list(reader.pushFilters([on_d, on_v, on_e]))
+    assert unhandled == ([on_d, on_v] if unmirrored else [on_v])
+    want = sorted(
+        i * m + j
+        for i, x in enumerate(arr.tolist()) for j in range(m)
+        if (unmirrored or _passes(x, op, value)) and j <= e_max
+    )
+    got = sorted(
+        int(v)
+        for p in reader.partitions()
+        for b in reader.read(p)
+        for v in b.column(b.schema.get_field_index("v")).to_numpy()
+    )
+    assert got == want
 
 
 def test_string_pruning_disabled_under_nonbinary_collation():

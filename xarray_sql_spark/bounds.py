@@ -1,22 +1,25 @@
-"""Dim-predicate pruning: one exact coordinate-mask evaluator.
+"""Dim-predicate pushdown: one exact coordinate-mask evaluator.
 
-Every grid scan prunes chunk blocks the same way. Each filter conjunct on
-a dim (or on a datetime field of a datetime dim) is evaluated against the
-dim's 1-D coordinate array with exactly Spark's comparison semantics
-(:func:`coord_mask`); :func:`dim_masks` ANDs the conjuncts per dim; a
-block is read only if some cell of it passes every mask
-(``partials.block_has_cells``). Only coordinate arrays are touched, never
-a data variable. The masks are exact, so they prune at least as much as
-the reference's per-chunk min/max test (df.py:414-508, src/lib.rs:206-448):
-a block of a non-monotonic axis whose range spans a value but which holds
-no matching coordinate is dropped too.
+Every grid scan prunes chunk blocks and selects cells the same way. Each
+filter conjunct on a dim (or on a datetime field of a datetime dim) is
+evaluated against the dim's 1-D coordinate array with exactly Spark's
+comparison semantics (:func:`coord_mask`); :func:`dim_masks` ANDs the
+conjuncts per dim. A block is read only if some cell of it passes every
+mask, and only those cells are emitted (the grid reader's
+``_kept_cells``). Only coordinate arrays are touched, never a data
+variable. The masks are exact, so they prune at least as much as the
+reference's per-chunk min/max test (df.py:414-508, src/lib.rs:206-448): a
+block of a non-monotonic axis whose range spans a value but which holds no
+matching coordinate is dropped too.
 
-A conjunct the evaluator cannot mirror exactly (a type mismatch, NaN or
-NaT coordinates, a string predicate under a non-binary session collation,
-a name that is no coordinate) narrows nothing. Row scans keep the
-reference's "Inexact" contract (src/lib.rs:548-565): every filter goes
-back to Catalyst and is re-applied row by row. The session's aggregate
-shortcuts use the masks only when every conjunct was mirrored.
+A conjunct the evaluator mirrors is Exact: the reader answers it and
+Catalyst drops it from the plan. A conjunct it cannot mirror exactly (a
+type mismatch, NaN or NaT coordinates, a string predicate under a
+non-binary session collation, a name that is no coordinate) narrows
+nothing and is Inexact (the reference's contract for every filter,
+src/lib.rs:548-565): it goes back to Catalyst and is re-applied row by
+row. The session's aggregate shortcuts use the masks only when every
+conjunct was mirrored.
 
 Per-block min/max bounds (:func:`dim_bounds`) only feed ``scan_stats``.
 """
@@ -128,10 +131,10 @@ def coord_mask(coords: np.ndarray, op: str, lits) -> np.ndarray | None:
 
 def dim_masks(
     coords: Mapping[str, np.ndarray], preds, binary_collation: bool = True
-) -> tuple[dict[str, np.ndarray], bool]:
-    """``(masks, exact)``: per-dim boolean masks ANDing every conjunct of
-    ``preds`` that can be mirrored exactly (no such conjunct on a dim: no
-    mask), and whether all of them could.
+) -> tuple[dict[str, np.ndarray], list[bool]]:
+    """``(masks, mirrored)``: per-dim boolean masks ANDing every conjunct
+    of ``preds`` that can be mirrored exactly (no such conjunct on a dim:
+    no mask), and whether each conjunct was, in order.
 
     A conjunct is ``((kind, dim), op, ((value, type), ...))``: ``kind`` is
     ``"col"`` (the coordinate itself) or a datetime field of a datetime
@@ -142,14 +145,13 @@ def dim_masks(
     strings by code point, a collation-aware session default (e.g.
     UTF8_LCASE) does not."""
     masks: dict[str, np.ndarray] = {}
-    exact = True
+    mirrored = []
     for (kind, dim), op, lits in preds:
         m = _conjunct_mask(coords.get(dim), kind, op, lits, binary_collation)
-        if m is None:
-            exact = False
-        else:
+        mirrored.append(m is not None)
+        if m is not None:
             masks[dim] = m & masks[dim] if dim in masks else m
-    return masks, exact
+    return masks, mirrored
 
 
 def _conjunct_mask(c, kind: str, op: str, lits, binary_collation: bool) -> np.ndarray | None:

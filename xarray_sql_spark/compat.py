@@ -41,8 +41,10 @@ def read_xarray_table(
 
     Nothing is read at registration (reference reader.py:202-208 contract —
     pinned by tests/test_grid_engine.py::test_zero_reads_at_registration_and_planning);
-    dim-column predicates prune chunk blocks before any read, and the kept
-    blocks are packed into about one task per core. Every query over the
+    dim-column predicates prune chunk blocks before any read and select
+    the cells the reader emits, and the kept blocks are packed by the bytes
+    of their kept cells with Spark's split rule (a full scan runs as about
+    one task per core, a small slice as one). Every query over the
     returned DataFrame reads every variable: projection pushdown runs only
     inside ``XarraySession.sql``. The DataFrame is re-queryable; every
     query opens a fresh stream over the source.

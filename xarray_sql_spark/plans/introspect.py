@@ -16,11 +16,43 @@ small side (:class:`LookupSpec`).
 
 from __future__ import annotations
 
+import weakref
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 
 PURE_SCAN_NODES = {"Project", "Sort", "SubqueryAlias", "DataSourceV2ScanRelation"}
+
+# DataFrame -> its optimized plan with every filter in it (_filtered_plan)
+_FILTERED_PLANS: "weakref.WeakKeyDictionary[DataFrame, object]" = weakref.WeakKeyDictionary()
+_PUSHDOWN = "spark.sql.python.filterPushdown.enabled"
+
+
+def _filtered_plan(df: DataFrame):
+    """``df``'s optimized plan with every filter still in it.
+
+    The grid reader answers the dim filters it mirrors exactly, so the
+    plan Spark executes has no Filter node for them. The walks here must
+    see them (a filtered scan is no pure scan; a partial aggregate needs
+    its WHERE), so they read a plan optimized with Python data source
+    filter pushdown off for that one call, once per DataFrame. That also
+    spares them the pushdown's planning worker call on a plan the
+    aggregate shortcuts throw away; ``df`` itself still plans with
+    pushdown."""
+    plan = _FILTERED_PLANS.get(df)
+    if plan is None:
+        spark = df.sparkSession
+        old = spark.conf.get(_PUSHDOWN)
+        spark.conf.set(_PUSHDOWN, "false")
+        try:
+            qe = df._jdf.queryExecution()
+            plan = spark._jsparkSession.sessionState().optimizer().execute(
+                qe.withCachedData().clone()
+            )
+        finally:
+            spark.conf.set(_PUSHDOWN, old)
+        _FILTERED_PLANS[df] = plan
+    return plan
 
 
 def _walk(plan):
@@ -57,7 +89,7 @@ def pure_scan_passthrough(df: DataFrame) -> tuple[str, set[str]] | None:
     all preserve exprIds for bare attributes, and every alias (even a pure
     rename) mints a new one, which is the conservative side."""
     try:
-        plan = df._jdf.queryExecution().optimizedPlan()
+        plan = _filtered_plan(df)
         scans = []
         for n in _walk(plan):
             cls = n.getClass().getSimpleName()
@@ -89,7 +121,7 @@ def referenced_scan_columns(df: DataFrame, payload_keys) -> dict[str, set[str]]:
     """Map payload key -> columns of that grid scan actually referenced by
     the optimized plan (exprId-precise, so duplicate column names across
     tables are safe). Drives projection pushdown to storage (A3)."""
-    plan = df._jdf.queryExecution().optimizedPlan()
+    plan = _filtered_plan(df)
     nodes = list(_walk(plan))
     refs: set[int] = set()
     for n in nodes:
@@ -418,8 +450,7 @@ def aggregate_spec(df: DataFrame, payload_keys) -> AggregateSpec | None:
     aliased expression in a subquery) does not resolve to it.
     """
     try:
-        plan = df._jdf.queryExecution().optimizedPlan()
-        return _aggregate_spec(plan, payload_keys, join_ok=True)
+        return _aggregate_spec(_filtered_plan(df), payload_keys, join_ok=True)
     except Exception:
         return None
 

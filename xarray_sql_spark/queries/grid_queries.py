@@ -103,9 +103,11 @@ def gq01_grid_climatology(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def gq02_grid_pruned_slice(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A filtered slice through the grid scan: the time predicate prunes 9
-    of 10 chunk partitions inside ``partitions()`` (pushFilters bounds
-    check) before any read, and Catalyst re-applies the row filters above
-    the scan (inexact pushdown, reference src/lib.rs:548-565 semantics)."""
+    of 10 chunk partitions inside ``partitions()`` (pushFilters coordinate
+    masks) before any read, and the reader emits only the cells that pass
+    the time and y predicates. Both are exact, so Catalyst keeps no Filter
+    for them (the reference re-applies its Inexact filters row by row,
+    src/lib.rs:548-565)."""
     xs = _register(spark, "gq_grid2")
     return (
         xs.sql(
@@ -779,16 +781,15 @@ def gq14_zarr_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     round-tripped result hash-matches an oracle that never left SQL. This
     is the query-shaped twin of the sink's pytest coverage — driver-value
     evidence that the write path preserves every cell."""
-    import tempfile
+    import os
 
     xs = _register(spark, "gq_grid14")
     res = xs.sql(
         "SELECT y, x, AVG(v) AS vmean FROM gq_grid14 GROUP BY y, x"
     )
-    path = tempfile.mkdtemp(prefix="gq14_") + "/roundtrip.zarr"
-    res.to_zarr_distributed(path, dims=["y", "x"], chunks={"y": 4})
-
     xs2 = XarraySession(spark)
+    path = os.path.join(xs2._tmpdir, "roundtrip.zarr")
+    res.to_zarr_distributed(path, dims=["y", "x"], chunks={"y": 4})
     xs2.from_dataset(
         "gq_grid14_back", Dataset.open_store(path), chunks={"y": 4}, store=path
     )
@@ -829,10 +830,10 @@ def gq15_filtered_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     inversion is bit-exact end to end."""
     import json
     import os
-    import tempfile
     import zlib
 
-    path = tempfile.mkdtemp(prefix="gq15_") + "/filt.zarr"
+    xs = XarraySession(spark)
+    path = os.path.join(xs._tmpdir, "filt.zarr")
     os.makedirs(os.path.join(path, "k"))
     os.makedirs(os.path.join(path, "v"))
     with open(os.path.join(path, ".zgroup"), "w") as f:
@@ -874,7 +875,6 @@ def gq15_filtered_store(spark: SparkSession, sf_dir: str) -> DataFrame:
         v_chunks,
     )
 
-    xs = XarraySession(spark)
     xs.from_dataset(
         "gq_grid15", Dataset.open_store(path), chunks={"k": 12}, store=path
     )
@@ -1121,10 +1121,10 @@ def gq18_cf_decoded_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     prunes the first chunk via the DECODED timestamp bounds."""
     import json
     import os
-    import tempfile
     import zlib
 
-    path = tempfile.mkdtemp(prefix="gq18_") + "/cf.zarr"
+    xs = XarraySession(spark)
+    path = os.path.join(xs._tmpdir, "cf.zarr")
     for name in ("time", "station", "t2m"):
         os.makedirs(os.path.join(path, name))
     with open(os.path.join(path, ".zgroup"), "w") as f:
@@ -1186,7 +1186,6 @@ def gq18_cf_decoded_store(spark: SparkSession, sf_dir: str) -> DataFrame:
         with open(os.path.join(path, "rh", f"{ci}.0"), "wb") as f:
             f.write(zlib.compress(rh_raw[ci * 12 : (ci + 1) * 12].tobytes(), 1))
 
-    xs = XarraySession(spark)
     xs.from_dataset(
         "gq_grid18", Dataset.open_store(path), chunks={"time": 12}, store=path
     )
@@ -1230,7 +1229,7 @@ def gq17_blosclz_bitshuffle_store(spark: SparkSession, sf_dir: str) -> DataFrame
     decode chain (blosclz streams -> bit-unshuffle -> typed cells) is
     bit-exact. t >= 8 prunes chunk 0 via coordinate bounds, same as gq15.
     Spec-vector goldens for both codecs live in tests/test_zarr_codecs.py."""
-    import tempfile
+    import os
 
     from xarray_sql_spark.zarr_store import write_zarr
 
@@ -1238,15 +1237,14 @@ def gq17_blosclz_bitshuffle_store(spark: SparkSession, sf_dir: str) -> DataFrame
     y = np.arange(40, dtype=np.int64)
     v = t[:, None] * 0.5 + y[None, :] * 0.25
     ds = Dataset({"v": Variable(("t", "y"), v)}, {"t": t, "y": y})
-    path = tempfile.mkdtemp(prefix="gq17_") + "/blz.zarr"
+    xs = XarraySession(spark)
+    path = os.path.join(xs._tmpdir, "blz.zarr")
     write_zarr(
         ds,
         path,
         chunks={"t": 8},
         compressor={"id": "blosc", "cname": "blosclz", "clevel": 5, "shuffle": 2},
     )
-
-    xs = XarraySession(spark)
     xs.from_dataset(
         "gq_grid17", Dataset.open_store(path), chunks={"t": 8}, store=path
     )
@@ -1283,10 +1281,10 @@ def gq23_longtail_codec_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json
     import lzma
     import os
-    import tempfile
     import zlib
 
-    path = tempfile.mkdtemp(prefix="gq23_") + "/lt.zarr"
+    xs = XarraySession(spark)
+    path = os.path.join(xs._tmpdir, "lt.zarr")
     for name in ("x", "a", "b", "c", "flag"):
         os.makedirs(os.path.join(path, name))
     with open(os.path.join(path, ".zgroup"), "w") as f:
@@ -1339,7 +1337,6 @@ def gq23_longtail_codec_store(spark: SparkSession, sf_dir: str) -> DataFrame:
         with open(os.path.join(path, "flag", str(ci)), "wb") as f:
             f.write(bytes([0]) + np.packbits(block).tobytes())
 
-    xs = XarraySession(spark)
     xs.from_dataset(
         "gq_grid23", Dataset.open_store(path), chunks={"x": 8}, store=path
     )
@@ -1379,7 +1376,7 @@ def gq24_region_write_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     the overwritten chunks carry the transformed values bit-for-bit AND
     the untouched chunks survived byte-identical. Values are exact binary
     fractions throughout, so no rounding hides a partial failure."""
-    import tempfile
+    import os
 
     from xarray_sql_spark.zarr_store import write_zarr
 
@@ -1387,10 +1384,9 @@ def gq24_region_write_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     y = np.arange(6, dtype=np.int64)
     v = t[:, None] * 0.5 + y[None, :] * 0.25
     ds = Dataset({"v": Variable(("t", "y"), v)}, {"t": t, "y": y})
-    path = tempfile.mkdtemp(prefix="gq24_") + "/region.zarr"
-    write_zarr(ds, path, chunks={"t": 8})
-
     xs = XarraySession(spark)
+    path = os.path.join(xs._tmpdir, "region.zarr")
+    write_zarr(ds, path, chunks={"t": 8})
     xs.from_dataset("gq_grid24", Dataset.open_store(path), chunks={"t": 8}, store=path)
     patch = xs.sql(
         "SELECT t, y, 100.0 - v AS v FROM gq_grid24 WHERE t >= 8 AND t < 24"

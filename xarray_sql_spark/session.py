@@ -131,6 +131,17 @@ _MAX_PARTITION_BYTES = 128 * 1024 * 1024
 _OPEN_COST_BYTES = 4 * 1024 * 1024
 
 
+def max_split_bytes(
+    total: int,
+    cores: int,
+    max_partition_bytes: int = _MAX_PARTITION_BYTES,
+    open_cost: int = _OPEN_COST_BYTES,
+) -> int:
+    """The bytes one scan task targets under Spark's maxSplitBytes rule
+    (FilePartition): min(maxPartitionBytes, max(openCost, total / cores))."""
+    return min(max_partition_bytes, max(open_cost, total // max(cores, 1)))
+
+
 def _scan_tasks_available(path: str, cores: int = 1) -> int:
     """Estimate the scan tasks Spark's FilePartition packing will create,
     mirroring its maxSplitBytes rule: splits target
@@ -151,10 +162,7 @@ def _scan_tasks_available(path: str, cores: int = 1) -> int:
             total_effective = sum(
                 os.path.getsize(f) + _OPEN_COST_BYTES for f in parts
             )
-            max_split = min(
-                _MAX_PARTITION_BYTES,
-                max(_OPEN_COST_BYTES, total_effective // max(cores, 1)),
-            )
+            max_split = max_split_bytes(total_effective, cores)
             tasks = 0
             for f in parts:
                 rg = pq.ParquetFile(f).num_row_groups

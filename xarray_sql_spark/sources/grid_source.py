@@ -4,26 +4,35 @@ DataFusion TableProvider (reference reader.py:192-337 + src/lib.rs:919-1267).
 
 Design mapping (SURVEY.md §2A):
 - A1 scan: the chunk-grid blocks that survive pruning are packed into
-  contiguous, balanced InputPartitions by Spark's own FilePartition rule,
-  ``min(kept, max(cores, ceil(kept bytes / maxPartitionBytes)))`` (the
-  session writes ``cores`` and ``max_partition_bytes`` into the payload; a
-  payload without them keeps one block per partition). ``read()`` yields
-  Arrow RecordBatches block by block (Arrow path: no row-by-row Python
+  contiguous, balanced InputPartitions by Spark's own FilePartition rule
+  over the bytes of the cells they keep: ``n = min(kept blocks,
+  ceil(kept / min(maxPartitionBytes, max(openCostInBytes, kept //
+  cores))))`` (``session.max_split_bytes``; the session writes ``cores``
+  and ``max_partition_bytes`` into the payload, the open cost is Spark's
+  default 4 MiB; a payload without a core count keeps one block per
+  partition). A scan over a few kept cells runs as one task; a full scan
+  as about one per core. ``read()`` yields Arrow
+  RecordBatches block by block (Arrow path: no row-by-row Python
   serialization), opening a store once per partition and reading only the
-  data-variable blocks: each partition carries its own block's coordinates.
+  data-variable blocks: each partition carries its own kept cells'
+  coordinates.
 - Partial aggregation: a read with an ``aggregate`` option (a pickled
   aggregate dict written by ``XarraySession`` for a GROUP BY it can
   answer, ``sources/partials.py``) turns each block into one row per group
   it holds — keys, float64 sums of expressions, non-null counts, min/max —
-  and Catalyst merges the partials; blocks whose cells all fail the
-  filter's coordinate masks are never read. Under a dense lookup join the
-  aggregate also carries the small side's values, gathered per cell.
-- A2 pruning: ``pushFilters`` turns Catalyst's convertible predicates on
+  and Catalyst merges the partials; only the cells that pass the filter's
+  coordinate masks are reduced, and blocks without one are never read.
+  Under a dense lookup join the aggregate also carries the small side's
+  values, gathered per cell.
+- A2 pushdown: ``pushFilters`` turns Catalyst's convertible predicates on
   dims into exact coordinate masks (``bounds.dim_masks``, the evaluator the
-  partial-aggregate scans use too) and ``partitions()`` keeps the blocks
-  holding a cell that passes them; it returns ALL filters unhandled so
-  Spark re-applies them row-level — the reference's Inexact contract
-  (src/lib.rs:548-565). Requires spark.sql.python.filterPushdown.enabled.
+  partial-aggregate scans use too); ``partitions()`` keeps the blocks
+  holding a cell that passes them and ``read()`` emits only those cells.
+  The filters the masks mirror are Exact: Catalyst drops them from the
+  plan. Only the rest (data variables, NaN coordinates, type mismatches,
+  ...) go back unhandled and are re-applied row-level — the reference's
+  Inexact contract (src/lib.rs:548-565). Requires
+  spark.sql.python.filterPushdown.enabled.
 - A3 column pruning: every scan of a registered table reads its one
   payload through the schema it needs (the reference's
   ``factory(projection_names)``, src/lib.rs:597-652); ``read()``
@@ -38,10 +47,10 @@ Design mapping (SURVEY.md §2A):
 - Task payload: pyspark pickles the data source and reader into every
   task. Both pickle without planning state, grid data or whole-dim arrays
   (coordinates, filter masks, lookup offsets); a partition carries only
-  its own block's share of them, and an in-memory registration's
-  partition its own block of data (a numpy view at planning; the pickle
-  copies just the block), so a task's payload is its block plus O(1) —
-  plus, under a lookup join, the small side's dense values.
+  its own kept cells' share of them, and an in-memory registration's
+  partition its own kept cells of data (a numpy view or copy at planning;
+  the pickle copies just those cells), so a task's payload is its cells
+  plus O(1) — plus, under a lookup join, the small side's dense values.
   ``zipguard`` removes the other fixed per-call cost.
 
 Observability: pass ``read_log_dir`` to record one JSON file per block
@@ -55,7 +64,6 @@ from __future__ import annotations
 
 import datetime as _dt
 import json
-import math
 import os
 import pickle
 import uuid
@@ -84,6 +92,7 @@ from xarray_sql_spark import chunks as chunklib
 from xarray_sql_spark import pivot
 from xarray_sql_spark.bounds import dim_masks
 from xarray_sql_spark.dataset import Dataset
+from xarray_sql_spark.session import _MAX_PARTITION_BYTES, _OPEN_COST_BYTES, max_split_bytes
 from xarray_sql_spark.sources import partials, zipguard
 
 zipguard.install()
@@ -98,18 +107,21 @@ class GridPartition(InputPartition):
         block: dict[str, tuple[int, int]],
         arrays: dict | None = None,
         coords: dict | None = None,
-        axes: dict | None = None,
+        cells: dict | None = None,
+        offsets: dict | None = None,
     ):
         self.index = index
         self.block = block  # dim -> (start, stop)
-        # In-memory registrations: var -> this block's data (a numpy view,
-        # or a lazy variable read inside the task). None: read the store.
+        # In-memory registrations: var -> this block's kept cells (a numpy
+        # view or copy), or a lazy variable read inside the task. None:
+        # read the store.
         self.arrays = arrays
-        # dim -> this block's coordinates (batch scans; None: the reader
-        # derives them), and a partial scan's per-dim arrays cut to the
-        # block (partials.block_axes)
+        # dim -> the kept cells' coordinates (batch scans), the selection
+        # within the block of each dim the filter narrows (_kept_cells), and
+        # a lookup join's key offsets of the kept cells
         self.coords = coords
-        self.axes = axes
+        self.cells = cells or {}
+        self.offsets = offsets
 
 
 class PackedPartition(InputPartition):
@@ -242,17 +254,23 @@ class GridReader(DataSourceReader):
         # registration layer captures the session default (bounds.py doc)
         self.binary_collation: bool = bool(payload.get("binary_collation", True))
         # Packing inputs (module doc, A1); None keeps one block per task.
+        # The defaults are Spark's.
         self.cores: int | None = payload.get("cores")
-        self.max_partition_bytes: int = payload.get("max_partition_bytes", 128 * 2**20)
+        self.max_partition_bytes: int = payload.get("max_partition_bytes", _MAX_PARTITION_BYTES)
+        self.open_cost_bytes: int = payload.get("open_cost_bytes", _OPEN_COST_BYTES)
         # dim -> mask of the pushed filters (pushFilters)
         self._masks: dict[str, np.ndarray] = {}
         # Driver-side, coordinate-only work: the block grid (A6).
         ds = self.dataset if self.dataset is not None else Dataset.open_store(self.store_path)
         sizes = ds.sizes
-        self._cell_bytes = sum(
-            np.dtype(ds.data_vars[v].dtype).itemsize for v in self.read_vars
-        )
         self.coords = _grid_coords(ds, self.dims)
+        # bytes per cell read: its variables, else (a dims-only scan) its
+        # emitted coordinates, so packing never sizes a scan to 0 bytes
+        self._cell_bytes = (
+            sum(np.dtype(ds.data_vars[v].dtype).itemsize for v in self.read_vars)
+            or sum(self.coords[d].dtype.itemsize for d in self.dims if d in self.read_columns)
+            or 1
+        )
         self._blocks = list(
             chunklib.block_slices({d: sizes[d] for d in self.dims}, payload.get("chunks"))
         )
@@ -260,8 +278,8 @@ class GridReader(DataSourceReader):
     def __getstate__(self):
         # pyspark pickles the reader into the planner's answer and every
         # task: leave out the planning state, the in-memory grid and every
-        # whole-dim array (each partition carries its own block's data,
-        # coordinates and aggregate axes), so the payload is O(1) in the
+        # whole-dim array (each partition carries its own kept cells' data,
+        # coordinates and lookup offsets), so the payload is O(1) in the
         # grid's size.
         planner_only = ("_blocks", "_masks", "_cell_bytes", "coords")
         state = {k: v for k, v in self.__dict__.items() if k not in planner_only}
@@ -272,51 +290,60 @@ class GridReader(DataSourceReader):
 
     # -- pruning (A2) ------------------------------------------------------
     def pushFilters(self, filters: list[Filter]) -> Iterator[Filter]:
-        preds = [p for p in map(_filter_pred, filters) if p is not None]
-        self._masks = dim_masks(self.coords, preds, self.binary_collation)[0]
-        # Return everything: Catalyst keeps a row-level Filter above the
-        # scan (the reference's Inexact semantics, src/lib.rs:548-565).
-        return iter(filters)
+        preds = [_filter_pred(f) for f in filters]
+        self._masks, mirrored = dim_masks(
+            self.coords, [p for p in preds if p is not None], self.binary_collation
+        )
+        # The mirrored conjuncts are answered here (read() emits only the
+        # cells that pass them); Catalyst re-applies the rest row-level.
+        mirrored = iter(mirrored)
+        return iter([f for f, p in zip(filters, preds) if p is None or not next(mirrored)])
 
     def partitions(self) -> list[GridPartition] | list[PackedPartition]:
         masks = self.aggregate["masks"] if self.aggregate else self._masks
+        lookup = (self.aggregate or {}).get("lookup")
         parts = []
-        cells = 0
+        kept_cells = 0
         for i, block in enumerate(self._blocks):
-            if partials.block_has_cells(masks, block):
-                parts.append(
-                    GridPartition(
-                        i,
-                        {d: (s.start, s.stop) for d, s in block.items()},
-                        self._inline(block),
-                        {d: self.coords[d][block[d]] for d in self.dims},
-                        partials.block_axes(self.aggregate, block) if self.aggregate else None,
-                    )
+            found = _kept_cells(masks, block)
+            if found is None:
+                continue
+            cells, count = found
+            parts.append(
+                GridPartition(
+                    i,
+                    {d: (s.start, s.stop) for d, s in block.items()},
+                    self._inline(block, cells),
+                    {d: _cut(self.coords[d][block[d]], (d,), cells) for d in self.dims},
+                    cells,
+                    {d: _cut(o[block[d]], (d,), cells) for d, o in lookup["offsets"].items()}
+                    if lookup else None,
                 )
-                cells += chunklib.block_num_rows(block)
+            )
+            kept_cells += count
         if not parts:
             # Spark requires >=1 partition; emit an empty sentinel block.
             return [GridPartition(-1, {d: (0, 0) for d in self.dims})]
         if self.cores is None:
             return parts
-        n = min(
-            len(parts),
-            max(self.cores, math.ceil(cells * self._cell_bytes / self.max_partition_bytes)),
-        )
+        kept = kept_cells * self._cell_bytes  # bytes
+        split = max_split_bytes(kept, self.cores, self.max_partition_bytes, self.open_cost_bytes)
+        n = max(1, min(len(parts), -(-kept // max(split, 1))))
         if n == len(parts):
             return parts
         bounds = np.linspace(0, len(parts), n + 1).round().astype(int)
         return [PackedPartition(j, parts[a:b]) for j, (a, b) in enumerate(zip(bounds, bounds[1:]))]
 
-    def _inline(self, block: dict) -> dict | None:
-        """An in-memory registration's data over ``block``: numpy data as
-        views (pickling copies just the block), lazy variables as they are."""
+    def _inline(self, block: dict, cells: dict) -> dict | None:
+        """An in-memory registration's data over ``block``'s kept ``cells``:
+        numpy data cut at planning (pickling copies just those cells), lazy
+        variables as they are."""
         if self.dataset is None:
             return None
         data_vars = self.dataset.data_vars
         return {
-            n: _var_block(data_vars[n], block) if isinstance(data_vars[n].data, np.ndarray)
-            else data_vars[n]
+            n: _cut(_var_block(data_vars[n], block), self.dims, cells)
+            if isinstance(data_vars[n].data, np.ndarray) else data_vars[n]
             for n in self.read_vars
         }
 
@@ -336,12 +363,14 @@ class GridReader(DataSourceReader):
                     store_vars = Dataset.open_store(self.store_path, load_coords=False).data_vars
                 source = store_vars
             arrays = {
-                n: source[n] if isinstance(source[n], np.ndarray) else _var_block(source[n], block)
+                n: source[n] if isinstance(source[n], np.ndarray)
+                else _cut(_var_block(source[n], block), self.dims, part.cells)
                 for n in self.read_vars
             }
             if self.aggregate:
                 batch = partials.block_partials(
-                    arrays, part.coords, self.dims, self.aggregate, part.axes, self.arrow_schema
+                    arrays, part.coords, self.dims, self.aggregate, part.offsets,
+                    self.arrow_schema,
                 )
                 if batch is not None:
                     yield batch
@@ -416,6 +445,37 @@ def _filter_pred(f: Filter) -> tuple | None:
 def _var_block(var, block: dict) -> np.ndarray:
     """``var``'s data over ``block`` (dim -> slice)."""
     return var.read_block(tuple(block[d] for d in var.dims))
+
+
+def _kept_cells(masks: dict, block: dict) -> tuple[dict, int] | None:
+    """``(cells, count)``: the cells of ``block`` (dim -> slice) that pass
+    the filter ``masks`` (dim -> bool array over the whole dim), as the
+    selection within the block of each dim the masks narrow (a slice when
+    the kept run is contiguous, else an index array) and their number;
+    None when no cell passes. The masks are per dim, so the kept cells
+    are the product of each dim's kept positions."""
+    cells, count = {}, 1
+    for d, s in block.items():
+        size = s.stop - s.start
+        if d not in masks:
+            count *= size
+            continue
+        idx = np.flatnonzero(masks[d][s])
+        if not len(idx):
+            return None
+        count *= len(idx)
+        if len(idx) < size:
+            contiguous = idx[-1] - idx[0] + 1 == len(idx)
+            cells[d] = slice(int(idx[0]), int(idx[-1]) + 1) if contiguous else idx
+    return cells, count
+
+
+def _cut(a: np.ndarray, dims: tuple, cells: dict) -> np.ndarray:
+    """Block data ``a`` (C-ordered on ``dims``) cut to ``cells``."""
+    for axis, d in enumerate(dims):
+        if d in cells:
+            a = a[(slice(None),) * axis + (cells[d],)]
+    return a
 
 
 def _block_batches(

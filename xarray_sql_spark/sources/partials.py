@@ -25,8 +25,9 @@ The aggregate dict:
   key position: the small side holds that key) and ``columns`` ``{i:
   (float64 values, bool nulls)}`` per small-side output ``i``.
 
-The whole-dim arrays are cut per block at planning (:func:`block_axes`),
-so a task carries only its own block's share of them.
+The whole-dim arrays are cut at planning to each block's cells that pass
+the masks (the grid reader's ``_kept_cells``), so a task carries only its
+own share of them and reduces only those cells.
 
 Semantics mirror the joined, pivoted rows exactly: NaN cells are SQL NULL
 (they add nothing to sums, counts, minima or maxima but do count as rows);
@@ -144,16 +145,6 @@ def evaluate(tree, arrays: dict, looked: dict, memo: dict | None = None):
     return out
 
 
-def block_axes(agg: dict, block: dict) -> dict:
-    """The aggregate's whole-dim arrays cut to ``block`` (dim -> slice):
-    the filter masks and the lookup offsets one task needs."""
-    lookup = agg.get("lookup")
-    return {
-        "masks": {d: m[block[d]] for d, m in agg["masks"].items()},
-        "offsets": {d: o[block[d]] for d, o in lookup["offsets"].items()} if lookup else {},
-    }
-
-
 def without_axes(agg: dict) -> dict:
     """``agg`` minus its whole-dim arrays, which partitions carry cut."""
     lookup = agg.get("lookup")
@@ -162,11 +153,6 @@ def without_axes(agg: dict) -> dict:
         "masks": {},
         "lookup": {**lookup, "offsets": {}} if lookup else None,
     }
-
-
-def block_has_cells(masks: dict, block: dict) -> bool:
-    """Whether any cell of ``block`` (dim -> slice) passes the masks."""
-    return all(m[block[d]].any() for d, m in masks.items())
 
 
 def _groups(values: list[np.ndarray]) -> tuple[np.ndarray, list[np.ndarray]]:
@@ -225,28 +211,17 @@ def _lookup(lookup: dict, offsets: dict, dims: tuple, shape: tuple):
 
 def block_partials(
     arrays: dict,
-    block_coords: dict,
+    coords: dict,
     dims: tuple,
     agg: dict,
-    axes: dict,
+    offsets: dict | None,
     schema: pa.Schema,
 ) -> pa.RecordBatch | None:
-    """The partial rows of one block, or None when no cell passes the
-    masks (or, under a lookup, matches a small-side key). ``arrays``: var
-    -> block data C-ordered on ``dims``; ``block_coords``: dim -> the
-    block's coordinates; ``axes``: :func:`block_axes` of the block."""
-    coords = dict(block_coords)
-    arrays = dict(arrays)
-    offsets = dict(axes["offsets"])
-    for axis, d in enumerate(dims):
-        m = axes["masks"].get(d)
-        if m is None or m.all():
-            continue
-        idx = np.flatnonzero(m)
-        coords[d] = coords[d][idx]
-        arrays = {v: np.take(a, idx, axis=axis) for v, a in arrays.items()}
-        if d in offsets:
-            offsets[d] = offsets[d][idx]
+    """The partial rows of one block's cells that pass the masks, or None
+    when there are none (or, under a lookup, none matches a small-side
+    key). ``arrays``: var -> those cells' data C-ordered on ``dims``;
+    ``coords``: dim -> their coordinates; ``offsets``: dim -> their lookup
+    offsets."""
     if any(len(coords[d]) == 0 for d in dims):
         return None
     shape = tuple(len(coords[d]) for d in dims)

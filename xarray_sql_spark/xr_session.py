@@ -30,13 +30,16 @@
   small sides, a key space over ``spark.sql.autoBroadcastJoinThreshold``
   (or -1), LIMIT, other functions, integer variables, data-variable
   filters.
-- Every scan registered here carries the session's core count, so its
-  chunk blocks are packed into about one task per core (grid_source).
+- Every scan registered here carries the session's core count and split
+  size, so its chunk blocks are packed by the bytes of the cells they
+  keep with Spark's own split rule (grid_source): a full scan runs as
+  about one task per core, a small filtered read as one task.
 """
 
 from __future__ import annotations
 
 import atexit
+import hashlib
 import json
 import math
 import os
@@ -252,15 +255,28 @@ class XarraySession:
         payload["max_partition_bytes"] = int(
             self.spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
         )
-        path = self._dump("payload", payload)
+        # a fresh name per table: the path is the table's identity (two
+        # registrations of equal data are two tables)
+        path = os.path.join(self._tmpdir, f"payload_{uuid.uuid4().hex}.pkl")
+        with open(path, "wb") as f:
+            pickle.dump(payload, f)
         df = self._read(path, spark_schema(payload["arrow_schema"]))
         df.createOrReplaceTempView(view)
         self._payload_views[path] = _Table(view, kwargs, df, name, payload["arrow_schema"])
 
-    def _dump(self, kind: str, obj) -> str:
-        path = os.path.join(self._tmpdir, f"{kind}_{uuid.uuid4().hex}.pkl")
-        with open(path, "wb") as f:
-            pickle.dump(obj, f)
+    def _aggregate_file(self, aggregate: dict) -> str:
+        """``aggregate`` pickled into the session's directory, in a file
+        named by its bytes: equal aggregates (the same lookup join run
+        again) share one file."""
+        data = pickle.dumps(aggregate)
+        path = os.path.join(self._tmpdir, f"aggregate_{hashlib.sha256(data).hexdigest()}.pkl")
+        if not os.path.exists(path):
+            # written under a temporary name and renamed, so the name only
+            # ever holds a complete file
+            fd, tmp = tempfile.mkstemp(dir=self._tmpdir, suffix=".part")
+            with os.fdopen(fd, "wb") as f:
+                f.write(data)
+            os.replace(tmp, path)
         return path
 
     def _read(self, path: str, schema: StructType, aggregate: dict | None = None) -> DataFrame:
@@ -269,7 +285,7 @@ class XarraySession:
         partial-aggregate scan (sources/partials.py)."""
         reader = self.spark.read.format(FORMAT_NAME).option("payload", path).schema(schema)
         if aggregate is not None:
-            reader = reader.option("aggregate", self._dump("aggregate", aggregate))
+            reader = reader.option("aggregate", self._aggregate_file(aggregate))
         return reader.load()
 
     def _forget_views(self, views) -> None:
@@ -437,8 +453,8 @@ class XarraySession:
         """Per-dim boolean masks of the filter conjuncts (no conjunct on a
         dim: no mask), or None if any conjunct can't be mirrored exactly
         (bounds.dim_masks)."""
-        masks, exact = dim_masks(_dim_coords(ds, dims), preds, self._binary_collation())
-        return masks if exact else None
+        masks, mirrored = dim_masks(_dim_coords(ds, dims), preds, self._binary_collation())
+        return masks if all(mirrored) else None
 
     def _metadata_aggregates_df(self, df, spec, ds, dims, masks) -> DataFrame | None:
         """A global MIN/MAX/COUNT over dim columns, from the coordinates."""
